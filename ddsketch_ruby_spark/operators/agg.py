@@ -6,12 +6,15 @@ by batch, so executor memory is O(groups x state), never O(rows). Only the
 needed columns are selected first, so Catalyst prunes the parquet scan down
 to the value/group columns (checked via .explain ReadSchema in tests).
 
-Phase 2 (merge): ``groupBy(group).applyInPandas`` merges the per-partition
-partials. Shuffle volume is ``n_partitions x n_groups x state_size`` — for
-DDSketch at the default bin_limit that is <= ~32 kB per partial
-(reference base_sketch.rb:24-28 rationale) — independent of input row count,
-which is what makes the plan survive a 100x scale-up: the scan scales out,
-the shuffle stays tiny.
+Phase 2 (merge): ``fold_groups``, the library's one per-group fold — a
+single ``groupBy(*group_by).applyInPandas`` stage that folds each group's
+rows into one sketch and emits its state or its result. A global aggregate
+is a key-less ``groupBy()``, which Spark plans as one SinglePartition
+group. Shuffle volume is ``n_partitions x n_groups x state_size`` — for
+DDSketch at the default bin_limit that is <= ~32 kB per partial (reference
+base_sketch.rb:24-28 rationale) — independent of input row count, which is
+what makes the plan survive a 100x scale-up: the scan scales out, the
+shuffle stays tiny.
 
 For very wide fan-in (tens of thousands of input partitions into few
 groups), ``tree_fanin`` inserts an intermediate salted merge round
@@ -30,9 +33,8 @@ from __future__ import annotations
 
 from typing import Iterable, Iterator
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -100,6 +102,39 @@ def _merge_states(spec: SketchSpec, pdf: pd.DataFrame) -> object:
     return merged
 
 
+def _output_fields(spec: SketchSpec, output: str):
+    """``(fields, emit)`` for a fold's ``output``: "state" emits the
+    mergeable state columns, "result" the finalized result columns."""
+    if output == "state":
+        return spec.state_fields(), spec.state_to_row
+    if output == "result":
+        return spec.result_fields(), spec.result
+    raise ValueError("output must be 'result' or 'state'")
+
+
+def fold_groups(
+    df: DataFrame,
+    spec: SketchSpec,
+    group_by: list[str],
+    output: str,
+    to_state=_merge_states,
+) -> DataFrame:
+    """Phase 2: fold each ``group_by`` group of ``df`` into one sketch with
+    ``to_state(spec, pdf)`` and emit one row of the group keys plus the
+    ``output`` columns. An empty ``group_by`` is the global fold: Spark
+    plans a key-less ``groupBy()`` as one SinglePartition group (and an
+    empty input as zero groups, hence zero rows)."""
+    fields, emit = _output_fields(spec, output)
+    schema = T.StructType(_group_fields(df, group_by) + fields)
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        row = {g: pdf[g].iloc[0] for g in group_by}
+        row.update(emit(to_state(spec, pdf)))
+        return pd.DataFrame([row], columns=schema.names)
+
+    return df.groupBy(*group_by).applyInPandas(fold, schema=schema)
+
+
 def sketch_partials(
     df: DataFrame,
     spec: SketchSpec,
@@ -133,61 +168,15 @@ def sketch_agg(
     """
     group_by = list(group_by)
     partials = sketch_partials(df, spec, value_col, group_by, weight_col)
-    state_schema = T.StructType(
-        _group_fields(df, group_by) + spec.state_fields()
-    )
-
     if tree_fanin:
-        salted_schema = T.StructType(
-            [T.StructField("__salt", T.IntegerType())] + list(state_schema.fields)
-        )
-
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            merged = _merge_states(spec, pdf)
-            row = {"__salt": pdf["__salt"].iloc[0]}
-            for g in group_by:
-                row[g] = pdf[g].iloc[0]
-            row.update(spec.state_to_row(merged))
-            return pd.DataFrame([row], columns=salted_schema.names)
-
-        partials = (
-            partials.withColumn(
-                "__salt", (F.spark_partition_id() % F.lit(int(tree_fanin)))
-            )
-            .groupBy("__salt", *group_by)
-            .applyInPandas(merge_salted, schema=salted_schema)
-            .drop("__salt")
-        )
-
-    if output == "state":
-        out_schema = state_schema
-        emit = spec.state_to_row
-    elif output == "result":
-        out_schema = T.StructType(
-            _group_fields(df, group_by) + spec.result_fields()
-        )
-        emit = spec.result
-    else:
-        raise ValueError("output must be 'result' or 'state'")
-
-    def merge_final(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = _merge_states(spec, pdf)
-        row = {g: pdf[g].iloc[0] for g in group_by}
-        row.update(emit(merged))
-        return pd.DataFrame([row], columns=out_schema.names)
-
-    if group_by:
-        return partials.groupBy(*group_by).applyInPandas(
-            merge_final, schema=out_schema
-        )
-    # global aggregate: single group via a constant key
-    return (
-        partials.groupBy(F.lit(1).alias("__g"))
-        .applyInPandas(
-            lambda pdf: merge_final(pdf.drop(columns=["__g"], errors="ignore")),
-            schema=out_schema,
-        )
-    )
+        salt = F.spark_partition_id() % F.lit(int(tree_fanin))
+        partials = fold_groups(
+            partials.withColumn("__salt", salt),
+            spec,
+            ["__salt", *group_by],
+            "state",
+        ).drop("__salt")
+    return fold_groups(partials, spec, group_by, output)
 
 
 def sketch_finalize(
@@ -205,29 +194,6 @@ def sketch_finalize(
     sketch_agg."""
     group_by = list(group_by)
     state_names = [f.name for f in spec.state_fields()]
-    src = df.select(*group_by, *state_names)
-    if output == "state":
-        out_schema = T.StructType(
-            _group_fields(src, group_by) + spec.state_fields()
-        )
-        emit = spec.state_to_row
-    elif output == "result":
-        out_schema = T.StructType(
-            _group_fields(src, group_by) + spec.result_fields()
-        )
-        emit = spec.result
-    else:
-        raise ValueError("output must be 'result' or 'state'")
-
-    def fin(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = _merge_states(spec, pdf)
-        row = {g: pdf[g].iloc[0] for g in group_by}
-        row.update(emit(merged))
-        return pd.DataFrame([row], columns=out_schema.names)
-
-    if group_by:
-        return src.groupBy(*group_by).applyInPandas(fin, schema=out_schema)
-    return src.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        lambda pdf: fin(pdf.drop(columns=["__g"], errors="ignore")),
-        schema=out_schema,
+    return fold_groups(
+        df.select(*group_by, *state_names), spec, group_by, output
     )

@@ -24,8 +24,12 @@ assembling after a full groupBy is legal.
 Numerics: Spark's LOG2 computes ln(v)/ln(2) — an oracle must mirror that
 exact expression (LN(v)/LN(2)) to be bit-compatible; NumPy's log2 (used by
 the kernel/python path) can differ in the last ulp on bucket boundaries.
-Both paths satisfy the alpha accuracy contract; tests compare them at the
-quantile level, not the bin level.
+Tests compare the two paths at the bin level
+(tests/test_spark_ddsketch.py::test_jvm_keys_bit_match_kernel): interpolated
+keys must match the kernel exactly, logarithmic keys within one bucket at
+binade boundaries (no mismatch observed); the hypothesis property
+tests/test_properties.py::test_jvm_key_expr_matches_kernel_property demands
+exact key equality for all three mappings, fractional offsets included.
 
 Interpolated mappings (reference linear_interpolated_key_mapping.rb:35-49,
 cubically_interpolated_key_mapping.rb:10-67) need ``frexp`` — unavailable
@@ -41,16 +45,16 @@ tests/test_spark_ddsketch.py — and a DuckDB oracle can replicate them.
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+from typing import Iterable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..kernel import DDSketch
 from ..sketches.ddsketch_spec import DDSketchSpec
+from .agg import fold_groups
 
 __all__ = ["ddsketch_jvm_agg", "key_column", "histogram_rows", "assemble_histogram"]
 
@@ -175,30 +179,7 @@ def assemble_histogram(
     """Fold histogram_rows output into one sketch row per group. Correct
     over PARTIAL histograms too (duplicate (group, zone, key) rows just
     re-merge — bucket addition is the monoid op)."""
-    group_by = list(group_by)
-    by_name = {f.name: f for f in hist.schema.fields}
-    group_fields = [by_name[g] for g in group_by]
-    if output == "state":
-        out_schema = T.StructType(group_fields + spec.state_fields())
-        emit = spec.state_to_row
-    elif output == "result":
-        out_schema = T.StructType(group_fields + spec.result_fields())
-        emit = spec.result
-    else:
-        raise ValueError("output must be 'result' or 'state'")
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        state = _assemble_state(spec, pdf)
-        row: dict[str, Any] = {g: pdf[g].iloc[0] for g in group_by}
-        row.update(emit(state))
-        return pd.DataFrame([row], columns=out_schema.names)
-
-    if group_by:
-        return hist.groupBy(*group_by).applyInPandas(assemble, schema=out_schema)
-    return hist.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        lambda pdf: assemble(pdf.drop(columns=["__g"], errors="ignore")),
-        schema=out_schema,
-    )
+    return fold_groups(hist, spec, list(group_by), output, _assemble_state)
 
 
 def ddsketch_jvm_agg(

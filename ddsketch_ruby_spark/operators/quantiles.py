@@ -304,9 +304,13 @@ def ddsketch_cdf(
         cnt_cols.append(
             F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).alias(f"__c_{i}")
         )
+    # a key-less groupBy().agg emits one count-0 row on empty input; drop
+    # it so an empty frame yields zero rows, as in the grouped case
     agg = (
-        src.groupBy(*group_by) if group_by else src.groupBy(F.lit(1).alias("__g"))
-    ).agg(F.count("*").alias("__n"), *cnt_cols)
+        src.groupBy(*group_by)
+        .agg(F.count("*").alias("__n"), *cnt_cols)
+        .where(F.col("__n") > 0)
+    )
     n_d = F.col("__n").cast("double")
     pairs = [
         F.struct(

@@ -12,14 +12,13 @@ rolled-up dimensions (the SQL ROLLUP output shape).
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+from typing import Iterable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..sketches.base import SketchSpec
+from .agg import sketch_finalize
 
 __all__ = ["merge_states", "sketch_rollup", "sketch_cube_union"]
 
@@ -31,34 +30,7 @@ def merge_states(
     output: str = "state",
 ) -> DataFrame:
     """Fold sketch-state rows to a coarser grouping (pure merges)."""
-    group_by = list(group_by)
-    state_names = [f.name for f in spec.state_fields()]
-    by_name = {f.name: f for f in states.schema.fields}
-    group_fields = [by_name[g] for g in group_by]
-    if output == "state":
-        out_schema = T.StructType(group_fields + spec.state_fields())
-        emit = spec.state_to_row
-    else:
-        out_schema = T.StructType(group_fields + spec.result_fields())
-        emit = spec.result
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = spec.zero()
-        cols = {n: pdf[n].to_numpy() for n in state_names}
-        for i in range(len(pdf)):
-            merged = spec.merge(
-                merged, spec.row_to_state({n: cols[n][i] for n in state_names})
-            )
-        row: dict[str, Any] = {g: pdf[g].iloc[0] for g in group_by}
-        row.update(emit(merged))
-        return pd.DataFrame([row], columns=out_schema.names)
-
-    if group_by:
-        return states.groupBy(*group_by).applyInPandas(fold, schema=out_schema)
-    return states.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        lambda pdf: fold(pdf.drop(columns=["__g"], errors="ignore")),
-        schema=out_schema,
-    )
+    return sketch_finalize(states, spec, group_by, output)
 
 
 def sketch_rollup(

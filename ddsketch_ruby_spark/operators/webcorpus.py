@@ -271,8 +271,8 @@ def outlinks(
 
     The driver gate ``outlinks_documents`` replays extraction AND
     resolution op-for-op in DuckDB (RE2 vs Java regex) over an
-    adversarially built corpus (data-href traps, single-quoted hrefs,
-    mailto/nameless anchors, entity-escaped query strings).
+    adversarially built corpus (data-href traps, mailto/nameless
+    anchors, entity-escaped query strings).
     """
     from ddsketch_ruby_spark.functions.html import (
         HTML_ENTITIES,

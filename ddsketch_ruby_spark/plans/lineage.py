@@ -23,9 +23,10 @@ import uuid
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ..operators.agg import sketch_agg, sketch_finalize
 from ..sketches.base import SketchSpec
-from ..operators.agg import sketch_agg
 
 __all__ = ["CheckpointedSketchBuild"]
 
@@ -135,8 +136,6 @@ class CheckpointedSketchBuild:
         ``count`` field (present on every spec that tracks cardinality —
         DDSketch/KLL/t-digest); None when the spec's state carries no
         count (the metric is then simply absent from lineage)."""
-        from pyspark.sql import functions as F
-
         state_names = {f.name for f in self.spec.state_fields()}
         if "count" not in state_names:
             return None
@@ -160,43 +159,4 @@ class CheckpointedSketchBuild:
             if not d.endswith(".tmp") and ".tmp-" not in d
         )
         partials = self.spark.read.parquet(*partial_dirs)
-        # fold partial states: reuse the two-phase engine's merge stage by
-        # treating state rows as a degenerate "update" — implemented via
-        # groupBy + applyInPandas directly.
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        spec = self.spec
-        group_by = self.group_by
-        if output == "state":
-            out_fields = spec.state_fields()
-            emit = spec.state_to_row
-        else:
-            out_fields = spec.result_fields()
-            emit = spec.result
-        group_fields = [
-            f for f in partials.schema.fields if f.name in group_by
-        ]
-        out_schema = T.StructType(group_fields + out_fields)
-        state_names = [f.name for f in spec.state_fields()]
-
-        def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            merged = spec.zero()
-            cols = {n: pdf[n].to_numpy() for n in state_names}
-            for i in range(len(pdf)):
-                merged = spec.merge(
-                    merged, spec.row_to_state({n: cols[n][i] for n in state_names})
-                )
-            row = {g: pdf[g].iloc[0] for g in group_by}
-            row.update(emit(merged))
-            return pd.DataFrame([row], columns=out_schema.names)
-
-        if group_by:
-            return partials.groupBy(*group_by).applyInPandas(
-                merge_fn, schema=out_schema
-            )
-        return partials.groupBy(F.lit(1).alias("__g")).applyInPandas(
-            lambda pdf: merge_fn(pdf.drop(columns=["__g"], errors="ignore")),
-            schema=out_schema,
-        )
+        return sketch_finalize(partials, self.spec, self.group_by, output)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.agg import _group_fields, _output_fields
 from ..sketches.base import SketchSpec
 
 __all__ = [
@@ -85,17 +86,9 @@ def sketch_stream_agg(
     group_by = list(group_by)
     if not group_by:
         raise ValueError("stateful streaming aggregation requires group keys")
-    by_name = {f.name: f for f in stream_df.schema.fields}
-    group_fields = [by_name[g] for g in group_by]
     state_schema = T.StructType(spec.state_fields())
-    if emit == "result":
-        out_schema = T.StructType(group_fields + spec.result_fields())
-        emit_fn = spec.result
-    elif emit == "state":
-        out_schema = T.StructType(group_fields + spec.state_fields())
-        emit_fn = spec.state_to_row
-    else:
-        raise ValueError("emit must be 'result' or 'state'")
+    out_fields, emit_fn = _output_fields(spec, emit)
+    out_schema = T.StructType(_group_fields(stream_df, group_by) + out_fields)
     state_names = [f.name for f in spec.state_fields()]
 
     def update(

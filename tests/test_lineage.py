@@ -7,6 +7,7 @@ import os
 
 import pytest
 
+from ddsketch_ruby_spark.operators.agg import sketch_agg
 from ddsketch_ruby_spark.plans.lineage import CheckpointedSketchBuild
 from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
 
@@ -108,6 +109,20 @@ def test_rerun_is_noop(spark, tmp_path, splits):
     b = CheckpointedSketchBuild(spark, spec, d, "value", [])
     assert b.run(splits) == 4
     assert b.run(splits) == 0  # idempotent: nothing recomputed
+
+    # the global (key-less) final fold equals a single-shot global build
+    (got,) = b.result().collect()
+    (ref,) = sketch_agg(spark.read.parquet(*splits), spec, "value").collect()
+    for k in ("count", "min", "max", "q50"):
+        assert got[k] == ref[k], k
+
+
+def test_result_rejects_unknown_output(spark, tmp_path, splits):
+    spec = DDSketchSpec(0.01)
+    b = CheckpointedSketchBuild(spark, spec, str(tmp_path / "ck"), "value", [])
+    b.run(splits[:1])
+    with pytest.raises(ValueError, match="output must be"):
+        b.result(output="states")
 
 
 def test_lineage_rows_have_metrics(spark, tmp_path, splits):

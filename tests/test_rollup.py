@@ -52,6 +52,15 @@ def test_cross_job_gamma_guard(spark, sf_dir):
     assert "different relative accuracy" in str(exc_info.value)
 
 
+def test_merge_states_rejects_unknown_output(spark, sf_dir):
+    import pytest
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    fine = ddsketch_state(docs, "n_chars", ["lang"])
+    with pytest.raises(ValueError, match="output must be"):
+        merge_states(fine, DDSketchSpec(0.01), ["lang"], output="states")
+
+
 def test_cube_union_shape(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     spec = DDSketchSpec(0.01, include_stats=True, quantiles={"q50": 0.5})

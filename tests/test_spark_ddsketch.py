@@ -151,6 +151,30 @@ def test_nulls_and_empty_groups(spark):
     assert rows[None]["count"] == 1.0  # null group key preserved
 
 
+@pytest.mark.parametrize(
+    "build", ["sketch_agg", "ddsketch_jvm_agg", "sketch_finalize", "ddsketch_cdf"]
+)
+def test_global_fold_of_empty_frame_is_empty(spark, build):
+    """A key-less (global) aggregate over an empty frame has no group to
+    fold, so it returns zero rows — not one row of empty-sketch nulls."""
+    from pyspark.sql import types as T
+
+    from ddsketch_ruby_spark.operators.agg import sketch_finalize
+    from ddsketch_ruby_spark.operators.ddsketch_jvm import ddsketch_jvm_agg
+    from ddsketch_ruby_spark.operators.quantiles import ddsketch_cdf
+
+    spec = DDSketchSpec(ALPHA)
+    values = spark.createDataFrame([], "value double")
+    states = spark.createDataFrame([], T.StructType(spec.state_fields()))
+    out = {
+        "sketch_agg": lambda: sketch_agg(values, spec, "value"),
+        "ddsketch_jvm_agg": lambda: ddsketch_jvm_agg(values, spec, "value"),
+        "sketch_finalize": lambda: sketch_finalize(states, spec),
+        "ddsketch_cdf": lambda: ddsketch_cdf(values, "value", [1.0]),
+    }[build]()
+    assert out.collect() == []
+
+
 def test_jvm_plan_quality(spark, events):
     """Plan regression gate for the JVM fast path: filter pushdown reaches
     the scan, column pruning holds, map-side partial aggregation runs
