@@ -3120,8 +3120,7 @@ def _q_ddsketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (docs,) = _tables(spark, sf_dir, "documents")
     states = ddsketch_state(
-        docs.filter(F.col("n_chars") > 0), "n_chars", ["lang", "source"],
-        engine="jvm",
+        docs.filter(F.col("n_chars") > 0), "n_chars", ["lang", "source"]
     )
     spec = DDSketchSpec(
         quantiles={"q50": 0.5, "q99": 0.99},
@@ -4015,9 +4014,7 @@ def _q_ddsketch_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ddsketch_ruby_spark.operators.quantiles import ddsketch_state
 
     (events,) = _tables(spark, sf_dir, "events")
-    state = ddsketch_state(
-        events.filter(F.col("value") > 0), "value", engine="jvm"
-    )
+    state = ddsketch_state(events.filter(F.col("value") > 0), "value")
     return state.select(
         F.posexplode("pos_bins").alias("pos", "bin_count"),
         F.col("pos_offset"),
@@ -4044,7 +4041,6 @@ def _q_ddsketch_collapsed_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_type"],
         store_type="collapsing_lowest",
         bin_limit=20,
-        engine="jvm",
     )
     return state.select(
         "event_type",
@@ -4070,7 +4066,6 @@ def _q_ddsketch_collapsed_high_bins(spark: SparkSession, sf_dir: str) -> DataFra
         ["event_type"],
         store_type="collapsing_highest",
         bin_limit=20,
-        engine="jvm",
     )
     return state.select(
         "event_type",
@@ -4107,7 +4102,6 @@ def _q_proto_roundtrip_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.withColumn("v", F.col("value") - F.lit(50.0)),
         "v",
         ["event_type"],
-        engine="jvm",
     )
     spec = DDSketchSpec(include_stats=False)
     out_schema = T.StructType(

@@ -127,6 +127,9 @@ class DDSketch:
         v = np.asarray(values, dtype=np.float64)
         if v.size == 0:
             return
+        if np.isinf(v).any():
+            # the reference's Integer(ceil(log_gamma(v))) raises on Infinity
+            raise ValueError("value must be finite")
         if weights is not None:
             w = np.asarray(weights, dtype=np.float64)
             if w.shape != v.shape:

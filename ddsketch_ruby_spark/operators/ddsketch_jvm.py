@@ -1,4 +1,5 @@
-"""JVM fast path for DDSketch aggregation (all three key mappings).
+"""JVM histogram path for DDSketch aggregation (all three key mappings) —
+the one path the quantile operators (operators/quantiles.py) build on.
 
 The insight: the sketch's bucket key is a closed-form expression — for the
 logarithmic mapping ``ceil(log2(|v|) * multiplier)``, and for the linearly /
@@ -21,15 +22,18 @@ to [max_key - bin_limit + 1, ...] is exactly the reference's
 order-insensitive collapse contract (see kernel/store.py derivation), so
 assembling after a full groupBy is legal.
 
-Numerics: Spark's LOG2 computes ln(v)/ln(2) — an oracle must mirror that
-exact expression (LN(v)/LN(2)) to be bit-compatible; NumPy's log2 (used by
-the kernel/python path) can differ in the last ulp on bucket boundaries.
-Tests compare the two paths at the bin level
-(tests/test_spark_ddsketch.py::test_jvm_keys_bit_match_kernel): interpolated
-keys must match the kernel exactly, logarithmic keys within one bucket at
-binade boundaries (no mismatch observed); the hypothesis property
-tests/test_properties.py::test_jvm_key_expr_matches_kernel_property demands
-exact key equality for all three mappings, fractional offsets included.
+Numerics: Spark's LOG2 computes ln(v)/ln(2) — a SQL oracle must mirror
+that exact expression (LN(v)/LN(2)) to be bit-compatible. JVM keys equal
+the kernel's ``key_batch`` keys exactly for all three mappings: pinned on
+a binade-boundary grid (tests/test_spark_ddsketch.py::
+test_jvm_keys_bit_match_kernel) and by the hypothesis property
+tests/test_properties.py::test_jvm_key_expr_matches_kernel_property,
+fractional offsets included. So a sketch built here equals the kernel-backed
+``operators.agg.sketch_agg`` build bin for bin.
+
+Input contract, as in the kernel: null and NaN values are dropped; a
+non-positive, null or NaN weight raises "weight must be positive" and a +-inf
+value raises "value must be finite".
 
 Interpolated mappings (reference linear_interpolated_key_mapping.rb:35-49,
 cubically_interpolated_key_mapping.rb:10-67) need ``frexp`` — unavailable
@@ -117,10 +121,20 @@ def _histogram(
     mp = mapping.min_possible
 
     v = F.col(value_col).cast("double")
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+    w = F.lit(1.0)
+    if weight_col:
+        # null and NaN weights raise too, as in the kernel (Spark orders NaN
+        # above every double, so `w > 0` alone would pass it)
+        w = F.col(weight_col).cast("double")
+        w = F.when((w > 0) & ~F.isnan(w), w).otherwise(
+            F.raise_error(F.lit("weight must be positive"))
+        )
     src = df.where(v.isNotNull() & ~F.isnan(v))
+    # +-inf would key to a saturated CEIL (Long.MAX); raise as the kernel does
+    inf = F.abs(v) == F.lit(float("inf"))
     zone = (
-        F.when(v > F.lit(mp), F.lit(1))
+        F.when(inf, F.raise_error(F.lit("value must be finite")))
+        .when(v > F.lit(mp), F.lit(1))
         .when(v < F.lit(-mp), F.lit(-1))
         .otherwise(F.lit(0))
     )

@@ -1,39 +1,25 @@
 """High-level DDSketch quantile operators over DataFrames.
 
-This is the flagship query shape (SURVEY.md §7.3): select -> per-partition
-sketch build -> merge shuffle of sketch rows -> quantile extraction.
+This is the flagship query shape (SURVEY.md §7.3): select -> bucket
+histogram in whole-stage codegen (map-side partial aggregation) -> shuffle
+of distinct (group, zone, key) rows -> per-group assembly and quantile
+extraction. Every sketch-building operator here runs on that one JVM
+histogram path (operators/ddsketch_jvm.py); ``operators.agg.sketch_agg``
+with a ``DDSketchSpec`` is the kernel-backed reference the tests compare
+it against.
 """
 
 from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import DataFrame
-
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..kernel import DEFAULT_BIN_LIMIT, DEFAULT_REL_ACC
 from ..kernel.store import COLLAPSE_LOWEST
 from ..sketches.ddsketch_spec import DDSketchSpec, quantile_col_name
-from .agg import sketch_agg
-from .ddsketch_jvm import ddsketch_jvm_agg
-
-
-def _dispatch(engine, df, spec, value_col, group_by, weight_col, output, tree_fanin):
-    """engine: "auto" uses the JVM histogram fast path — all three key
-    mappings have closed-form SQL key expressions (interpolated mappings via
-    exact-frexp recovery, see operators/ddsketch_jvm.py) — unless a
-    tree_fanin was explicitly requested, which only the python/Arrow
-    two-phase engine honors; "jvm"/"python" force a path."""
-    if engine == "auto":
-        engine = "python" if tree_fanin else "jvm"
-    if engine == "jvm":
-        return ddsketch_jvm_agg(df, spec, value_col, group_by, weight_col, output)
-    if engine == "python":
-        return sketch_agg(
-            df, spec, value_col, group_by, weight_col, output, tree_fanin
-        )
-    raise ValueError("engine must be 'auto', 'jvm', or 'python'")
+from .ddsketch_jvm import ddsketch_jvm_agg, histogram_rows, key_column
 
 __all__ = [
     "ddsketch_drift",
@@ -69,8 +55,6 @@ def ddsketch_quantiles(
     weight_col: str | None = None,
     include_stats: bool = True,
     value_formula: str = "reference",
-    tree_fanin: int | None = None,
-    engine: str = "auto",
     mapping_offset: float = 0.0,
 ) -> DataFrame:
     """One row per group: requested quantile columns (+ exact count/sum/
@@ -86,10 +70,7 @@ def ddsketch_quantiles(
         value_formula=value_formula,
         mapping_offset=mapping_offset,
     )
-    return _dispatch(
-        engine, df, spec, value_col, list(group_by), weight_col, "result",
-        tree_fanin,
-    )
+    return ddsketch_jvm_agg(df, spec, value_col, group_by, weight_col)
 
 
 def ddsketch_quantiles_long(
@@ -99,8 +80,6 @@ def ddsketch_quantiles_long(
     quantiles: Iterable[float] | dict[str, float] = (0.5, 0.95, 0.99),
     relative_accuracy: float = DEFAULT_REL_ACC,
     round_to: int = 6,
-    tree_fanin: int | None = None,
-    engine: str = "auto",
     mapping: str = "logarithmic",
     value_formula: str | None = None,
     mapping_offset: float = 0.0,
@@ -125,8 +104,6 @@ def ddsketch_quantiles_long(
         include_stats=False,
         value_formula=value_formula,
         mapping=mapping,
-        tree_fanin=tree_fanin,
-        engine=engine,
         mapping_offset=mapping_offset,
     )
     stack_args = ", ".join(
@@ -143,7 +120,6 @@ def ddsketch_multi(
     quantiles: Iterable[float] | dict[str, float] = (0.5, 0.95, 0.99),
     relative_accuracy: float = DEFAULT_REL_ACC,
     include_stats: bool = True,
-    engine: str = "auto",
     value_formula: str = "reference",
 ) -> DataFrame:
     """Sketch several measures in ONE scan: returns one row per
@@ -170,7 +146,6 @@ def ddsketch_multi(
         quantiles,
         relative_accuracy,
         include_stats=include_stats,
-        engine=engine,
         value_formula=value_formula,
     )
 
@@ -184,7 +159,6 @@ def ddsketch_quantile_of_quantiles(
     relative_accuracy: float = DEFAULT_REL_ACC,
     outer_group_by: Iterable[str] = (),
     round_inner_to: int = 6,
-    engine: str = "auto",
 ) -> DataFrame:
     """Two-level composition: per-inner-group quantile, then the
     distribution OF those quantiles — e.g. "p95 across per-host p99
@@ -206,7 +180,6 @@ def ddsketch_quantile_of_quantiles(
         relative_accuracy,
         include_stats=False,
         value_formula="pow",
-        engine=engine,
     ).select(
         *outer_group_by, F.round("__iq", round_inner_to).alias("__iq")
     )
@@ -218,7 +191,6 @@ def ddsketch_quantile_of_quantiles(
         relative_accuracy,
         include_stats=False,
         value_formula="pow",
-        engine=engine,
     )
 
 
@@ -231,21 +203,14 @@ def ddsketch_state(
     bin_limit: int = DEFAULT_BIN_LIMIT,
     mapping: str = "logarithmic",
     weight_col: str | None = None,
-    tree_fanin: int | None = None,
-    engine: str = "python",
 ) -> DataFrame:
     """One mergeable sketch-state row per group (persist / merge later).
-
-    Default engine is "python" so persisted states are bit-faithful to the
-    kernel's NumPy key computation; pass engine="jvm"/"auto" for the fast
-    path (keys may differ in the last ulp on bucket boundaries)."""
+    Its bins equal the kernel's: JVM keys are bit-identical to
+    ``KeyMapping.key_batch``."""
     spec = DDSketchSpec(
         relative_accuracy, store_type, bin_limit, mapping, include_stats=False
     )
-    return _dispatch(
-        engine, df, spec, value_col, list(group_by), weight_col, "state",
-        tree_fanin,
-    )
+    return ddsketch_jvm_agg(df, spec, value_col, group_by, weight_col, "state")
 
 
 def ddsketch_cdf(
@@ -283,8 +248,6 @@ def ddsketch_cdf(
     src = df.where(v.isNotNull() & ~F.isnan(v))
     neg = v < F.lit(-mp)
     zero = (v >= F.lit(-mp)) & (v <= F.lit(mp))
-
-    from .ddsketch_jvm import key_column
 
     # guard the key expression behind the zone test: vectorized eval does
     # not short-circuit, and key_column(0) would CEIL(-inf) under ANSI
@@ -352,11 +315,14 @@ def ddsketch_drift(
     Real-line bucket order is (zone, zone*key) — negative-zone keys
     grow toward more-negative values, so multiplying by the zone sign
     linearizes all three zones."""
-    from pyspark.sql import Window
-
-    from .ddsketch_jvm import histogram_rows
-
     groups = list(group_by)
+    a, b = _split_histograms(df, value_col, split_col, groups, relative_accuracy)
+    return histogram_drift(a, b, groups, round_to=round_to)
+
+
+def _split_histograms(df, value_col, split_col, groups, relative_accuracy):
+    """Bucket histograms of the split_col = false and = true sides (rows
+    with a NULL split land on neither)."""
     spec = DDSketchSpec(
         relative_accuracy=relative_accuracy, include_stats=False
     )
@@ -364,7 +330,23 @@ def ddsketch_drift(
     hist = histogram_rows(tagged, spec, value_col, groups + ["__b"])
     a = hist.filter(~F.col("__b")).drop("__b")
     b = hist.filter(F.col("__b")).drop("__b")
-    return histogram_drift(a, b, groups, round_to=round_to)
+    return a, b
+
+
+def _pivot_buckets(hist_a, hist_b, groups, count_col):
+    """One row per (group..., __zone, __key) of the union bucket grid with
+    both sides' counts, __ca and __cb (0.0 where a side has no mass)."""
+    a = hist_a.select(
+        *groups, "__zone", "__key", F.col(count_col).alias("__ca")
+    ).withColumn("__cb", F.lit(0.0))
+    b = hist_b.select(
+        *groups, "__zone", "__key", F.col(count_col).alias("__cb")
+    ).withColumn("__ca", F.lit(0.0))
+    return (
+        a.unionByName(b)
+        .groupBy(*groups, "__zone", "__key")
+        .agg(F.sum("__ca").alias("__ca"), F.sum("__cb").alias("__cb"))
+    )
 
 
 def histogram_drift(
@@ -380,20 +362,8 @@ def histogram_drift(
     histograms: sketch_stream_hist emits exactly these rows per window,
     so "drift of each live window vs a baseline" is one call with no
     rescan of the raw data (only bucket rows move)."""
-    from pyspark.sql import Window
-
     groups = list(group_by)
-    a = hist_a.select(
-        *groups, "__zone", "__key", F.col(count_col).alias("__ca")
-    ).withColumn("__cb", F.lit(0.0))
-    b = hist_b.select(
-        *groups, "__zone", "__key", F.col(count_col).alias("__cb")
-    ).withColumn("__ca", F.lit(0.0))
-    piv = (
-        a.unionByName(b)
-        .groupBy(*groups, "__zone", "__key")
-        .agg(F.sum("__ca").alias("__ca"), F.sum("__cb").alias("__cb"))
-    )
+    piv = _pivot_buckets(hist_a, hist_b, groups, count_col)
     order = [F.col("__zone"), F.col("__zone") * F.col("__key")]
     wcum = (
         Window.partitionBy(*groups)
@@ -446,19 +416,7 @@ def histogram_psi(
 
     Returns (group..., n_a, n_b, psi)."""
     groups = list(group_by)
-    a = hist_a.select(
-        *groups, "__zone", "__key", F.col(count_col).alias("__ca")
-    ).withColumn("__cb", F.lit(0.0))
-    b = hist_b.select(
-        *groups, "__zone", "__key", F.col(count_col).alias("__cb")
-    ).withColumn("__ca", F.lit(0.0))
-    piv = (
-        a.unionByName(b)
-        .groupBy(*groups, "__zone", "__key")
-        .agg(F.sum("__ca").alias("__ca"), F.sum("__cb").alias("__cb"))
-    )
-    from pyspark.sql import Window
-
+    piv = _pivot_buckets(hist_a, hist_b, groups, count_col)
     wall = Window.partitionBy(*groups).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -503,16 +461,8 @@ def ddsketch_psi(
     bucket grid — histogram build as in ddsketch_drift (rows with a NULL
     split are excluded from both sides there and here), statistic as in
     histogram_psi."""
-    from .ddsketch_jvm import histogram_rows
-
     groups = list(group_by)
-    spec = DDSketchSpec(
-        relative_accuracy=relative_accuracy, include_stats=False
-    )
-    tagged = df.withColumn("__b", F.col(split_col).cast("boolean"))
-    hist = histogram_rows(tagged, spec, value_col, groups + ["__b"])
-    a = hist.filter(~F.col("__b")).drop("__b")
-    b = hist.filter(F.col("__b")).drop("__b")
+    a, b = _split_histograms(df, value_col, split_col, groups, relative_accuracy)
     return histogram_psi(a, b, groups, round_to=round_to)
 
 

@@ -9,6 +9,9 @@ Usage: python scripts/check_oracles.py [--json OUT.json] [sf_dir] [query ...]
 schema_match / hash_match / spark_rows / oracle_rows / err) covering the
 FULL registry — the per-round self-replay artifact (CORRECTNESS_SELF_r*.json)
 that persists the tail queries' status beyond the driver's 50-row window.
+
+Exits 2 before starting Spark if sf_dir is not a directory or a query
+name is not in queries(), so a typo cannot replay nothing and pass.
 """
 
 from __future__ import annotations
@@ -57,6 +60,16 @@ def main() -> int:
         args = args[:i] + args[i + 2:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    queries = entry.queries()
+    # refuse before starting Spark: an unknown name would replay nothing
+    # and exit 0, and a query name in the sf_dir slot is not a directory
+    if not os.path.isdir(sf_dir):
+        print(f"sf_dir is not a directory: {sf_dir}")
+        return 2
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
     records: dict[str, dict] = {}
     spark = get_spark("check-oracles", cpus=8, shuffle_partitions=8)
 
@@ -66,7 +79,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    queries = entry.queries()
     oracles = entry.oracle_sql()
     # gate-completeness self-check: every oracle targets a registered
     # query, and the driver's observed 50-row recording window is printed

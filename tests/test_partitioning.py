@@ -9,7 +9,8 @@ from ddsketch_ruby_spark.operators.partitioning import (
     salted_repartition,
     with_salt,
 )
-from ddsketch_ruby_spark.operators.quantiles import ddsketch_quantiles
+from ddsketch_ruby_spark.operators.agg import sketch_agg
+from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
 from ddsketch_ruby_spark.sources.webpages import web_pages
 
 
@@ -30,21 +31,19 @@ def test_group_agg_immune_to_hot_key(spark):
         F.regexp_extract("url", r"host(\d+)", 1).alias("host"),
         F.length("text").cast("double").alias("doc_len"),
     )
+    spec = DDSketchSpec(quantiles={"q50": 0.5})
     base = {
         r["host"]: r.asDict()
-        for r in ddsketch_quantiles(
-            pages, "doc_len", ["host"], quantiles=(0.5,), engine="python"
-        ).collect()
+        for r in sketch_agg(pages, spec, "doc_len", ["host"]).collect()
     }
     hot_layout = pages.repartition(16, "host")  # co-locate the hot key
     salted = {
         r["host"]: r.asDict()
-        for r in ddsketch_quantiles(
+        for r in sketch_agg(
             salted_repartition(hot_layout, ["host", "doc_len"], 16),
+            spec,
             "doc_len",
             ["host"],
-            quantiles=(0.5,),
-            engine="python",
             tree_fanin=4,
         ).collect()
     }

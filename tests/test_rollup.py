@@ -3,7 +3,8 @@ rebuilding from raw data at each level (monoid exactness)."""
 
 from pyspark.sql import functions as F
 
-from ddsketch_ruby_spark.operators.quantiles import ddsketch_quantiles, ddsketch_state
+from ddsketch_ruby_spark.operators.agg import sketch_agg
+from ddsketch_ruby_spark.operators.quantiles import ddsketch_state
 from ddsketch_ruby_spark.operators.rollup import merge_states, sketch_cube_union
 from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
 
@@ -20,9 +21,7 @@ def test_rollup_equals_direct_build(spark, sf_dir):
     }
     direct = {
         r["lang"]: r.asDict()
-        for r in ddsketch_quantiles(
-            docs, "n_chars", ["lang"], quantiles=(0.5,), engine="python"
-        ).collect()
+        for r in sketch_agg(docs, spec, "n_chars", ["lang"]).collect()
     }
     assert set(rolled) == set(direct)
     for lang in direct:

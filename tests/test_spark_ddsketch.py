@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from ddsketch_ruby_spark.operators.agg import sketch_agg, sketch_partials
 from ddsketch_ruby_spark.operators.quantiles import ddsketch_quantiles, ddsketch_state
-from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
+from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec, quantile_col_name
 from ddsketch_ruby_spark.sources.tables import table
 
 QS = (0.1, 0.5, 0.9, 0.95, 0.99)
@@ -18,6 +18,15 @@ ALPHA = 0.01
 def exact_quantiles(values: np.ndarray, qs=QS) -> dict[float, float]:
     s = np.sort(values)
     return {q: float(s[int(q * (len(s) - 1))]) for q in qs}
+
+
+def kernel_reference(df, col, group_by=(), qs=QS, **spec_kw):
+    """The kernel-backed build (operators.agg.sketch_agg) that the JVM
+    histogram path behind the quantile operators must reproduce."""
+    spec = DDSketchSpec(
+        quantiles={quantile_col_name(q): q for q in qs}, **spec_kw
+    )
+    return sketch_agg(df, spec, col, group_by)
 
 
 @pytest.fixture(scope="module")
@@ -32,8 +41,6 @@ def test_accuracy_vs_exact_oracle(spark, events):
     res = ddsketch_quantiles(events, "value", quantiles=QS).collect()[0].asDict()
     oracle = exact_quantiles(vals)
     for q, exact in oracle.items():
-        from ddsketch_ruby_spark.sketches.ddsketch_spec import quantile_col_name
-
         got = res[quantile_col_name(q)]
         assert abs(got - exact) - ALPHA * abs(exact) <= 1e-15
     assert res["count"] == len(vals)
@@ -58,8 +65,13 @@ def test_partition_count_invariance(spark, events, partitions):
 
 def test_tree_fanin_equivalence(spark, events):
     df = events.repartition(16)
-    flat = ddsketch_state(df, "value").collect()[0].asDict()
-    tree = ddsketch_state(df, "value", tree_fanin=3).collect()[0].asDict()
+    spec = DDSketchSpec(include_stats=False)
+    flat = sketch_agg(df, spec, "value", output="state").collect()[0].asDict()
+    tree = (
+        sketch_agg(df, spec, "value", output="state", tree_fanin=3)
+        .collect()[0]
+        .asDict()
+    )
     assert list(flat["pos_bins"]) == list(tree["pos_bins"])
     assert flat["pos_offset"] == tree["pos_offset"]
     assert flat["count"] == tree["count"]
@@ -105,8 +117,9 @@ def test_weighted_agg(spark):
 
 
 def test_weighted_grouped_tree_agg(spark, sf01_dir):
-    """Weighted + grouped + tree-merge on both engines agree with the
-    exact weighted aggregates."""
+    """Weighted + grouped on the JVM path, and weighted + grouped +
+    tree-merge on the kernel reference, agree with the exact weighted
+    aggregates."""
     li = spark.read.parquet(f"{sf01_dir}/lineitem.parquet").withColumn(
         "w", F.col("l_linenumber").cast("double")
     )
@@ -119,22 +132,51 @@ def test_weighted_grouped_tree_agg(spark, sf01_dir):
         )
         .collect()
     }
-    for engine, fanin in (("jvm", None), ("python", 4)):
-        res = {
-            r["l_returnflag"]: r.asDict()
-            for r in ddsketch_quantiles(
-                li.repartition(16),
-                "l_quantity",
-                ["l_returnflag"],
-                quantiles=(0.5,),
-                weight_col="w",
-                engine=engine,
-                tree_fanin=fanin,
-            ).collect()
-        }
+    df = li.repartition(16)
+    builds = {
+        "jvm": ddsketch_quantiles(
+            df, "l_quantity", ["l_returnflag"], quantiles=(0.5,), weight_col="w"
+        ),
+        "kernel": sketch_agg(
+            df,
+            DDSketchSpec(quantiles={"q50": 0.5}),
+            "l_quantity",
+            ["l_returnflag"],
+            "w",
+            tree_fanin=4,
+        ),
+    }
+    for path, build in builds.items():
+        res = {r["l_returnflag"]: r.asDict() for r in build.collect()}
         for k, e in exact.items():
-            assert res[k]["count"] == pytest.approx(e["count"], rel=1e-12), engine
-            assert res[k]["sum"] == pytest.approx(e["sum"], rel=1e-9), engine
+            assert res[k]["count"] == pytest.approx(e["count"], rel=1e-12), path
+            assert res[k]["sum"] == pytest.approx(e["sum"], rel=1e-9), path
+
+
+@pytest.mark.parametrize("w", [0.0, -5.0, None, float("nan")])
+def test_non_positive_or_null_weight_raises(spark, w):
+    """As in the kernel (and reference base_sketch.rb add), a weight that
+    is not positive is an error, never a silently wrong count or max."""
+    sdf = spark.createDataFrame(
+        [(1.0, 1.0), (2.0, 1.0), (1000.0, w)], "value double, w double"
+    )
+    with pytest.raises(Exception, match="weight must be positive"):
+        ddsketch_quantiles(sdf, "value", weight_col="w").collect()
+
+
+@pytest.mark.parametrize("values", [[1.0, 2.0, float("inf")], [1.0, float("-inf")]])
+@pytest.mark.parametrize("build", ["ddsketch_quantiles", "sketch_agg"])
+def test_infinite_value_raises(spark, build, values):
+    """+-inf has no bucket key (the reference's Integer(ceil(log_gamma(v)))
+    raises on Infinity): both the JVM path and the kernel reference raise
+    instead of filing it under a saturated or wrapped key."""
+    sdf = spark.createDataFrame([(v,) for v in values], "value double")
+    out = {
+        "ddsketch_quantiles": lambda: ddsketch_quantiles(sdf, "value"),
+        "sketch_agg": lambda: sketch_agg(sdf, DDSketchSpec(), "value"),
+    }[build]()
+    with pytest.raises(Exception, match="value must be finite"):
+        out.collect()
 
 
 def test_nulls_and_empty_groups(spark):
@@ -212,19 +254,19 @@ def test_scan_pruning(spark, events):
     assert m.group(1).split(":")[0] == "value" and "," not in m.group(1), m.group(1)
 
 
-def test_jvm_engine_matches_python_engine(spark, events, sf_dir):
-    """The JVM histogram fast path and the Arrow two-phase path must agree:
-    identical counts/min/max, quantile keys equal up to the documented
-    log2-ulp difference (values within the alpha bound of each other)."""
+def test_jvm_path_matches_kernel_reference(spark, events, sf_dir):
+    """The JVM histogram path behind the quantile operators reproduces the
+    kernel-backed sketch_agg build: identical counts/min/max and, because
+    JVM keys are bit-identical to kernel keys, identical quantiles."""
     li = table(spark, sf_dir, "lineitem")
     for df, col, grp in ((events, "value", []), (li, "l_extendedprice", ["l_returnflag"])):
         a = {
             tuple(r[g] for g in grp): r.asDict()
-            for r in ddsketch_quantiles(df, col, grp, quantiles=QS, engine="jvm").collect()
+            for r in ddsketch_quantiles(df, col, grp, quantiles=QS).collect()
         }
         b = {
             tuple(r[g] for g in grp): r.asDict()
-            for r in ddsketch_quantiles(df, col, grp, quantiles=QS, engine="python").collect()
+            for r in kernel_reference(df, col, grp).collect()
         }
         assert set(a) == set(b)
         for k in a:
@@ -232,13 +274,8 @@ def test_jvm_engine_matches_python_engine(spark, events, sf_dir):
             assert a[k]["min"] == b[k]["min"] and a[k]["max"] == b[k]["max"]
             assert abs(a[k]["sum"] - b[k]["sum"]) <= 1e-6 * abs(b[k]["sum"])
             for q in QS:
-                from ddsketch_ruby_spark.sketches.ddsketch_spec import (
-                    quantile_col_name,
-                )
-
                 name = quantile_col_name(q)
-                va, vb = a[k][name], b[k][name]
-                assert abs(va - vb) <= ALPHA * abs(vb) + 1e-12, (k, name, va, vb)
+                assert a[k][name] == b[k][name], (k, name, a[k][name], b[k][name])
 
 
 def test_jvm_engine_negative_and_zero(spark):
@@ -247,12 +284,12 @@ def test_jvm_engine_negative_and_zero(spark):
 
     data = [(float(v),) for v in [-50.0, -1.0, 0.0, 0.0, 0.5, 2.0, 1000.0]]
     sdf = spark.createDataFrame(data, "value double")
-    res = ddsketch_quantiles(sdf, "value", quantiles=(0.0, 0.5, 1.0), engine="jvm").collect()[0].asDict()
+    res = ddsketch_quantiles(sdf, "value", quantiles=(0.0, 0.5, 1.0)).collect()[0].asDict()
     assert res["count"] == 7.0
     assert res["min"] == -50.0 and res["max"] == 1000.0
     # rank 3 of 7 (q50) lands in the zero band
     assert res["q50"] == 0.0
-    ref = ddsketch_quantiles(sdf, "value", quantiles=(0.0, 0.5, 1.0), engine="python").collect()[0].asDict()
+    ref = kernel_reference(sdf, "value", qs=(0.0, 0.5, 1.0)).collect()[0].asDict()
     for name in ("q0", "q50", "q100"):
         assert res[name] == pytest.approx(ref[name], rel=1e-9)
 
@@ -285,26 +322,16 @@ def test_jvm_keys_bit_match_kernel(spark, mapping):
     }
     kern = {float(v): int(k) for v, k in zip(vals, m.key_batch(vals))}
     mism = {v: (got[v], kern[v]) for v in kern if got[v] != kern[v]}
-    if mapping == "logarithmic":
-        # the module contract for the log path only promises agreement up
-        # to the documented LOG2-vs-np.log2 last-ulp slack on bucket
-        # boundaries — allow off-by-one keys there (none observed on this
-        # libm, but don't overclaim)
-        assert all(abs(g - k) <= 1 for g, k in mism.values()), mism
-    else:
-        assert not mism, list(mism.items())[:5]
+    assert not mism, list(mism.items())[:5]
 
 
 @pytest.mark.parametrize("mapping", ["linear", "cubic"])
 def test_jvm_engine_interpolated_matches_python(spark, events, mapping):
-    """Interpolated mappings on the JVM path agree with the Arrow two-phase
-    engine EXACTLY (keys are bit-identical to the kernel, unlike the
-    logarithmic path's documented log2-ulp slack)."""
-    kw = dict(quantiles=QS, mapping=mapping, value_formula="reference")
-    a = ddsketch_quantiles(events, "value", engine="jvm", **kw).collect()[0].asDict()
-    b = ddsketch_quantiles(events, "value", engine="python", **kw).collect()[0].asDict()
-    from ddsketch_ruby_spark.sketches.ddsketch_spec import quantile_col_name
-
+    """Interpolated mappings on the JVM path agree with the kernel
+    reference EXACTLY (keys are bit-identical to the kernel)."""
+    a = ddsketch_quantiles(events, "value", quantiles=QS, mapping=mapping)
+    a = a.collect()[0].asDict()
+    b = kernel_reference(events, "value", mapping=mapping).collect()[0].asDict()
     for q in QS:  # bucket-exact: identical keys -> identical values
         name = quantile_col_name(q)
         assert a[name] == b[name], (name, a[name], b[name])

@@ -5,7 +5,8 @@ from pyspark.sql import functions as F
 
 from ddsketch_ruby_spark.functions.sql_udfs import register_sketch_sql
 from ddsketch_ruby_spark.operators.agg import sketch_agg
-from ddsketch_ruby_spark.operators.quantiles import ddsketch_quantiles, ddsketch_state
+from ddsketch_ruby_spark.operators.quantiles import ddsketch_state
+from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
 from ddsketch_ruby_spark.sketches.hll import HLLSpec
 
 
@@ -27,8 +28,8 @@ def test_sql_quantile_on_persisted_states(spark, sf_dir, tmp_path):
     sql_p50 = {r["lang"]: r["p50"] for r in rows}
     direct = {
         r["lang"]: r["q50"]
-        for r in ddsketch_quantiles(
-            docs, "n_chars", ["lang"], quantiles=(0.5,), engine="python"
+        for r in sketch_agg(
+            docs, DDSketchSpec(quantiles={"q50": 0.5}), "n_chars", ["lang"]
         ).collect()
     }
     assert sql_p50 == direct

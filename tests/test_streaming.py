@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from ddsketch_ruby_spark.operators.agg import sketch_agg
 from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
 from ddsketch_ruby_spark.sketches.hll import HLLSpec
 from ddsketch_ruby_spark.streaming.sketch_stream import sketch_stream_agg
@@ -57,14 +58,9 @@ def test_stream_converges_to_batch(spark, stream_dir):
     final = pdf.groupby("event_type").tail(1).set_index("event_type")
 
     # batch reference
-    from ddsketch_ruby_spark.operators.quantiles import ddsketch_quantiles
-
     ref = {
         r["event_type"]: r.asDict()
-        for r in ddsketch_quantiles(
-            src, "value", group_by=["event_type"], quantiles=(0.5, 0.99),
-            engine="python",
-        ).collect()
+        for r in sketch_agg(src, spec, "value", ["event_type"]).collect()
     }
     assert set(final.index) == set(ref)
     for et, r in ref.items():
@@ -377,15 +373,7 @@ def test_stream_rocksdb_state_store(spark, stream_dir, tmp_path):
     )
     ref = {
         r["event_type"]: r.asDict()
-        for r in __import__(
-            "ddsketch_ruby_spark.operators.quantiles",
-            fromlist=["ddsketch_quantiles"],
-        )
-        .ddsketch_quantiles(
-            src, "value", ["event_type"], quantiles={"q50": 0.5},
-            engine="python",
-        )
-        .collect()
+        for r in sketch_agg(src, spec, "value", ["event_type"]).collect()
     }
     assert set(final.index) == set(ref)
     for et, e in ref.items():
@@ -435,19 +423,9 @@ def test_stream_collapsed_store_converges_to_batch(spark, stream_dir):
         mem.toPandas().groupby("event_type").tail(1).set_index("event_type")
     )
 
-    from ddsketch_ruby_spark.operators.quantiles import ddsketch_quantiles
-
     ref = {
         r["event_type"]: r.asDict()
-        for r in ddsketch_quantiles(
-            src,
-            "value",
-            group_by=["event_type"],
-            quantiles={"q10": 0.1, "q50": 0.5, "q99": 0.99},
-            store_type="collapsing_lowest",
-            bin_limit=20,
-            engine="python",
-        ).collect()
+        for r in sketch_agg(src, spec, "value", ["event_type"]).collect()
     }
     assert set(final.index) == set(ref)
     for et, r in ref.items():
