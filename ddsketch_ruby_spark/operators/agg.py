@@ -6,11 +6,11 @@ by batch, so executor memory is O(groups x state), never O(rows). Only the
 needed columns are selected first, so Catalyst prunes the parquet scan down
 to the value/group columns (checked via .explain ReadSchema in tests).
 
-Phase 2 (merge): ``fold_groups``, the library's one per-group fold — a
-single ``groupBy(*group_by).applyInPandas`` stage that folds each group's
-rows into one sketch and emits its state or its result. A global aggregate
-is a key-less ``groupBy()``, which Spark plans as one SinglePartition
-group. Shuffle volume is ``n_partitions x n_groups x state_size`` — for
+Phase 2 (merge): ``fold_groups``, the library's one per-group fold — rows
+hash-partitioned and sorted by the group keys, then one ``mapInArrow`` call
+per partition that cuts the sorted Arrow stream at group boundaries and
+folds each group into one sketch. A global aggregate is one partition with
+no keys. Shuffle volume is ``n_partitions x n_groups x state_size`` — for
 DDSketch at the default bin_limit that is <= ~32 kB per partial (reference
 base_sketch.rb:24-28 rationale) — independent of input row count, which is
 what makes the plan survive a 100x scale-up: the scan scales out, the
@@ -33,10 +33,13 @@ from __future__ import annotations
 
 from typing import Iterable, Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..sketches.base import SketchSpec
 
@@ -92,11 +95,10 @@ def _build_partials_fn(
     return build
 
 
-def _merge_states(spec: SketchSpec, pdf: pd.DataFrame) -> object:
+def _merge_states(spec: SketchSpec, cols: dict[str, np.ndarray]) -> object:
     state_names = [f.name for f in spec.state_fields()]
     merged = spec.zero()
-    cols = {n: pdf[n].to_numpy() for n in state_names}
-    for i in range(len(pdf)):
+    for i in range(len(cols[state_names[0]])):
         row = {n: cols[n][i] for n in state_names}
         merged = spec.merge(merged, spec.row_to_state(row))
     return merged
@@ -112,6 +114,26 @@ def _output_fields(spec: SketchSpec, output: str):
     raise ValueError("output must be 'result' or 'state'")
 
 
+def _starts_group(keys: list[pa.Array], n: int) -> np.ndarray:
+    """``out[i]``: row ``i`` of the ``n`` key rows starts a new group under
+    Spark's grouping equality — null equals null and no value, NaN equals
+    NaN, 0.0 equals -0.0."""
+    new = np.zeros(n, dtype=bool)
+    new[0] = True
+    for col in keys:
+        valid = col.is_valid().to_numpy(zero_copy_only=False)
+        if pa.types.is_floating(col.type):
+            v = col.to_numpy(zero_copy_only=False)
+            differ = (v[1:] != v[:-1]) & ~(np.isnan(v[1:]) & np.isnan(v[:-1]))
+        elif pa.types.is_struct(col.type):
+            differ = _starts_group(col.flatten(), n)[1:]
+        else:  # Python equality: exact for integers, strings, dates, decimals
+            x = col.to_pylist()
+            differ = np.array([p != q for p, q in zip(x[1:], x[:-1])], dtype=bool)
+        new[1:] |= (differ & valid[1:]) | (valid[1:] != valid[:-1])
+    return new
+
+
 def fold_groups(
     df: DataFrame,
     spec: SketchSpec,
@@ -120,19 +142,58 @@ def fold_groups(
     to_state=_merge_states,
 ) -> DataFrame:
     """Phase 2: fold each ``group_by`` group of ``df`` into one sketch with
-    ``to_state(spec, pdf)`` and emit one row of the group keys plus the
-    ``output`` columns. An empty ``group_by`` is the global fold: Spark
-    plans a key-less ``groupBy()`` as one SinglePartition group (and an
-    empty input as zero groups, hence zero rows)."""
+    ``to_state(spec, cols)`` (``cols``: the group's NumPy slice of every
+    non-key column) and emit one row of its keys plus the ``output``
+    columns. A group is a run of its partition's sorted Arrow stream, carried
+    across batches: memory is O(batch + largest group). An empty ``group_by``
+    is the global fold: one partition, one group (none for empty input)."""
     fields, emit = _output_fields(spec, output)
     schema = T.StructType(_group_fields(df, group_by) + fields)
+    out_types = to_arrow_schema(T.StructType(fields)).types
+    names = [c for c in df.columns if c not in group_by]
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = {g: pdf[g].iloc[0] for g in group_by}
-        row.update(emit(to_state(spec, pdf)))
-        return pd.DataFrame([row], columns=schema.names)
+    def batch_of(keys: list[pa.Array], states: list) -> pa.RecordBatch:
+        rows = [emit(s) for s in states]
+        outs = [  # from_pandas=True: a NaN result is emitted as null
+            pa.array([r[f.name] for r in rows], type=t, from_pandas=True)
+            for f, t in zip(fields, out_types)
+        ]
+        return pa.RecordBatch.from_arrays(keys + outs, names=schema.names)
 
-    return df.groupBy(*group_by).applyInPandas(fold, schema=schema)
+    def fold_carried(parts: list[dict]) -> object:
+        return to_state(spec, {c: np.concatenate([p[c] for p in parts]) for c in names})
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        carry, carry_key = [], []  # the open group's column slices, its key row
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            keys = [batch.column(g) for g in group_by]
+            cols = {c: batch.column(c).to_numpy(zero_copy_only=False) for c in names}
+            lead = 1 if carry else 0  # an open group's key row leads the batch
+            both = [pa.concat_arrays(p) for p in zip(carry_key, keys)] if lead else keys
+            starts = np.flatnonzero(_starts_group(both, n + lead)[lead:])
+            if head := (starts[0] if len(starts) else n):  # continues the open group
+                carry.append({c: v[:head] for c, v in cols.items()})
+            if not len(starts):
+                continue
+            states, out_keys = [], [k.take(starts[:-1]) for k in keys]
+            if carry:
+                states.append(fold_carried(carry))
+                out_keys = [pa.concat_arrays(p) for p in zip(carry_key, out_keys)]
+            for a, b in zip(starts[:-1], starts[1:]):
+                states.append(to_state(spec, {c: v[a:b] for c, v in cols.items()}))
+            carry = [{c: v[starts[-1]:] for c, v in cols.items()}]
+            carry_key = [k.take(starts[-1:]) for k in keys]
+            yield batch_of(out_keys, states)
+        if carry:
+            yield batch_of(carry_key, [fold_carried(carry)])
+
+    if not group_by:
+        return df.repartition(1).mapInArrow(run, schema)
+    by_key = df.repartition(*group_by).sortWithinPartitions(*group_by)
+    return by_key.mapInArrow(run, schema)
 
 
 def sketch_partials(

@@ -12,9 +12,9 @@ whole-stage codegen:
 Tungsten's hash aggregate does map-side partial aggregation, the shuffle
 carries only distinct (group, zone, key) rows (bounded by the bucket count,
 ~2*bin_limit per group — independent of input rows), and Python touches
-nothing until the final assembly of a few-thousand-row histogram into bin
-arrays. Compared to shipping raw rows through Arrow into pandas UDFs this
-removes the Python boundary from the hot path entirely — the job becomes
+nothing until the final assembly: one ``mapInArrow`` call per partition
+slices the group-sorted histogram rows into each group's bin arrays
+(``fold_groups``). Raw rows never cross the Python boundary — the job is
 scan-bound and scales like any native Spark aggregation.
 
 Collapsing-store semantics are applied at assembly time: clamping every key
@@ -52,7 +52,6 @@ from __future__ import annotations
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -151,12 +150,12 @@ def _histogram(
     )
 
 
-def _assemble_state(spec: DDSketchSpec, pdf: pd.DataFrame) -> DDSketch:
-    """(zone, key, cnt, svw, minv, maxv) rows -> kernel sketch state."""
+def _assemble_state(spec: DDSketchSpec, cols: dict[str, np.ndarray]) -> DDSketch:
+    """A group's (zone, key, cnt, svw, minv, maxv) columns -> kernel sketch."""
     s = spec.zero()
-    zones = pdf["__zone"].to_numpy()
-    keys = pdf["__key"].to_numpy().astype(np.int64)
-    cnts = pdf["__cnt"].to_numpy().astype(np.float64)
+    zones = cols["__zone"]
+    keys = cols["__key"].astype(np.int64)
+    cnts = cols["__cnt"].astype(np.float64)
     for zone, store in ((1, s.store), (-1, s.negative_store)):
         m = zones == zone
         if m.any():
@@ -164,9 +163,9 @@ def _assemble_state(spec: DDSketchSpec, pdf: pd.DataFrame) -> DDSketch:
     zm = zones == 0
     s.zero_count = float(cnts[zm].sum()) if zm.any() else 0.0
     s.count = float(cnts.sum())
-    s.sum = float(pdf["__svw"].to_numpy().sum())
-    s.min = float(pdf["__minv"].to_numpy().min())
-    s.max = float(pdf["__maxv"].to_numpy().max())
+    s.sum = float(cols["__svw"].sum())
+    s.min = float(cols["__minv"].min())
+    s.max = float(cols["__maxv"].max())
     return s
 
 

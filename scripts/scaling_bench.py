@@ -104,7 +104,7 @@ def run_child(spec: str) -> None:
         )
     else:
         # explicit master (local-cluster[w,c,m]: w separate executor JVMs)
-        # — the sketch assembly is applyInPandas, so executors need the
+        # — the sketch assembly is a mapInArrow UDF, so executors need the
         # package zip (scripts/build_pyfiles.sh).
         from pyspark.sql import SparkSession
 
@@ -212,10 +212,7 @@ def main() -> None:
     exact_q99 = duckdb.sql(
         f"SELECT quantile_disc(latency_ms, 0.99) FROM read_parquet('{DATA}/*.parquet')"
     ).fetchone()[0]
-    from scripts.webcorpus_scaling_bench import spec_cores
-
-    sketch_q99 = results[LEVELS[-1]]["q99_latency"]
-    rel_err = abs(sketch_q99 - exact_q99) / abs(exact_q99)
+    from scripts.webcorpus_scaling_bench import headline_level, spec_cores
 
     lo = min(LEVELS, key=spec_cores)
     lo_c, lo_dps = spec_cores(lo), results[lo]["docs_per_sec"]
@@ -227,8 +224,15 @@ def main() -> None:
             / (spec_cores(spec) / lo_c)
         )
 
-    hi = max(LEVELS, key=lambda s: (spec_cores(s), eff_of(s)))
+    hi = headline_level(LEVELS, eff_of)
     eff = eff_of(hi)
+
+    # the sketch is partitioning-invariant: q99 must agree at every level
+    q99s = {spec: results[spec]["q99_latency"] for spec in LEVELS}
+    if len(set(q99s.values())) != 1:
+        raise AssertionError(f"q99 differs across levels: {q99s}")
+    sketch_q99 = results[hi]["q99_latency"]
+    rel_err = abs(sketch_q99 - exact_q99) / abs(exact_q99)
     report = {
         "rows": ROWS,
         "levels": {spec: results[spec] for spec in LEVELS},

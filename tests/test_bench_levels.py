@@ -8,7 +8,11 @@ recorded efficiency numbers, so pin them.
 
 import pytest
 
-from scripts.webcorpus_scaling_bench import _max_partition_bytes, spec_cores
+from scripts.webcorpus_scaling_bench import (
+    _max_partition_bytes,
+    headline_level,
+    spec_cores,
+)
 
 
 def test_spec_cores_forms():
@@ -19,6 +23,14 @@ def test_spec_cores_forms():
     assert spec_cores("local-cluster[1,2,4096]") == 2
     with pytest.raises(ValueError):
         spec_cores("yarn")
+
+
+def test_headline_is_worst_efficiency_at_top_cores():
+    """Two 8-core topologies (one JVM, four JVMs) against a 2-core base:
+    the headline is the worse of the two 8-core readings, not the better."""
+    eff = {"2": 1.0, "local[8]": 0.93, "local-cluster[4,2,4096]": 0.86}
+    assert headline_level(list(eff), eff.get) == "local-cluster[4,2,4096]"
+    assert headline_level(["2", "local[8]"], eff.get) == "local[8]"
 
 
 def test_max_partition_bytes_targets_waves(tmp_path):

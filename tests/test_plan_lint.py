@@ -4,8 +4,8 @@ corpus scale an accidental row-at-a-time PythonUDF or an unintended
 cartesian product is a silent 100x regression. Catch both at plan level.
 
 BatchEvalPython = row-at-a-time Python UDF (forbidden everywhere).
-ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas are the sanctioned
-vectorized operators. CartesianProduct is forbidden; the deliberate
+ArrowEvalPython / MapInPandas / MapInArrow / FlatMapGroupsInPandas are the
+sanctioned vectorized operators. CartesianProduct is forbidden; the deliberate
 all-pairs verifiers express their O(n^2) join with an inequality
 condition, which plans as BroadcastNestedLoopJoin — allowed only for
 them.

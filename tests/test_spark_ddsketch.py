@@ -193,12 +193,7 @@ def test_nulls_and_empty_groups(spark):
     assert rows[None]["count"] == 1.0  # null group key preserved
 
 
-@pytest.mark.parametrize(
-    "build", ["sketch_agg", "ddsketch_jvm_agg", "sketch_finalize", "ddsketch_cdf"]
-)
-def test_global_fold_of_empty_frame_is_empty(spark, build):
-    """A key-less (global) aggregate over an empty frame has no group to
-    fold, so it returns zero rows — not one row of empty-sketch nulls."""
+def _fold_of_empty_frame(spark, build, keys):
     from pyspark.sql import types as T
 
     from ddsketch_ruby_spark.operators.agg import sketch_finalize
@@ -206,15 +201,106 @@ def test_global_fold_of_empty_frame_is_empty(spark, build):
     from ddsketch_ruby_spark.operators.quantiles import ddsketch_cdf
 
     spec = DDSketchSpec(ALPHA)
-    values = spark.createDataFrame([], "value double")
-    states = spark.createDataFrame([], T.StructType(spec.state_fields()))
-    out = {
-        "sketch_agg": lambda: sketch_agg(values, spec, "value"),
-        "ddsketch_jvm_agg": lambda: ddsketch_jvm_agg(values, spec, "value"),
-        "sketch_finalize": lambda: sketch_finalize(states, spec),
-        "ddsketch_cdf": lambda: ddsketch_cdf(values, "value", [1.0]),
-    }[build]()
-    assert out.collect() == []
+    key_fields = [T.StructField(k, T.StringType()) for k in keys]
+    values = spark.createDataFrame(
+        [], T.StructType(key_fields + [T.StructField("value", T.DoubleType())])
+    )
+    states = spark.createDataFrame([], T.StructType(key_fields + spec.state_fields()))
+    return {
+        "sketch_agg": lambda: sketch_agg(values, spec, "value", keys),
+        "ddsketch_jvm_agg": lambda: ddsketch_jvm_agg(values, spec, "value", keys),
+        "sketch_finalize": lambda: sketch_finalize(states, spec, keys),
+        "ddsketch_cdf": lambda: ddsketch_cdf(values, "value", [1.0], keys),
+    }[build]().collect()
+
+
+EMPTY_FOLD_BUILDS = ["sketch_agg", "ddsketch_jvm_agg", "sketch_finalize", "ddsketch_cdf"]
+
+
+@pytest.mark.parametrize("build", EMPTY_FOLD_BUILDS)
+def test_global_fold_of_empty_frame_is_empty(spark, build):
+    """A key-less (global) aggregate over an empty frame has no group to
+    fold, so it returns zero rows — not one row of empty-sketch nulls."""
+    assert _fold_of_empty_frame(spark, build, []) == []
+
+
+@pytest.mark.parametrize("build", EMPTY_FOLD_BUILDS)
+def test_grouped_fold_of_empty_frame_is_empty(spark, build):
+    """A grouped aggregate over an empty frame has no groups: zero rows."""
+    assert _fold_of_empty_frame(spark, build, ["k"]) == []
+
+
+NAN = float("nan")
+# six (g, s) groups: null and NaN double keys, a null string key, plain keys
+KEYED_GROUPS = [(None, "a"), (NAN, "a"), (1.0, None), (1.0, "a"), (-2.5, "b"), (NAN, None)]
+
+
+def _keyed_frame(spark):
+    rows = [
+        (g, s, float(i * 7 + j) * (-1.0) ** j)
+        for i, (g, s) in enumerate(KEYED_GROUPS)
+        for j in range(39)
+    ]
+    return spark.createDataFrame(rows, "g double, s string, v double").repartition(3)
+
+
+def _bits(rows):
+    """Rows as comparable tuples, every double by its exact hex form (so
+    NaN equals NaN and -0.0 differs from 0.0)."""
+
+    def canon(x):
+        if isinstance(x, float):
+            return x.hex()
+        if isinstance(x, (list, tuple)):
+            return tuple(canon(y) for y in x)
+        return x
+
+    return sorted((tuple(canon(x) for x in r) for r in rows), key=repr)
+
+
+def test_nan_and_null_group_keys_stay_apart(spark):
+    """Spark's grouping keeps null and NaN keys as separate groups; the fold
+    returns each group once with its key as it was (NaN stays NaN)."""
+    rows = ddsketch_quantiles(_keyed_frame(spark), "v", ["g", "s"]).collect()
+    assert len(rows) == len(KEYED_GROUPS)
+    assert all(r["count"] == 39 for r in rows)
+    assert _bits((r["g"], r["s"]) for r in rows) == _bits(KEYED_GROUPS)
+
+
+def test_groups_straddling_arrow_batches(spark):
+    """With three-row Arrow batches every group spans several batches; the
+    per-partition fold must return the default-batch results bit for bit."""
+    from pyspark.sql import types as T
+
+    from ddsketch_ruby_spark.operators.agg import sketch_finalize
+    from ddsketch_ruby_spark.operators.rollup import merge_states
+
+    df = _keyed_frame(spark)
+    spec = DDSketchSpec(ALPHA)
+    state_schema = T.StructType(
+        [T.StructField("g", T.DoubleType()), T.StructField("s", T.StringType())]
+        + spec.state_fields()
+    )
+    states = spark.createDataFrame(
+        sketch_agg(df, spec, "v", ["g", "s"], output="state").collect(), state_schema
+    )
+    builds = {
+        "grouped": lambda: ddsketch_quantiles(df, "v", ["g", "s"]),
+        "global": lambda: ddsketch_quantiles(df, "v"),
+        "state": lambda: ddsketch_state(df, "v", ["g", "s"]),
+        "finalize": lambda: sketch_finalize(states, spec, ["g", "s"]),
+        "merge_states": lambda: merge_states(states, spec, ["s"]),
+    }
+    default = {k: _bits(b().collect()) for k, b in builds.items()}
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        small = {k: _bits(b().collect()) for k, b in builds.items()}
+    finally:
+        spark.conf.set(key, before)
+    assert small == default
+    assert len(default["grouped"]) == len(KEYED_GROUPS)
 
 
 def test_jvm_plan_quality(spark, events):
