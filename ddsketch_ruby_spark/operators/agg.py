@@ -1,10 +1,12 @@
 """Two-phase distributed sketch aggregation — the shared execution engine.
 
-Phase 1 (map-side combine): ``mapInPandas`` folds every input partition into
+Phase 1 (map-side combine): ``mapInArrow`` folds every input partition into
 at most one compact state row per group — the Arrow stream is consumed batch
-by batch, so executor memory is O(groups x state), never O(rows). Only the
-needed columns are selected first, so Catalyst prunes the parquet scan down
-to the value/group columns (checked via .explain ReadSchema in tests).
+by batch, so executor memory is O(groups x state), never O(rows). Groups
+follow Spark's grouping equality (``_starts_group``): a null key and a NaN
+key are two groups. Only the needed columns are selected first, so Catalyst
+prunes the parquet scan down to the value/group columns (checked via
+.explain ReadSchema in tests).
 
 Phase 2 (merge): ``fold_groups``, the library's one per-group fold — rows
 hash-partitioned and sorted by the group keys, then one ``mapInArrow`` call
@@ -34,8 +36,8 @@ from __future__ import annotations
 from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,41 +58,41 @@ def _build_partials_fn(
     group_by: list[str],
     value_col: str,
     weight_col: str | None,
-    out_columns: list[str],
+    schema: T.StructType,
 ):
-    """Returns the mapInPandas function: partition batches -> partial rows."""
+    """Returns the mapInArrow function: partition batches -> partial rows.
+    Each batch's key rows are numbered together with the partition's groups
+    so far by ``_group_ids``, so null and NaN keys stay apart as in Spark's
+    ``groupBy``, and each group's rows update its state in input order."""
+    batch_of = _batch_writer(schema, spec.state_fields(), spec.state_to_row)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, object] = {}
-        for pdf in batches:
-            if pdf.empty:
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        keys, states = [], []  # the partition's groups so far: key rows, states
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            if group_by:
-                grouped = pdf.groupby(group_by, sort=False, dropna=False)
-                for key, sub in grouped:
-                    if not isinstance(key, tuple):
-                        key = (key,)
-                    state = acc.get(key)
-                    if state is None:
-                        state = spec.zero()
-                    vals = sub[value_col].to_numpy()
-                    w = sub[weight_col].to_numpy() if weight_col else None
-                    acc[key] = spec.update(state, vals, w)
-            else:
-                state = acc.get(())
-                if state is None:
-                    state = spec.zero()
-                vals = pdf[value_col].to_numpy()
-                w = pdf[weight_col].to_numpy() if weight_col else None
-                acc[()] = spec.update(state, vals, w)
-        if not acc:
-            return
-        rows = []
-        for key, state in acc.items():
-            row = dict(zip(group_by, key))
-            row.update(spec.state_to_row(state))
-            rows.append(row)
-        yield pd.DataFrame(rows, columns=out_columns)
+            vals = batch.column(value_col).to_numpy(zero_copy_only=False)
+            w = batch.column(weight_col).to_numpy(zero_copy_only=False) if weight_col else None
+            if not group_by:
+                states = [spec.update(states[0] if states else spec.zero(), vals, w)]
+                continue
+            new = [batch.column(g) for g in group_by]
+            both = [pa.concat_arrays(p) for p in zip(keys, new)] if states else new
+            ids, first = _group_ids(both)
+            merged = [None] * len(first)
+            for i, state in zip(ids, states):
+                merged[i] = state
+            rows = ids[len(states):]
+            order = np.argsort(rows, kind="stable")
+            cut = np.flatnonzero(np.diff(rows[order])) + 1
+            for run in np.split(order, cut):
+                i = rows[run[0]]
+                state = spec.zero() if merged[i] is None else merged[i]
+                merged[i] = spec.update(state, vals[run], None if w is None else w[run])
+            keys, states = [k.take(first) for k in both], merged
+        if states:
+            yield batch_of(keys, states)
 
     return build
 
@@ -114,6 +116,22 @@ def _output_fields(spec: SketchSpec, output: str):
     raise ValueError("output must be 'result' or 'state'")
 
 
+def _batch_writer(schema: T.StructType, fields: list[T.StructField], emit):
+    """``batch_of(keys, states)``: one Arrow batch of ``schema``, the key
+    columns followed by ``emit(state)``'s ``fields`` for every state."""
+    out_types = to_arrow_schema(T.StructType(fields)).types
+
+    def batch_of(keys: list[pa.Array], states: list) -> pa.RecordBatch:
+        rows = [emit(s) for s in states]
+        outs = [  # from_pandas=True: a NaN result is emitted as null
+            pa.array([r[f.name] for r in rows], type=t, from_pandas=True)
+            for f, t in zip(fields, out_types)
+        ]
+        return pa.RecordBatch.from_arrays(keys + outs, names=schema.names)
+
+    return batch_of
+
+
 def _starts_group(keys: list[pa.Array], n: int) -> np.ndarray:
     """``out[i]``: row ``i`` of the ``n`` key rows starts a new group under
     Spark's grouping equality — null equals null and no value, NaN equals
@@ -127,11 +145,28 @@ def _starts_group(keys: list[pa.Array], n: int) -> np.ndarray:
             differ = (v[1:] != v[:-1]) & ~(np.isnan(v[1:]) & np.isnan(v[:-1]))
         elif pa.types.is_struct(col.type):
             differ = _starts_group(col.flatten(), n)[1:]
-        else:  # Python equality: exact for integers, strings, dates, decimals
-            x = col.to_pylist()
+        elif pa.types.is_nested(col.type) or pa.types.is_null(col.type):
+            x = col.to_pylist()  # Python equality: Arrow cannot compare these
             differ = np.array([p != q for p, q in zip(x[1:], x[:-1])], dtype=bool)
+        else:  # Arrow equality: exact for integers, strings, dates, decimals
+            differ = pc.not_equal(col[1:], col[:-1]).fill_null(False)
+            differ = differ.to_numpy(zero_copy_only=False)
         new[1:] |= (differ & valid[1:]) | (valid[1:] != valid[:-1])
     return new
+
+
+def _group_ids(keys: list[pa.Array]) -> tuple[np.ndarray, np.ndarray]:
+    """``(ids, first)``: ``ids[i]`` numbers key row ``i``'s group under
+    ``_starts_group``'s equality and ``first[g]`` is group ``g``'s first row.
+    Arrow's sort puts equal keys side by side: NaN after every number, null
+    last, 0.0 beside -0.0."""
+    table = pa.table(keys, names=[str(i) for i in range(len(keys))])
+    order = pc.sort_indices(table, [(c, "ascending") for c in table.column_names])
+    order = order.to_numpy()
+    starts = _starts_group([k.take(order) for k in keys], len(order))
+    ids = np.empty(len(order), dtype=np.int64)
+    ids[order] = np.cumsum(starts) - 1
+    return ids, order[starts]
 
 
 def fold_groups(
@@ -149,16 +184,8 @@ def fold_groups(
     is the global fold: one partition, one group (none for empty input)."""
     fields, emit = _output_fields(spec, output)
     schema = T.StructType(_group_fields(df, group_by) + fields)
-    out_types = to_arrow_schema(T.StructType(fields)).types
     names = [c for c in df.columns if c not in group_by]
-
-    def batch_of(keys: list[pa.Array], states: list) -> pa.RecordBatch:
-        rows = [emit(s) for s in states]
-        outs = [  # from_pandas=True: a NaN result is emitted as null
-            pa.array([r[f.name] for r in rows], type=t, from_pandas=True)
-            for f, t in zip(fields, out_types)
-        ]
-        return pa.RecordBatch.from_arrays(keys + outs, names=schema.names)
+    batch_of = _batch_writer(schema, fields, emit)
 
     def fold_carried(parts: list[dict]) -> object:
         return to_state(spec, {c: np.concatenate([p[c] for p in parts]) for c in names})
@@ -208,8 +235,8 @@ def sketch_partials(
     needed = group_by + [value_col] + ([weight_col] if weight_col else [])
     src = df.select(*needed)  # column pruning reaches the scan
     schema = T.StructType(_group_fields(df, group_by) + spec.state_fields())
-    fn = _build_partials_fn(spec, group_by, value_col, weight_col, schema.names)
-    return src.mapInPandas(fn, schema=schema)
+    fn = _build_partials_fn(spec, group_by, value_col, weight_col, schema)
+    return src.mapInArrow(fn, schema=schema)
 
 
 def sketch_agg(

@@ -178,8 +178,9 @@ def histogram_rows(
 ) -> DataFrame:
     """The raw bucket-histogram rows (group..., __zone, __key, __cnt,
     __svw, __minv, __maxv) — the sketch's shuffle-time representation.
-    Exposed so streaming queries can run the same JVM aggregation and
-    assemble sketches downstream (streaming/sketch_stream.py)."""
+    Exposed so streaming queries (streaming/sketch_stream.py) and the
+    resumable build (plans/lineage.py) can run the same JVM aggregation and
+    assemble sketches downstream."""
     return _histogram(df, spec, value_col, list(group_by), weight_col)
 
 

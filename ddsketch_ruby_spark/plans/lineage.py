@@ -1,12 +1,53 @@
 """Checkpointed, resumable sketch builds with per-split lineage + metrics
 (north rule: "resumable from checkpoint with per-partition lineage").
 
-Unit of work = one input file (parquet split). For each unit we write,
-atomically (temp + rename), one partial-state parquet plus a lineage row
-(split id, values_sketched, wall seconds, finished-at). Resume = list pending units,
-anti-join against completed lineage, process only the remainder, then merge
-all persisted partials. A killed job therefore never recomputes a finished
-split, and the final merge is a pure fold over the checkpoint directory.
+Unit of work = one input file (parquet split). Each split's partial is one
+Spark job that writes the partial to a temp directory, then a lineage row
+(split id, input, values_sketched, sketch_bytes, wall seconds, finished-at)
+into the same directory, then publishes it with one directory rename.
+Resume = list pending splits, skip the published ones, process the rest,
+then merge all published partials. A killed job never recomputes a
+finished split, and the final merge is a pure fold over the checkpoint.
+
+Layout (version 2)::
+
+    <checkpoint_dir>/_layout.json          {"version": 2, "partial": FORMAT,
+                                            "mapping": {...}}  (histogram only)
+    <checkpoint_dir>/partials/<split>/     part files + _lineage.json
+    <checkpoint_dir>/_tmp/<run>.lock       flock-held while run() is live
+    <checkpoint_dir>/_tmp/<run>/<split>/   partials still being written
+
+Commit point: ``os.rename(_tmp/<run>/<split>, partials/<split>)``. A split
+is complete iff ``partials/<split>/_lineage.json`` exists, and the lineage
+file is written before the rename, so a kill at any instruction leaves the
+split either published whole or pending with an orphaned temp directory;
+``run()`` sweeps the temp directories of runs whose lock is no longer held.
+When two ``run()`` calls race on one split, the second rename fails (the
+target is a non-empty directory): the loser drops its temp and does not
+count the split. The ``_`` prefix keeps ``_lineage.json`` out of Spark's
+parquet reader.
+
+Partial format: with a ``DDSketchSpec`` a partial is the split's raw
+``ddsketch_jvm.histogram_rows`` ("histogram"): the split job is codegen
+only, with no Python stage, and ``values_sketched`` comes from an
+``Observation`` (``sum(__cnt)``) on that same write. Histogram rows
+re-merge by addition and JVM keys equal kernel keys, so ``result()`` =
+``assemble_histogram`` over every partial equals a single-shot build bin for
+bin (``sum`` up to summation order), and collapsing happens once, at
+``result()``. A partial holds at most
+groups x buckets rows, whatever the split's row count. Every other spec
+persists ``sketch_agg(output="state")`` rows ("state"), counted by an
+``Observation`` on ``sum(count)``, and ``result()`` is ``sketch_finalize``.
+A checkpoint directory holds one format only: the layout marker is checked
+on open, and an unversioned (pre-marker, ``lineage/``) directory is refused.
+Histogram rows carry no mapping, so the marker pins the key mapping's gamma,
+interpolation and offset, and a spec that keys values differently is refused
+(the state format's DDSketch rows carry ``gamma`` themselves).
+
+Histogram partials drop null and NaN values before grouping, so a group with
+no sketchable value in any split is absent from ``result()``, as in
+``ddsketch_jvm_agg``; ``sketch_agg`` and the state format return it as a
+count-0 row.
 
 At cluster scale the same design holds with units = Iceberg file-scan
 tasks; the checkpoint dir lives on the shared FS / object store (rename
@@ -15,20 +56,28 @@ becomes a manifest commit).
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import glob as globmod
 import json
 import os
+import shutil
 import time
 import uuid
-from typing import Callable, Iterable
+from typing import Callable, Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.agg import sketch_agg, sketch_finalize
+from ..operators.ddsketch_jvm import assemble_histogram, histogram_rows
 from ..sketches.base import SketchSpec
+from ..sketches.ddsketch_spec import DDSketchSpec
 
 __all__ = ["CheckpointedSketchBuild"]
+
+LAYOUT_VERSION = 2
+LINEAGE = "_lineage.json"
 
 
 class CheckpointedSketchBuild:
@@ -56,21 +105,75 @@ class CheckpointedSketchBuild:
         (``prepare_web_corpus``) composes correctly, but cross-row
         reductions (e.g. ``latest_capture`` snapshot dedup) would apply
         per split, not globally — run those as a separate materialized
-        pass before the checkpointed build."""
+        pass before the checkpointed build.
+
+        Raises ``ValueError`` when ``checkpoint_dir`` was written in
+        another layout version or partial format."""
         self.spark = spark
         self.spec = spec
         self.dir = checkpoint_dir
         self.value_col = value_col
         self.group_by = list(group_by)
         self.transform = transform
+        self.format = "histogram" if isinstance(spec, DDSketchSpec) else "state"
+        self._open_layout()
+
+    def _open_layout(self) -> None:
+        marker = os.path.join(self.dir, "_layout.json")
+        want = {"version": LAYOUT_VERSION, "partial": self.format}
+        if self.format == "histogram":
+            # raw bucket keys mean nothing without the mapping that made them
+            m = self.spec.zero().mapping
+            want["mapping"] = {
+                "gamma": m.gamma,
+                "interpolation": m.interpolation,
+                "offset": m.offset,
+            }
+        if os.path.exists(marker):
+            with open(marker) as f:
+                have = json.load(f)
+            if have.get("version") != LAYOUT_VERSION:
+                raise ValueError(
+                    f"checkpoint {self.dir} has layout version "
+                    f"{have.get('version')}, this build reads version "
+                    f"{LAYOUT_VERSION}: rebuild it in a fresh directory"
+                )
+            if have.get("partial") != self.format:
+                raise ValueError(
+                    f"checkpoint {self.dir} holds {have.get('partial')!r} "
+                    f"partials, this spec writes {self.format!r} partials: "
+                    "formats never mix, use a fresh directory"
+                )
+            if have.get("mapping") != want.get("mapping"):
+                raise ValueError(
+                    f"checkpoint {self.dir} holds bucket keys of the mapping "
+                    f"{have.get('mapping')}, this spec maps values with "
+                    f"{want.get('mapping')}: keys of two mappings never merge, "
+                    "use a fresh directory"
+                )
+            return
+        if os.path.isdir(os.path.join(self.dir, "lineage")):
+            raise ValueError(
+                f"checkpoint {self.dir} has the unversioned layout "
+                "(lineage/ beside partials/), which cannot be resumed: "
+                "rebuild it in a fresh directory"
+            )
         os.makedirs(os.path.join(self.dir, "partials"), exist_ok=True)
-        os.makedirs(os.path.join(self.dir, "lineage"), exist_ok=True)
+        tmp = f"{marker}.{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as f:
+            json.dump(want, f)
+        os.replace(tmp, marker)
 
     # -- lineage ------------------------------------------------------------
+    def _published(self) -> list[str]:
+        """Published partial directories: the ones holding a lineage file."""
+        pattern = os.path.join(self.dir, "partials", "*", LINEAGE)
+        return sorted(os.path.dirname(p) for p in globmod.glob(pattern))
+
     def completed_splits(self) -> dict[str, dict]:
         done = {}
-        for path in globmod.glob(os.path.join(self.dir, "lineage", "*.json")):
-            with open(path) as f:
+        for d in self._published():
+            with open(os.path.join(d, LINEAGE)) as f:
                 row = json.load(f)
             done[row["split"]] = row
         return done
@@ -81,70 +184,105 @@ class CheckpointedSketchBuild:
 
     # -- build ---------------------------------------------------------------
     def run(self, input_paths: list[str], fail_after: int | None = None) -> int:
-        """Process pending splits; returns the number processed this call.
+        """Process pending splits; returns the number this call published.
         ``fail_after`` aborts after N splits (test hook simulating a kill)."""
         done = self.completed_splits()
         pending = [p for p in input_paths if self._split_id(p) not in done]
         processed = 0
-        for path in pending:
-            if fail_after is not None and processed >= fail_after:
-                return processed
-            sid = self._split_id(path)
-            t0 = time.monotonic()
-            df = self.spark.read.parquet(path)
-            if self.transform is not None:
-                df = self.transform(df)
-            partial = sketch_agg(
-                df, self.spec, self.value_col, self.group_by, output="state"
-            )
-            out = os.path.join(self.dir, "partials", sid)
-            tmp = out + f".tmp-{uuid.uuid4().hex[:8]}"
-            partial.write.mode("overwrite").parquet(tmp)
-            os.rename(tmp, out)  # atomic publish
-            sketch_bytes = sum(
-                os.path.getsize(os.path.join(out, f))
-                for f in os.listdir(out)
-                if f.endswith(".parquet")
-            )
-            # the metric comes from the persisted partial states
-            # (sum of state counts = values actually sketched, i.e.
-            # non-null inputs), NOT a second df.count() scan of the input
-            # — at corpus scale that doubled the I/O of the whole build.
-            # Named values_sketched (not "rows") precisely because it
-            # differs from the input row count on inputs containing
-            # nulls; reconcile against source row counts with a null-
-            # aware count, not this field. The partial parquet is a few
-            # rows, so this read is footer-sized.
-            n_rows = self._partial_row_count(out)
-            lineage_row = {
-                "split": sid,
-                "input": path,
-                "values_sketched": n_rows,
-                "sketch_bytes": sketch_bytes,
-                "wall_sec": round(time.monotonic() - t0, 3),
-                "finished_at": time.time(),
-            }
-            ltmp = os.path.join(self.dir, "lineage", f".{sid}.tmp")
-            with open(ltmp, "w") as f:
-                json.dump(lineage_row, f)
-            os.rename(ltmp, os.path.join(self.dir, "lineage", f"{sid}.json"))
-            processed += 1
+        with self._run_dir() as tmp_root:
+            for path in pending:
+                if fail_after is not None and processed >= fail_after:
+                    break
+                processed += self._build_split(path, tmp_root)
         return processed
 
-    def _partial_row_count(self, partial_dir: str) -> float | None:
-        """Values aggregated into this partial, summed from the state rows'
-        ``count`` field (present on every spec that tracks cardinality —
-        DDSketch/KLL/t-digest); None when the spec's state carries no
-        count (the metric is then simply absent from lineage)."""
-        state_names = {f.name for f in self.spec.state_fields()}
-        if "count" not in state_names:
-            return None
-        row = (
-            self.spark.read.parquet(partial_dir)
-            .agg(F.sum("count").alias("n"))
-            .collect()[0]
-        )
-        return float(row["n"]) if row["n"] is not None else 0.0
+    @contextlib.contextmanager
+    def _run_dir(self) -> Iterator[str]:
+        """This run's temp directory, guarded by a flock that the OS drops
+        when the process dies. Sweeps first: a temp directory whose lock
+        nobody holds belongs to a killed run."""
+        root = os.path.join(self.dir, "_tmp")
+        os.makedirs(root, exist_ok=True)
+        for lock in globmod.glob(os.path.join(root, "*.lock")):
+            with contextlib.suppress(FileNotFoundError), open(lock) as f:
+                try:
+                    fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                except BlockingIOError:
+                    continue  # a live run
+                shutil.rmtree(lock[: -len(".lock")], ignore_errors=True)
+                os.unlink(lock)
+        while True:
+            run = os.path.join(root, uuid.uuid4().hex[:12])
+            f = open(run + ".lock", "w")
+            fcntl.flock(f, fcntl.LOCK_EX)
+            # a sweep may have unlinked the file between open and flock
+            if os.path.exists(run + ".lock"):
+                break
+            f.close()
+        try:
+            os.makedirs(run)
+            yield run
+            shutil.rmtree(run)
+            os.unlink(run + ".lock")
+        finally:
+            # on an exception the temp stays for the next sweep, as after a kill
+            f.close()
+
+    def _partial(self, df: DataFrame) -> tuple[DataFrame, str | None]:
+        """The split's partial frame and the column whose sum is
+        ``values_sketched`` (None when the spec's state has no count)."""
+        if self.format == "histogram":
+            return histogram_rows(df, self.spec, self.value_col, self.group_by), "__cnt"
+        state = sketch_agg(df, self.spec, self.value_col, self.group_by, output="state")
+        names = {f.name for f in self.spec.state_fields()}
+        return state, "count" if "count" in names else None
+
+    def _build_split(self, path: str, tmp_root: str) -> int:
+        """Build, write and publish one split; 1 if this call published it,
+        0 if a concurrent run published it first."""
+        sid = self._split_id(path)
+        t0 = time.monotonic()
+        df = self.spark.read.parquet(path)
+        if self.transform is not None:
+            df = self.transform(df)
+        partial, count_col = self._partial(df)
+        # values_sketched (non-null, non-NaN values; NOT the input row
+        # count) is observed on the write job itself: no second job
+        if count_col is not None:
+            obs = Observation()
+            partial = partial.observe(obs, F.sum(count_col).alias("n"))
+        tmp = os.path.join(tmp_root, sid)
+        partial.write.parquet(tmp)
+        self._step("written")
+        lineage_row = {
+            "split": sid,
+            "input": path,
+            "values_sketched": None if count_col is None else float(obs.get["n"] or 0),
+            "sketch_bytes": sum(
+                os.path.getsize(os.path.join(tmp, f))
+                for f in os.listdir(tmp)
+                if f.endswith(".parquet")
+            ),
+            "wall_sec": round(time.monotonic() - t0, 3),
+            "finished_at": time.time(),
+        }
+        with open(os.path.join(tmp, LINEAGE), "w") as f:
+            json.dump(lineage_row, f)
+        self._step("lineage")
+        out = os.path.join(self.dir, "partials", sid)
+        try:
+            os.rename(tmp, out)  # the commit point
+        except OSError:
+            if not os.path.exists(os.path.join(out, LINEAGE)):
+                raise
+            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+            return 0
+        self._step("published")
+        return 1
+
+    def _step(self, name: str) -> None:
+        """Step boundary inside a split's commit ("written", "lineage",
+        "published"); a no-op that crash tests patch to raise."""
 
     def is_complete(self, input_paths: list[str]) -> bool:
         done = self.completed_splits()
@@ -152,11 +290,8 @@ class CheckpointedSketchBuild:
 
     # -- final merge ------------------------------------------------------------
     def result(self, output: str = "result") -> DataFrame:
-        """Merge all persisted partials into the final per-group answer."""
-        partial_dirs = sorted(
-            d
-            for d in globmod.glob(os.path.join(self.dir, "partials", "*"))
-            if not d.endswith(".tmp") and ".tmp-" not in d
-        )
-        partials = self.spark.read.parquet(*partial_dirs)
+        """Merge all published partials into the final per-group answer."""
+        partials = self.spark.read.parquet(*self._published())
+        if self.format == "histogram":
+            return assemble_histogram(partials, self.spec, self.group_by, output)
         return sketch_finalize(partials, self.spec, self.group_by, output)

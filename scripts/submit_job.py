@@ -7,8 +7,8 @@ Ship with:
       scripts/submit_job.py --input <parquet-or-iceberg> \
       --checkpoint /shared/ckpt --value-expr "length(text)" --group-by lang
 
-The script enumerates input splits, skips splits already recorded in the
-checkpoint lineage, processes the remainder, and writes the merged
+The script enumerates input splits, skips splits already published in the
+checkpoint, processes the remainder, and writes the merged
 per-group quantiles — a kill at any point resumes without recomputation.
 """
 

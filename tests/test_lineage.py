@@ -4,12 +4,17 @@
 import glob
 import json
 import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.sql import functions as F
 
 from ddsketch_ruby_spark.operators.agg import sketch_agg
 from ddsketch_ruby_spark.plans.lineage import CheckpointedSketchBuild
 from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
+from ddsketch_ruby_spark.sketches.kll import KLLSpec
+from ddsketch_ruby_spark.sketches.tdigest import TDigestSpec
 
 
 @pytest.fixture()
@@ -130,32 +135,304 @@ def test_lineage_rows_have_metrics(spark, tmp_path, splits):
     d = str(tmp_path / "ckpt_metrics")
     b = CheckpointedSketchBuild(spark, spec, d, "value", [])
     b.run(splits[:1])
-    rows = [json.load(open(p)) for p in glob.glob(os.path.join(d, "lineage", "*.json"))]
+    rows = list(b.completed_splits().values())
     assert len(rows) == 1
-    assert rows[0]["values_sketched"] > 0
+    assert rows[0]["split"] == "split_0" and rows[0]["input"] == splits[0]
+    assert rows[0]["values_sketched"] == spark.read.parquet(splits[0]).count()
     assert rows[0]["sketch_bytes"] > 0
     assert rows[0]["wall_sec"] > 0
     assert "finished_at" in rows[0]
 
 
 def test_no_second_input_scan_for_lineage_rows(spark, tmp_path, splits, monkeypatch):
-    """The lineage row count must come from the persisted partial states,
+    """The lineage row count must come from the split's own write job,
     never from a second df.count() scan of the input (which doubles build
     I/O at corpus scale). Proven by making DataFrame.count explode: run()
     must succeed without ever calling it."""
-    import pyspark.sql
+    n = spark.read.parquet(splits[0]).count()
 
     def boom(self):
         raise AssertionError("DataFrame.count() called during lineage build")
 
-    monkeypatch.setattr(pyspark.sql.DataFrame, "count", boom)
+    monkeypatch.setattr(type(spark.range(1)), "count", boom)
     spec = DDSketchSpec(0.01, include_stats=True, quantiles={"q50": 0.5})
     b = CheckpointedSketchBuild(
         spark, spec, str(tmp_path / "ck"), "value", ["event_type"]
     )
     assert b.run(splits[:1]) == 1
-    row = [
-        json.load(open(p))
-        for p in glob.glob(str(tmp_path / "ck" / "lineage" / "*.json"))
-    ][0]
-    assert row["values_sketched"] > 0
+    (row,) = b.completed_splits().values()
+    assert row["values_sketched"] == n
+
+
+def test_ddsketch_split_job_has_no_python_stage(spark, tmp_path, splits, monkeypatch):
+    """With a DDSketchSpec every split is one codegen-only job: no Python
+    map or group stage, and no kernel-path partials."""
+    from ddsketch_ruby_spark.operators import agg
+
+    def boom(*args, **kwargs):
+        raise AssertionError("Python stage in a DDSketch split job")
+
+    frame, grouped = type(spark.range(1)), type(spark.range(1).groupBy())
+    monkeypatch.setattr(frame, "mapInPandas", boom)
+    monkeypatch.setattr(frame, "mapInArrow", boom)
+    monkeypatch.setattr(grouped, "applyInPandas", boom)
+    monkeypatch.setattr(agg, "sketch_partials", boom)
+    b = CheckpointedSketchBuild(
+        spark, DDSketchSpec(), str(tmp_path / "ck"), "value", ["event_type"]
+    )
+    assert b.run(splits) == 4
+    assert b.is_complete(splits)
+
+
+@pytest.fixture()
+def holey_splits(spark, tmp_path, sf_dir):
+    """3 splits whose values are partly null and NaN, then one split whose
+    values are all null."""
+    src = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    value = (
+        F.when(F.col("event_id") % 7 == 0, F.lit(None))
+        .when(F.col("event_id") % 11 == 0, F.lit(float("nan")))
+        .otherwise(F.col("value"))
+    )
+    holey = src.withColumn("value", value)
+    frames = [holey.filter(f"event_id % 3 = {i}") for i in range(3)]
+    frames.append(src.limit(60).withColumn("value", F.lit(None).cast("double")))
+    paths = []
+    for i, df in enumerate(frames):
+        p = str(tmp_path / f"holey_{i}")
+        df.coalesce(1).write.parquet(p)
+        paths.append(p)
+    return paths
+
+
+def _sketchable(spark, path: str) -> int:
+    return spark.read.parquet(path).where("value IS NOT NULL AND NOT isnan(value)").count()
+
+
+@pytest.mark.parametrize(
+    "spec", [DDSketchSpec(0.01), KLLSpec(k=200)], ids=["histogram", "state"]
+)
+def test_values_sketched_is_the_exact_non_null_count(spark, tmp_path, holey_splits, spec):
+    b = CheckpointedSketchBuild(spark, spec, str(tmp_path / "ck"), "value", ["event_type"])
+    assert b.run(holey_splits) == 4
+    done = b.completed_splits()
+    for p in holey_splits:
+        row = done[os.path.basename(p)]
+        assert row["values_sketched"] == _sketchable(spark, p), p
+    assert done["holey_3"]["values_sketched"] == 0
+
+
+def test_all_null_split_resumes_to_single_shot(spark, tmp_path, holey_splits):
+    spec = DDSketchSpec(0.01, include_stats=True, quantiles={"q50": 0.5, "q99": 0.99})
+    d = str(tmp_path / "ck")
+    killed = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
+    assert killed.run(holey_splits[::-1], fail_after=1) == 1  # the all-null split
+    resumed = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
+    assert resumed.run(holey_splits) == 3
+    got = _by(resumed.result(), "event_type")
+    single = sketch_agg(spark.read.parquet(*holey_splits), spec, "value", ["event_type"])
+    _assert_bit_equal(got, _by(single, "event_type"), ("count", "q50", "q99", "min", "max"))
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        KLLSpec(k=64, quantiles={"q50": 0.5, "q99": 0.99}),
+        TDigestSpec(delta=50, quantiles={"q50": 0.5, "q99": 0.99}),
+    ],
+    ids=["kll", "tdigest"],
+)
+def test_state_partials_resume_to_single_shot(spark, tmp_path, splits, spec):
+    """Specs other than DDSketch keep sketch_agg(output="state") partials."""
+
+    def build(d):
+        d = str(tmp_path / d)
+        return CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
+
+    ref = build("ref")
+    assert ref.run(splits) == 4
+    killed = build("ck")
+    assert killed.run(splits, fail_after=2) == 2
+    resumed = build("ck")
+    assert resumed.run(splits) == 2
+    want = _by(ref.result(), "event_type")
+    got = _by(resumed.result(), "event_type")
+    _assert_bit_equal(got, want, [f.name for f in spec.result_fields()])
+
+
+class Killed(Exception):
+    pass
+
+
+@pytest.mark.parametrize("step", ["written", "lineage", "published"])
+def test_kill_at_each_commit_step_resumes_to_single_shot(
+    spark, tmp_path, splits, monkeypatch, step
+):
+    """A kill between any two steps of a split's commit (after the partial
+    write, after the lineage file, after the publishing rename) leaves a
+    checkpoint that resumes to the single-shot answer."""
+    spec = DDSketchSpec(0.01, include_stats=True, quantiles={"q50": 0.5})
+    d = str(tmp_path / "ck")
+    build = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
+    assert build.run(splits[:1]) == 1
+
+    def kill(self, name):
+        if name == step:
+            raise Killed(name)
+
+    with monkeypatch.context() as m:
+        m.setattr(CheckpointedSketchBuild, "_step", kill)
+        with pytest.raises(Killed):
+            build.run(splits)
+    published = step == "published"
+    assert len(build.completed_splits()) == 1 + published
+    orphans = glob.glob(os.path.join(d, "_tmp", "*", "*"))
+    assert len(orphans) == (0 if published else 1)
+
+    resumed = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
+    assert resumed.run(splits) == 3 - published
+    assert resumed.is_complete(splits)
+    assert os.listdir(os.path.join(d, "_tmp")) == []  # the orphan was swept
+    got = _by(resumed.result(), "event_type")
+    single = sketch_agg(spark.read.parquet(*splits), spec, "value", ["event_type"])
+    _assert_bit_equal(got, _by(single, "event_type"), ("count", "q50", "min", "max"))
+
+
+def test_concurrent_runs_never_count_a_split_twice(spark, tmp_path, splits, monkeypatch):
+    """Two run() calls over the same pending splits: both write every split
+    and meet before publishing it, so every rename is a race; each split is
+    counted by exactly one winner and the loser's temp is dropped."""
+    barrier = threading.Barrier(2, timeout=300)
+
+    def meet(self, name):
+        if name == "lineage":
+            barrier.wait()
+
+    monkeypatch.setattr(CheckpointedSketchBuild, "_step", meet)
+    spec = DDSketchSpec(0.01, include_stats=True, quantiles={"q50": 0.5})
+    d = str(tmp_path / "ck")
+    builds = [
+        CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"]) for _ in range(2)
+    ]
+    with ThreadPoolExecutor(2) as pool:
+        counts = list(pool.map(lambda b: b.run(splits), builds))
+    assert sum(counts) == 4
+    assert sorted(builds[0].completed_splits()) == [f"split_{i}" for i in range(4)]
+    assert os.listdir(os.path.join(d, "_tmp")) == []
+    got = _by(builds[1].result(), "event_type")
+    single = sketch_agg(spark.read.parquet(*splits), spec, "value", ["event_type"])
+    _assert_bit_equal(got, _by(single, "event_type"), ("count", "q50", "min", "max"))
+
+
+def test_unversioned_checkpoint_is_refused(spark, tmp_path):
+    d = tmp_path / "old"
+    (d / "partials" / "split_0").mkdir(parents=True)
+    (d / "lineage").mkdir()
+    (d / "lineage" / "split_0.json").write_text(json.dumps({"split": "split_0"}))
+    with pytest.raises(ValueError, match="unversioned layout"):
+        CheckpointedSketchBuild(spark, DDSketchSpec(), str(d), "value")
+
+
+def test_other_layout_version_is_refused(spark, tmp_path):
+    d = tmp_path / "future"
+    d.mkdir()
+    (d / "_layout.json").write_text(json.dumps({"version": 3, "partial": "histogram"}))
+    with pytest.raises(ValueError, match="layout version 3"):
+        CheckpointedSketchBuild(spark, DDSketchSpec(), str(d), "value")
+
+
+def test_partial_format_mismatch_is_refused(spark, tmp_path, splits):
+    d = str(tmp_path / "ck")
+    b = CheckpointedSketchBuild(spark, DDSketchSpec(), d, "value", ["event_type"])
+    assert b.run(splits[:1]) == 1
+    with pytest.raises(ValueError, match="'histogram' partials.*'state' partials"):
+        CheckpointedSketchBuild(spark, KLLSpec(), d, "value", ["event_type"])
+    # and the other way round
+    d2 = str(tmp_path / "ck2")
+    CheckpointedSketchBuild(spark, TDigestSpec(), d2, "value", ["event_type"])
+    with pytest.raises(ValueError, match="'state' partials.*'histogram' partials"):
+        CheckpointedSketchBuild(spark, DDSketchSpec(), d2, "value", ["event_type"])
+
+
+@pytest.mark.parametrize(
+    "other",
+    [
+        DDSketchSpec(0.02),
+        DDSketchSpec(0.01, mapping="cubic"),
+        DDSketchSpec(0.01, mapping_offset=3.0),
+    ],
+    ids=["alpha", "interpolation", "offset"],
+)
+def test_key_mapping_mismatch_is_refused(spark, tmp_path, splits, other):
+    """Histogram partials are raw bucket keys: resuming them under another
+    key mapping would mis-read every key, so it is refused."""
+    d = str(tmp_path / "ck")
+    b = CheckpointedSketchBuild(spark, DDSketchSpec(0.01), d, "value", ["event_type"])
+    assert b.run(splits[:1]) == 1
+    with pytest.raises(ValueError, match="keys of two mappings never merge"):
+        CheckpointedSketchBuild(spark, other, d, "value", ["event_type"])
+
+
+def test_same_mapping_other_store_resumes_to_single_shot(spark, tmp_path, splits):
+    """Keys do not depend on the store or the quantiles asked for: a spec
+    that changes only those resumes and equals its own single-shot build."""
+    d = str(tmp_path / "ck")
+    first = CheckpointedSketchBuild(spark, DDSketchSpec(0.01), d, "value", ["event_type"])
+    assert first.run(splits, fail_after=2) == 2
+    spec = DDSketchSpec(0.01, bin_limit=64, quantiles={"q10": 0.1})
+    resumed = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
+    assert resumed.run(splits) == 2
+    got = _by(resumed.result(), "event_type")
+    single = sketch_agg(spark.read.parquet(*splits), spec, "value", ["event_type"])
+    _assert_bit_equal(got, _by(single, "event_type"), ("count", "q10", "min", "max"))
+
+
+def test_group_without_values_in_any_split(spark, tmp_path):
+    """A group whose values are null or NaN in every split: the histogram
+    format drops it, as ddsketch_jvm_agg does, while the state format
+    returns it as a count-0 row, as sketch_agg does. Every other group
+    equals the single-shot build."""
+    from ddsketch_ruby_spark.operators.ddsketch_jvm import ddsketch_jvm_agg
+
+    rows = [("a", float(i + 1)) for i in range(20)]
+    rows += [("b", None), ("b", float("nan")), ("c", None)]
+    src = spark.createDataFrame(rows, "g string, value double")
+    paths = []
+    for i in range(2):
+        p = str(tmp_path / f"split_{i}")
+        src.coalesce(1).write.parquet(p)
+        paths.append(p)
+    union = spark.read.parquet(*paths)
+    fields = ("count", "q50", "min", "max")
+
+    spec = DDSketchSpec(0.01, quantiles={"q50": 0.5})
+    d = str(tmp_path / "ck_hist")
+    assert CheckpointedSketchBuild(spark, spec, d, "value", ["g"]).run(paths, fail_after=1) == 1
+    resumed = CheckpointedSketchBuild(spark, spec, d, "value", ["g"])
+    assert resumed.run(paths) == 1
+    got = _by(resumed.result(), "g")
+    assert set(got) == {"a"}
+    _assert_bit_equal(got, _by(ddsketch_jvm_agg(union, spec, "value", ["g"]), "g"), fields)
+    single = _by(sketch_agg(union, spec, "value", ["g"]), "g")
+    assert single["b"]["count"] == single["c"]["count"] == 0
+    _assert_bit_equal(got, {"a": single["a"]}, fields)
+
+    kll = KLLSpec(k=64, quantiles={"q50": 0.5})
+    d = str(tmp_path / "ck_state")
+    assert CheckpointedSketchBuild(spark, kll, d, "value", ["g"]).run(paths, fail_after=1) == 1
+    resumed = CheckpointedSketchBuild(spark, kll, d, "value", ["g"])
+    assert resumed.run(paths) == 1
+    got = _by(resumed.result(), "g")
+    assert got["b"]["count"] == got["c"]["count"] == 0
+    _assert_bit_equal(got, _by(sketch_agg(union, kll, "value", ["g"]), "g"), ("count", "q50"))
+
+
+def _by(df, key: str) -> dict:
+    return {r[key]: r.asDict() for r in df.collect()}
+
+
+def _assert_bit_equal(got: dict, want: dict, fields) -> None:
+    assert set(got) == set(want) and got
+    for k in got:
+        for f in fields:
+            assert got[k][f] == want[k][f], (k, f, got[k][f], want[k][f])

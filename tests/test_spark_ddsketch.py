@@ -267,6 +267,15 @@ def test_nan_and_null_group_keys_stay_apart(spark):
     assert _bits((r["g"], r["s"]) for r in rows) == _bits(KEYED_GROUPS)
 
 
+def test_kernel_path_nan_and_null_group_keys_stay_apart(spark):
+    """The kernel path's phase 1 (per-partition partials) groups like Spark
+    too: 39 null-keyed and 39 NaN-keyed rows are two groups, not one of 78."""
+    rows = sketch_agg(_keyed_frame(spark), DDSketchSpec(ALPHA), "v", ["g", "s"]).collect()
+    assert len(rows) == len(KEYED_GROUPS)
+    assert all(r["count"] == 39 for r in rows)
+    assert _bits((r["g"], r["s"]) for r in rows) == _bits(KEYED_GROUPS)
+
+
 def test_groups_straddling_arrow_batches(spark):
     """With three-row Arrow batches every group spans several batches; the
     per-partition fold must return the default-batch results bit for bit."""
@@ -286,6 +295,7 @@ def test_groups_straddling_arrow_batches(spark):
     )
     builds = {
         "grouped": lambda: ddsketch_quantiles(df, "v", ["g", "s"]),
+        "kernel": lambda: sketch_agg(df, spec, "v", ["g", "s"]),
         "global": lambda: ddsketch_quantiles(df, "v"),
         "state": lambda: ddsketch_state(df, "v", ["g", "s"]),
         "finalize": lambda: sketch_finalize(states, spec, ["g", "s"]),

@@ -4,12 +4,13 @@ artifacts — build_pyfiles.sh zip + scripts/submit_job.py + a fresh
 spark-submit JVM — end to end, then re-submits and asserts the rerun is a
 pure no-op (0 pending splits)."""
 
-import glob
-import json
 import os
 import subprocess
 
 import pytest
+
+from ddsketch_ruby_spark.plans.lineage import CheckpointedSketchBuild
+from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -53,10 +54,13 @@ def test_spark_submit_pyfiles_resume(spark, tmp_path):
     assert r2.returncode == 0, r2.stderr[-2000:]
     assert "processed 0 pending splits of 2" in r2.stdout  # resume = no-op
 
-    lineage = [
-        json.load(open(p))
-        for p in glob.glob(str(tmp_path / "ckpt" / "lineage" / "*.json"))
-    ]
-    assert len(lineage) == 2 and all(row["values_sketched"] > 0 for row in lineage)
+    build = CheckpointedSketchBuild(
+        spark, DDSketchSpec(), str(tmp_path / "ckpt"), "n_chars", ["lang"]
+    )
+    lineage = build.completed_splits()
+    assert sorted(lineage) == ["split_0", "split_1"]
+    for sid, row in lineage.items():
+        split = spark.read.parquet(str(inp / sid))
+        assert row["values_sketched"] == split.where("n_chars IS NOT NULL").count() > 0
     out = spark.read.parquet(str(tmp_path / "out"))
     assert out.count() == src.select("lang").distinct().count()
