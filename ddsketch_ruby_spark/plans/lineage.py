@@ -9,6 +9,20 @@ Resume = list pending splits, skip the published ones, process the rest,
 then merge all published partials. A killed job never recomputes a
 finished split, and the final merge is a pure fold over the checkpoint.
 
+Splits are independent (a DDSketch's bucket counts merge by addition), so
+``run()`` runs its pending splits as concurrent Spark jobs from a thread
+pool: at most ``min(pending, defaultParallelism)`` in flight, and under
+``fail_after=N`` at most the number still to publish, so exactly N are
+published. Each split is still one job and one rename, so a kill loses at
+most the splits in flight, and every finished split is committed on its
+own. After the first failure nothing new starts; the splits in flight
+finish (published whole, or pending with an orphaned temp) and the error
+is re-raised. Each split's thread inherits the caller's job group,
+description and scheduler pool (``inheritable_thread_target``). A split's
+id is its input's last path component with ``=`` read as ``_``; two
+distinct inputs with one id are refused with ``ValueError`` before any
+Spark work, since they would share one partial.
+
 Layout (version 2)::
 
     <checkpoint_dir>/_layout.json          {"version": 2, "partial": FORMAT,
@@ -64,8 +78,10 @@ import os
 import shutil
 import time
 import uuid
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from typing import Callable, Iterable, Iterator
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -179,22 +195,69 @@ class CheckpointedSketchBuild:
         return done
 
     @staticmethod
-    def _split_id(path: str) -> str:
-        return os.path.basename(path).replace("=", "_")
+    def _split_ids(input_paths: Iterable[str]) -> dict[str, str]:
+        """Split id -> input path, in input order. An input listed twice is
+        one split; two distinct inputs with one id (``a/day=1`` and
+        ``b/day=1``, or ``x=1`` and ``x_1``) raise ``ValueError``: they
+        would share one partial, and the second would be dropped."""
+        ids: dict[str, str] = {}
+        for path in input_paths:
+            sid = os.path.basename(os.path.normpath(path)).replace("=", "_")
+            other = ids.setdefault(sid, path)
+            if os.path.normpath(other) != os.path.normpath(path):
+                raise ValueError(
+                    f"inputs {other!r} and {path!r} both have split id "
+                    f"{sid!r}: split ids come from the last path component "
+                    "('=' read as '_'), so give each input a distinct name"
+                )
+        return ids
 
     # -- build ---------------------------------------------------------------
     def run(self, input_paths: list[str], fail_after: int | None = None) -> int:
         """Process pending splits; returns the number this call published.
-        ``fail_after`` aborts after N splits (test hook simulating a kill)."""
+        Splits run as concurrent jobs, at most the session's default
+        parallelism at once. ``fail_after`` aborts after N published splits
+        (test hook simulating a kill): splits in flight are capped at the
+        number still to publish. After a split fails nothing new starts;
+        the splits in flight finish, then the first error is re-raised."""
+        ids = self._split_ids(input_paths)
         done = self.completed_splits()
-        pending = [p for p in input_paths if self._split_id(p) not in done]
-        processed = 0
-        with self._run_dir() as tmp_root:
-            for path in pending:
-                if fail_after is not None and processed >= fail_after:
+        pending = [(sid, path) for sid, path in ids.items() if sid not in done]
+        workers = max(1, min(len(pending), self.spark.sparkContext.defaultParallelism))
+        todo = iter(pending)
+        in_flight: set[Future] = set()
+        processed, error = 0, None
+        # the pool is joined before _run_dir exits, so the run's lock is held
+        # while any split still writes under its temp directory
+        with self._run_dir() as tmp_root, ThreadPoolExecutor(workers) as pool:
+            while True:
+                cap = workers if fail_after is None else min(workers, fail_after - processed)
+                while error is None and len(in_flight) < cap:
+                    split = next(todo, None)
+                    if split is None:
+                        break
+                    in_flight.add(pool.submit(self._inheriting(), *split, tmp_root))
+                if not in_flight:
                     break
-                processed += self._build_split(path, tmp_root)
+                finished, in_flight = wait(in_flight, return_when=FIRST_COMPLETED)
+                for future in finished:
+                    try:
+                        processed += future.result()
+                    except Exception as e:
+                        error = error or e
+            if error is not None:
+                raise error
         return processed
+
+    def _inheriting(self) -> Callable[[str, str, str], int]:
+        """``_build_split`` for a pool thread: its jobs run under the
+        caller's job group, description, scheduler pool and job tags, on a
+        copy of them taken now (one per split, since Spark SQL writes the
+        execution id into the thread's properties). With pinned threads off
+        (PYSPARK_PIN_THREAD=false) pyspark hands back the session instead
+        of a wrapper, and there is nothing to inherit."""
+        wrap = inheritable_thread_target(self.spark)
+        return wrap(self._build_split) if callable(wrap) else self._build_split
 
     @contextlib.contextmanager
     def _run_dir(self) -> Iterator[str]:
@@ -237,10 +300,9 @@ class CheckpointedSketchBuild:
         names = {f.name for f in self.spec.state_fields()}
         return state, "count" if "count" in names else None
 
-    def _build_split(self, path: str, tmp_root: str) -> int:
+    def _build_split(self, sid: str, path: str, tmp_root: str) -> int:
         """Build, write and publish one split; 1 if this call published it,
         0 if a concurrent run published it first."""
-        sid = self._split_id(path)
         t0 = time.monotonic()
         df = self.spark.read.parquet(path)
         if self.transform is not None:
@@ -286,7 +348,7 @@ class CheckpointedSketchBuild:
 
     def is_complete(self, input_paths: list[str]) -> bool:
         done = self.completed_splits()
-        return all(self._split_id(p) in done for p in input_paths)
+        return all(sid in done for sid in self._split_ids(input_paths))
 
     # -- final merge ------------------------------------------------------------
     def result(self, output: str = "result") -> DataFrame:

@@ -67,6 +67,8 @@ def _combine(
     """Sum two sparse (item -> count) maps (both item-sorted)."""
     items = np.concatenate([items_a, items_b])
     counts = np.concatenate([counts_a, counts_b])
+    if not len(items):  # reduceat needs at least one start
+        return items, counts
     order = np.argsort(items, kind="stable")
     items = items[order]
     counts = counts[order]

@@ -493,6 +493,20 @@ def test_mg_compact_exactly_when_under_k():
     assert est == dict(collections.Counter(items.tolist()))
 
 
+def test_mg_merge_of_emptied_states():
+    """A compaction where every count ties the pivot empties the state;
+    merging such states keeps n and d and stays empty."""
+    from ddsketch_ruby_spark.sketches.mg import MGSpec
+
+    spec = MGSpec(k=1)
+    zero = spec.zero()
+    emptied = spec.update(zero, np.array([1, 2], dtype=np.int64))
+    assert len(emptied.items) == 0 and (emptied.n, emptied.d) == (2, 1)
+    m = spec.merge(spec.merge(zero, emptied), emptied)
+    assert (m.n, m.d) == (4, 2)
+    assert len(m.items) == len(m.counts) == 0
+
+
 def test_mg_distributed_heavy_hitters(spark, sf01_dir):
     from ddsketch_ruby_spark.operators.frequency import heavy_hitters
 

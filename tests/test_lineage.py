@@ -264,17 +264,36 @@ class Killed(Exception):
     pass
 
 
+def _kill_split(monkeypatch, sid: str, step: str) -> None:
+    """Make split ``sid`` alone raise ``Killed`` at commit step ``step``."""
+    local = threading.local()
+    build_split = CheckpointedSketchBuild._build_split
+
+    def tagged(self, split_id, path, tmp_root):
+        local.sid = split_id
+        return build_split(self, split_id, path, tmp_root)
+
+    def kill(self, name):
+        if name == step and local.sid == sid:
+            raise Killed(name)
+
+    monkeypatch.setattr(CheckpointedSketchBuild, "_build_split", tagged)
+    monkeypatch.setattr(CheckpointedSketchBuild, "_step", kill)
+
+
 @pytest.mark.parametrize("step", ["written", "lineage", "published"])
 def test_kill_at_each_commit_step_resumes_to_single_shot(
     spark, tmp_path, splits, monkeypatch, step
 ):
     """A kill between any two steps of a split's commit (after the partial
     write, after the lineage file, after the publishing rename) leaves a
-    checkpoint that resumes to the single-shot answer."""
+    checkpoint that resumes to the single-shot answer. All three pending
+    splits are in flight, so each of them reaches the killed step."""
     spec = DDSketchSpec(0.01, include_stats=True, quantiles={"q50": 0.5})
     d = str(tmp_path / "ck")
     build = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
     assert build.run(splits[:1]) == 1
+    assert spark.sparkContext.defaultParallelism >= 3
 
     def kill(self, name):
         if name == step:
@@ -285,17 +304,126 @@ def test_kill_at_each_commit_step_resumes_to_single_shot(
         with pytest.raises(Killed):
             build.run(splits)
     published = step == "published"
-    assert len(build.completed_splits()) == 1 + published
+    assert len(build.completed_splits()) == 1 + 3 * published
     orphans = glob.glob(os.path.join(d, "_tmp", "*", "*"))
-    assert len(orphans) == (0 if published else 1)
+    assert len(orphans) == (0 if published else 3)
 
     resumed = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
-    assert resumed.run(splits) == 3 - published
+    assert resumed.run(splits) == 3 - 3 * published
     assert resumed.is_complete(splits)
     assert os.listdir(os.path.join(d, "_tmp")) == []  # the orphan was swept
     got = _by(resumed.result(), "event_type")
     single = sketch_agg(spark.read.parquet(*splits), spec, "value", ["event_type"])
     _assert_bit_equal(got, _by(single, "event_type"), ("count", "q50", "min", "max"))
+
+
+@pytest.mark.parametrize("step", ["written", "lineage", "published"])
+def test_one_failing_split_in_flight_resumes_to_single_shot(
+    spark, tmp_path, splits, monkeypatch, step
+):
+    """One split of four fails at a commit step while the others are in
+    flight: run() re-raises its error, every other split ends published or
+    pending (never half-written), and a resume equals single-shot."""
+    spec = DDSketchSpec(0.01, include_stats=True, quantiles={"q50": 0.5})
+    d = str(tmp_path / "ck")
+    build = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
+    with monkeypatch.context() as m:
+        _kill_split(m, "split_2", step)
+        with pytest.raises(Killed):
+            build.run(splits)
+    done = set(build.completed_splits())
+    assert ("split_2" in done) == (step == "published")
+    orphans = glob.glob(os.path.join(d, "_tmp", "*", "*"))
+    assert [os.path.basename(o) for o in orphans] == ([] if "split_2" in done else ["split_2"])
+
+    resumed = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
+    assert resumed.run(splits) == 4 - len(done)
+    assert resumed.is_complete(splits)
+    assert os.listdir(os.path.join(d, "_tmp")) == []
+    got = _by(resumed.result(), "event_type")
+    single = sketch_agg(spark.read.parquet(*splits), spec, "value", ["event_type"])
+    _assert_bit_equal(got, _by(single, "event_type"), ("count", "q50", "min", "max"))
+
+
+def test_fail_after_publishes_exactly_n_with_splits_in_flight(spark, tmp_path, splits):
+    """fail_after=N caps the splits in flight at the number still to
+    publish, so N of 4 pending splits are published, never more."""
+    spec = DDSketchSpec(0.01)
+    for n in (1, 2, 3):
+        d = str(tmp_path / f"ck{n}")
+        build = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
+        assert build.run(splits, fail_after=n) == n
+        assert len(build.completed_splits()) == n
+        assert os.listdir(os.path.join(d, "_tmp")) == []
+        assert build.run(splits) == 4 - n
+
+
+def test_nothing_new_starts_after_a_failed_split(spark, tmp_path, splits, monkeypatch):
+    """With one split in flight at a time, a failure in the first split
+    stops the build: no later split starts, even under a larger
+    fail_after."""
+    monkeypatch.setattr(type(spark.sparkContext), "defaultParallelism", property(lambda sc: 1))
+    _kill_split(monkeypatch, "split_0", "written")
+    d = str(tmp_path / "ck")
+    build = CheckpointedSketchBuild(spark, DDSketchSpec(0.01), d, "value", ["event_type"])
+    with pytest.raises(Killed):
+        build.run(splits, fail_after=3)
+    assert build.completed_splits() == {}
+    orphans = glob.glob(os.path.join(d, "_tmp", "*", "*"))
+    assert [os.path.basename(o) for o in orphans] == ["split_0"]
+
+
+def test_caller_job_group_reaches_every_split_job(spark, tmp_path, splits, monkeypatch):
+    """Split jobs run in pool threads under the caller's job group, so a
+    caller can find (and cancel) them by group."""
+    sc = spark.sparkContext
+    seen = []
+
+    def record(self, name):
+        if name == "written":
+            seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+
+    monkeypatch.setattr(CheckpointedSketchBuild, "_step", record)
+    build = CheckpointedSketchBuild(
+        spark, DDSketchSpec(0.01), str(tmp_path / "ck"), "value", ["event_type"]
+    )
+    sc.setJobGroup("ckpt-grp", "checkpointed build")
+    try:
+        assert build.run(splits) == 4
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert seen == ["ckpt-grp"] * 4
+    assert len(sc.statusTracker().getJobIdsForGroup("ckpt-grp")) >= 4
+
+
+@pytest.mark.parametrize(
+    "names", [("a/day=1", "b/day=1"), ("x=1", "x_1")], ids=["dir", "escape"]
+)
+def test_colliding_split_ids_are_refused(spark, tmp_path, names):
+    """Two distinct inputs with one split id would share one partial and
+    drop the second input's rows; they are refused before any Spark work.
+    The same input listed twice is one split."""
+    paths = []
+    for name, rows in zip(names, (100, 900)):
+        p = str(tmp_path / name)
+        spark.range(rows).selectExpr("'g' AS g", "CAST(id AS DOUBLE) AS value").write.parquet(p)
+        paths.append(p)
+    d = str(tmp_path / "ck")
+    build = CheckpointedSketchBuild(spark, DDSketchSpec(0.01), d, "value", ["g"])
+    with pytest.raises(ValueError, match="both have split id") as err:
+        build.run(paths)
+    assert paths[0] in str(err.value) and paths[1] in str(err.value)
+    with pytest.raises(ValueError, match="both have split id"):
+        build.is_complete(paths)
+    assert build.completed_splits() == {}
+    assert not os.path.exists(os.path.join(d, "_tmp"))
+
+    assert build.run([paths[1], paths[1] + "/"]) == 1
+    assert build.is_complete([paths[1]])
+    (row,) = build.result().collect()
+    assert row["count"] == 900
 
 
 def test_concurrent_runs_never_count_a_split_twice(spark, tmp_path, splits, monkeypatch):
