@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ddsketch_ruby_spark.operators.agg import sketch_agg
+from ddsketch_ruby_spark.plans import lineage
 from ddsketch_ruby_spark.plans.lineage import CheckpointedSketchBuild
 from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
 from ddsketch_ruby_spark.sketches.kll import KLLSpec
@@ -264,8 +265,8 @@ class Killed(Exception):
     pass
 
 
-def _kill_split(monkeypatch, sid: str, step: str) -> None:
-    """Make split ``sid`` alone raise ``Killed`` at commit step ``step``."""
+def _on_step(monkeypatch, hook) -> None:
+    """Call ``hook(split_id, step)`` at every commit step of every split."""
     local = threading.local()
     build_split = CheckpointedSketchBuild._build_split
 
@@ -273,12 +274,18 @@ def _kill_split(monkeypatch, sid: str, step: str) -> None:
         local.sid = split_id
         return build_split(self, split_id, path, tmp_root)
 
-    def kill(self, name):
-        if name == step and local.sid == sid:
+    monkeypatch.setattr(CheckpointedSketchBuild, "_build_split", tagged)
+    monkeypatch.setattr(CheckpointedSketchBuild, "_step", lambda self, name: hook(local.sid, name))
+
+
+def _kill_split(monkeypatch, sid: str, step: str) -> None:
+    """Make split ``sid`` alone raise ``Killed`` at commit step ``step``."""
+
+    def kill(split_id, name):
+        if (split_id, name) == (sid, step):
             raise Killed(name)
 
-    monkeypatch.setattr(CheckpointedSketchBuild, "_build_split", tagged)
-    monkeypatch.setattr(CheckpointedSketchBuild, "_step", kill)
+    _on_step(monkeypatch, kill)
 
 
 @pytest.mark.parametrize("step", ["written", "lineage", "published"])
@@ -293,7 +300,7 @@ def test_kill_at_each_commit_step_resumes_to_single_shot(
     d = str(tmp_path / "ck")
     build = CheckpointedSketchBuild(spark, spec, d, "value", ["event_type"])
     assert build.run(splits[:1]) == 1
-    assert spark.sparkContext.defaultParallelism >= 3
+    assert lineage.MAX_SPLITS_IN_FLIGHT >= 3
 
     def kill(self, name):
         if name == step:
@@ -362,7 +369,7 @@ def test_nothing_new_starts_after_a_failed_split(spark, tmp_path, splits, monkey
     """With one split in flight at a time, a failure in the first split
     stops the build: no later split starts, even under a larger
     fail_after."""
-    monkeypatch.setattr(type(spark.sparkContext), "defaultParallelism", property(lambda sc: 1))
+    monkeypatch.setattr(lineage, "MAX_SPLITS_IN_FLIGHT", 1)
     _kill_split(monkeypatch, "split_0", "written")
     d = str(tmp_path / "ck")
     build = CheckpointedSketchBuild(spark, DDSketchSpec(0.01), d, "value", ["event_type"])
@@ -430,13 +437,13 @@ def test_concurrent_runs_never_count_a_split_twice(spark, tmp_path, splits, monk
     """Two run() calls over the same pending splits: both write every split
     and meet before publishing it, so every rename is a race; each split is
     counted by exactly one winner and the loser's temp is dropped."""
-    barrier = threading.Barrier(2, timeout=300)
+    barriers = {f"split_{i}": threading.Barrier(2, timeout=300) for i in range(4)}
 
-    def meet(self, name):
+    def meet(split_id, name):
         if name == "lineage":
-            barrier.wait()
+            barriers[split_id].wait()
 
-    monkeypatch.setattr(CheckpointedSketchBuild, "_step", meet)
+    _on_step(monkeypatch, meet)
     spec = DDSketchSpec(0.01, include_stats=True, quantiles={"q50": 0.5})
     d = str(tmp_path / "ck")
     builds = [
