@@ -14,6 +14,10 @@ output="state") can be queried from plain SQL:
     SELECT cms_est(counts, xxhash64(key)) FROM cms_table      -- width/depth
     SELECT bloom_maybe(bits, xxhash64(key)) FROM bloom_table  -- from register_sketch_sql args
 
+Limit: a state row carries ``gamma`` but no key mapping, and ``ddsketch_q``
+rebuilds every row as a logarithmic-mapping sketch. Rows built with
+``mapping="linear"`` or ``"cubic"`` get wrong quantiles from it.
+
 The UDFs are Arrow-batched (one Python call per batch of groups), so
 finalizing a million persisted group sketches is itself vectorized.
 The probe UDFs (cms_est / bloom_maybe) are shuffle-free: the tiny state

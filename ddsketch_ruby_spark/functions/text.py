@@ -16,26 +16,20 @@ __all__ = [
     "avg_token_len",
     "bpe_token_estimate",
     "stopword_ratio",
-    "uppercase_ratio",
     "digit_ratio",
     "quality_score",
     "lang_id",
     "doc_fingerprint",
     "normalize_text",
     "repetition_ratio",
-    "TOKEN_COUNT_SQL",
     "BPE_SPLIT_PATTERN",
 ]
 
-# Single-space token model: tokens = spaces + 1 on trimmed text. Chosen
-# (over regex split) because it is expressible identically in any SQL
-# dialect — the oracle must reproduce it bit-for-bit.
-TOKEN_COUNT_SQL = (
-    "(length(trim({c})) - length(replace(trim({c}), ' ', '')) + 1)"
-)
-
 
 def token_count(c: str) -> Column:
+    """Single-space token model: tokens = spaces + 1 on trimmed text.
+    Chosen over a regex split because any SQL dialect expresses it
+    identically, so the oracle reproduces it bit for bit."""
     t = F.trim(F.col(c))
     return (
         F.length(t) - F.length(F.replace(t, F.lit(" "), F.lit(""))) + F.lit(1)
@@ -88,12 +82,6 @@ def stopword_ratio(c: str, stopwords: tuple[str, ...] = ("the", "a", "of", "and"
     t = F.trim(F.col(c))
     tokens = F.length(t) - F.length(F.replace(t, F.lit(" "), F.lit(""))) + F.lit(1)
     return (hits / tokens).alias("stopword_ratio")
-
-
-def uppercase_ratio(c: str) -> Column:
-    x = F.col(c)
-    diff = F.length(F.regexp_replace(x, "[A-Z]", ""))
-    return ((F.length(x) - diff) / F.length(x)).alias("uppercase_ratio")
 
 
 def digit_ratio(c: str) -> Column:

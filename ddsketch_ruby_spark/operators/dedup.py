@@ -40,8 +40,6 @@ __all__ = [
     "duplicate_spans",
 ]
 
-_MERSENNE = (1 << 61) - 1
-
 
 def exact_dedup(
     df: DataFrame,

@@ -358,8 +358,12 @@ class CheckpointedSketchBuild:
 
     # -- final merge ------------------------------------------------------------
     def result(self, output: str = "result") -> DataFrame:
-        """Merge all published partials into the final per-group answer."""
-        partials = self.spark.read.parquet(*self._published())
+        """Merge all published partials into the final per-group answer.
+        Raises ``ValueError`` when no split is published."""
+        published = self._published()
+        if not published:
+            raise ValueError(f"{self.dir}: no split is published; nothing to merge")
+        partials = self.spark.read.parquet(*published)
         if self.format == "histogram":
             return assemble_histogram(partials, self.spec, self.group_by, output)
         return sketch_finalize(partials, self.spec, self.group_by, output)

@@ -131,6 +131,15 @@ def test_result_rejects_unknown_output(spark, tmp_path, splits):
         b.result(output="states")
 
 
+def test_result_without_published_splits_raises(spark, tmp_path):
+    d = str(tmp_path / "ck_empty")
+    b = CheckpointedSketchBuild(spark, DDSketchSpec(0.01), d, "value", [])
+    assert b.run([]) == 0 and b.is_complete([])
+    with pytest.raises(ValueError, match="no split is published") as e:
+        b.result()
+    assert d in str(e.value)
+
+
 def test_lineage_rows_have_metrics(spark, tmp_path, splits):
     spec = DDSketchSpec(0.01)
     d = str(tmp_path / "ckpt_metrics")

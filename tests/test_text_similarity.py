@@ -55,19 +55,6 @@ def test_token_count_and_ratios(spark, textdf):
     assert 0 <= r[3]["quality_score"] <= 1
 
 
-def test_uppercase_ratio(spark):
-    from ddsketch_ruby_spark.functions.text import uppercase_ratio
-
-    df = spark.createDataFrame(
-        [(1, "ABCd"), (2, "abcd"), (3, "ABCD")], "doc_id long, text string"
-    )
-    r = {
-        x["doc_id"]: x["uppercase_ratio"]
-        for x in df.select("doc_id", uppercase_ratio("text")).collect()
-    }
-    assert r[1] == 0.75 and r[2] == 0.0 and r[3] == 1.0
-
-
 def test_lang_id(spark, textdf):
     r = {
         x["doc_id"]: x["lang_pred"]
