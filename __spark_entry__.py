@@ -361,8 +361,9 @@ def _q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline replayed — encode (per-subspace squared-L2 argmin against
     the codebook) and ADC scoring (sum of m lookup-table entries), both
     value-hash-matched, not recall-gated. Possible because every float
-    op is an ordered left fold starting at 0.0 (JVM aggregate fold ==
-    Python LUT fold == the SQL explicit addition chain) and the codebook
+    op is an ordered left fold starting at 0.0 (the encode kernel's exact
+    near-tie repair == Python LUT fold == the SQL explicit addition
+    chain) and the codebook
     is a seeded plan-time constant (pq_codebook — the same role the
     seeded hyperplanes play for the LSH gates; pq_train's k-means path
     is pinned by pytest parity/quality tests instead)."""

@@ -109,13 +109,18 @@ def key_column(mapping, v):
     return (raw.cast("double") + F.lit(float(mapping.offset))).cast("long")
 
 
-def _histogram(
+def histogram_rows(
     df: DataFrame,
     spec: DDSketchSpec,
     value_col: str,
-    group_by: list[str],
-    weight_col: str | None,
+    group_by: Iterable[str] = (),
+    weight_col: str | None = None,
 ) -> DataFrame:
+    """The raw bucket-histogram rows (group..., __zone, __key, __cnt,
+    __svw, __minv, __maxv) — the sketch's shuffle-time representation.
+    ddsketch_jvm_agg assembles them into sketches; streaming queries
+    (streaming/sketch_stream.py) and the resumable build (plans/lineage.py)
+    run the same JVM aggregation and assemble sketches downstream."""
     mapping = spec.zero().mapping
     mp = mapping.min_possible
 
@@ -169,21 +174,6 @@ def _assemble_state(spec: DDSketchSpec, cols: dict[str, np.ndarray]) -> DDSketch
     return s
 
 
-def histogram_rows(
-    df: DataFrame,
-    spec: DDSketchSpec,
-    value_col: str,
-    group_by: Iterable[str] = (),
-    weight_col: str | None = None,
-) -> DataFrame:
-    """The raw bucket-histogram rows (group..., __zone, __key, __cnt,
-    __svw, __minv, __maxv) — the sketch's shuffle-time representation.
-    Exposed so streaming queries (streaming/sketch_stream.py) and the
-    resumable build (plans/lineage.py) can run the same JVM aggregation and
-    assemble sketches downstream."""
-    return _histogram(df, spec, value_col, list(group_by), weight_col)
-
-
 def assemble_histogram(
     hist: DataFrame,
     spec: DDSketchSpec,
@@ -207,5 +197,5 @@ def ddsketch_jvm_agg(
     """JVM-histogram DDSketch aggregation; same output contract as
     operators.agg.sketch_agg with a DDSketchSpec."""
     group_by = list(group_by)
-    hist = _histogram(df, spec, value_col, group_by, weight_col)
+    hist = histogram_rows(df, spec, value_col, group_by, weight_col)
     return assemble_histogram(hist, spec, group_by, output)

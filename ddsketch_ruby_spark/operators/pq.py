@@ -17,12 +17,19 @@ raw vectors (rerank against the originals only for the final top-k if
 exactness matters — compose with cosine_topk over the candidate ids).
 
 Determinism discipline (what makes the driver gate bit-exact): encode
-distances are LEFT-FOLD sums starting at 0.0 — ``F.aggregate(zip_with(
-slice, centroid, (a-b)*(a-b)), 0.0, acc+x)`` on the JVM, the same
-explicit chain in SQL, and a sequential Python fold for the ADC lookup
-table — so every engine computes the identical doubles and argmin ties
-break identically (first/lowest code). Codebooks are float64 constants;
-float32 embedding values widen exactly.
+distances are LEFT-FOLD sums starting at 0.0 — the encode kernel's exact
+near-tie repair (_gemm_argmin_exact), the same explicit chain in SQL, and
+a sequential Python fold for the ADC lookup table — so every engine
+computes the identical doubles and argmin ties break identically
+(first/lowest code). Codebooks are float64 constants; float32 embedding
+values widen exactly.
+
+One encoder (the fused Arrow kernel behind ivfpq_encode; pq_encode is its
+one-cell case) and one function per query shape: per-query ADC
+(ivfpq_topk), batch ADC (ivfpq_ann_join), and their exact-rerank
+compositions (ann_topk, ann_join_topk). Each takes the codes frame as an
+input, so an in-memory ivfpq_encode output and a persisted index opened
+with read_ivfpq_index are served by the same code.
 """
 
 from __future__ import annotations
@@ -44,12 +51,10 @@ __all__ = [
     "ivfpq_encode",
     "ivfpq_topk",
     "ivfpq_write_index",
-    "ivfpq_topk_indexed",
+    "read_ivfpq_index",
     "ann_topk",
     "ann_join_topk",
-    "ann_join_topk_indexed",
     "ivfpq_ann_join",
-    "ivfpq_ann_join_indexed",
 ]
 
 
@@ -120,67 +125,18 @@ def pq_encode(
     vec_col: str,
     codebooks: np.ndarray,
     code_col: str = "pq_code",
-    engine: str = "jvm",
 ) -> DataFrame:
     """Adds the m-entry PQ code array (nearest codebook entry per
-    subspace, squared-L2, ties to the lowest code). ``engine="jvm"``
-    builds the argmin as pure column expressions (no UDF, whole-stage
-    codegen; plan size grows with m * codebook_size — fine to ~256 total
-    entries). ``engine="pandas"`` runs a vectorized Arrow batch kernel
-    (one einsum per subspace) — the path for production codebook sizes
-    (m=8..16, codebook_size=256). Both produce bit-identical codes (the
-    distance folds are ordered identically; pinned in tests)."""
-    m, k, dsub = codebooks.shape
-    if engine == "jvm":
-        v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        codes = []
-        for s in range(m):
-            sub = F.slice(v, s * dsub + 1, dsub)
-
-            def dist2(cent: np.ndarray, sub=sub):
-                carr = F.array(*[F.lit(float(x)) for x in cent])
-                return F.aggregate(
-                    F.zip_with(sub, carr, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-
-            dists = F.array(*[dist2(c) for c in codebooks[s]])
-            codes.append(
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-            )
-        return df.withColumn(code_col, F.array(*codes))
-    if engine != "pandas":
-        raise ValueError("engine must be 'jvm' or 'pandas'")
-
-    out_fields = df.schema.fields + [
-        T.StructField(code_col, T.ArrayType(T.IntegerType()))
-    ]
-    out_schema = T.StructType(out_fields)
-    books = codebooks.copy()
-    pre = [_gemm_pre(books[s]) for s in range(m)]
-
-    def encode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                # mapInPandas sees empty Arrow batches whenever partitions
-                # outnumber rows — pass them through, typed
-                out = pdf.copy()
-                out[code_col] = pd.Series([], dtype=object)
-                yield out
-                continue
-            vecs = np.stack(pdf[vec_col].to_numpy()).astype(
-                np.float64, copy=False
-            )
-            codes = np.empty((len(vecs), m), dtype=np.int32)
-            for s in range(m):
-                sub = vecs[:, s * dsub : (s + 1) * dsub]
-                codes[:, s] = _gemm_argmin_exact(sub, books[s], *pre[s])
-            pdf = pdf.copy()
-            pdf[code_col] = list(codes)
-            yield pdf
-
-    return df.mapInPandas(encode_batches, schema=out_schema)
+    subspace, squared-L2, ties to the lowest code). This is the one-cell
+    case of the IVF-PQ kernel (ivfpq_encode): one all-zero coarse
+    centroid makes every residual v - 0.0 == v exactly, so the codes are
+    the raw-vector codes, computed by the same vectorized Arrow batch
+    kernel that serves production codebook sizes (m=8..16,
+    codebook_size=256)."""
+    m, _, dsub = codebooks.shape
+    return ivfpq_encode(
+        df, vec_col, np.zeros((1, m * dsub)), codebooks, "__cell", code_col
+    ).drop("__cell")
 
 
 def _gemm_pre(book: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -196,12 +152,15 @@ def _gemm_argmin_exact(
     ||x||^2 - 2 x.c + ||c||^2 (a single SGEMM + one (n, k) pass — the
     float64 (n, k, dsub) broadcast form is memory-bandwidth-bound,
     BENCH/kernel_vectorization.md), then every row whose top-2 float32
-    margin is inside 1e-3 relative is RE-RESOLVED with the exact float64
-    (x - c)^2 computation. float32 distance error here is ~1e-6 relative,
-    so outside that margin the float32 order IS the exact order; inside
-    it the repair recomputes all k distances exactly, ties -> lowest
-    code. Result: bit-identical argmins to the JVM fold engine, ~8x less
-    memory traffic than the float64 broadcast."""
+    margin is inside 1e-3 relative (plus 1e-4 of ||x||^2 + max ||c||^2)
+    is RE-RESOLVED with the exact float64 (x - c)^2 computation. The
+    expansion's float32 error is ~1e-6 of ||x||^2 + ||c||^2, so outside
+    that margin the float32 order IS the exact order; inside
+    it the repair recomputes all k distances as the ordered left fold
+    over the dims (the fold every oracle computes), ties -> lowest code.
+    NumPy's ``.sum`` would not do: it adds 8 or more terms pairwise, which
+    moves near-ties by an ulp. ~8x less memory traffic than the float64
+    broadcast."""
     n = len(sub)
     k = book.shape[0]
     if k == 1:
@@ -216,12 +175,16 @@ def _gemm_argmin_exact(
     vmin = v2[rows, first]
     vsec = v2[rows, 1 - first]
     cand = idx2[rows, first].astype(np.int32)
+    # the expansion's float32 error scales with ||x||^2 + ||c||^2, not with
+    # the distance: data far from the origin needs the second term
     amb = (vsec - vmin) <= np.float32(1e-3) * np.maximum(
         np.float32(1.0), np.abs(vmin)
-    )
+    ) + np.float32(1e-4) * (x2 + c2_32.max())
     if amb.any():
-        sa = sub[amb]
-        dex = ((sa[:, None, :] - book[None, :, :]) ** 2).sum(-1)
+        diff = sub[amb][:, None, :] - book[None, :, :]
+        dex = diff[..., 0] * diff[..., 0]
+        for j in range(1, diff.shape[2]):
+            dex = dex + diff[..., j] * diff[..., j]
         cand[amb] = dex.argmin(1).astype(np.int32)
     return cand
 
@@ -232,8 +195,8 @@ def pq_adc_lut(
     """The ADC lookup table: lut[s][c] = squared L2 between the query's
     s-th subspace block and codebook entry c, computed as the SEQUENTIAL
     left fold starting at 0.0 (Python floats are IEEE doubles) so it is
-    bit-identical to the JVM encode fold and to the SQL oracle's explicit
-    addition chain."""
+    bit-identical to the encode kernel's exact fold and to the SQL
+    oracle's explicit addition chain."""
     m, k, dsub = codebooks.shape
     q = [float(x) for x in query]
     if len(q) != m * dsub:
@@ -288,60 +251,27 @@ def ivfpq_encode(
     codebooks: np.ndarray,
     cell_col: str = "ivf_cell",
     code_col: str = "pq_code",
-    engine: str = "pandas",
     keep: list[str] | None = None,
 ) -> DataFrame:
     """IVF-PQ ingest (the FAISS IVFPQ layout): assign each vector to its
-    nearest coarse centroid (operators/similarity.py ivf_assign — pure
-    JVM argmin), then PQ-encode the RESIDUAL v - centroid[cell]. Residual
-    energy is a fraction of vector energy, so the same codebook budget
-    quantizes much finer than raw-vector PQ. The stored index row is
-    (id, cell, m codes) — at production sizes ~12 B against a 256 B
-    vector; partition the output by ``cell_col`` for pruned probes (the
-    ivf_write_index layout).
+    nearest coarse centroid, then PQ-encode the RESIDUAL v - centroid[cell].
+    Residual energy is a fraction of vector energy, so the same codebook
+    budget quantizes much finer than raw-vector PQ. The stored index row
+    is (id, cell, m codes) — at production sizes ~12 B against a 256 B
+    vector; ivfpq_write_index persists it partitioned by cell for pruned
+    probes.
 
-    ``engine="jvm"`` composes ivf_assign + expression residual +
-    pq_encode — zero Python, but Spark's higher-order array lambdas
-    (aggregate/zip_with) run INTERPRETED per element, measured ~63k
-    rows/s for the 16-cell assignment alone on this box. The DEFAULT
-    ``engine="pandas"`` is one fused Arrow kernel — assignment, residual
-    and codes in a single pass over each batch (one vector transfer, two
-    GEMMs) — measured 6x faster end-to-end at 2M rows x k=256; its
-    argmins are repaired to the exact fold on near-ties, so both engines
-    produce identical codes (parity-pinned).
+    One fused Arrow kernel: assignment, residual and codes in a single
+    pass over each batch (one vector transfer, GEMM argmins with the exact
+    left-fold repair on near-ties — _gemm_argmin_exact). Spark's
+    higher-order array lambdas run INTERPRETED per element (~63k rows/s
+    for a 16-cell assignment as column expressions), and an expression
+    plan grows with m * codebook_size, so no expression encoder exists.
 
-    ``keep`` (pandas engine): project the output to these passthrough
-    columns + (cell, codes), and prune the INPUT scan to keep+vec — the
-    index-build path (ivfpq_write_index) passes [id_col] so the 256 B
-    vector column is neither re-serialized out of the kernel nor carried
-    to the writer."""
-    if engine == "jvm":
-        if keep is not None:
-            df = df.select(*keep, vec_col)
-        from .similarity import ivf_assign
-
-        assigned = ivf_assign(df, vec_col, centroids, cell_col)
-        v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        chosen = F.element_at(
-            F.array(
-                *[
-                    F.array(*[F.lit(float(x)) for x in c])
-                    for c in centroids
-                ]
-            ),
-            F.col(cell_col) + 1,
-        )
-        resid = F.zip_with(v, chosen, lambda a, b: a - b)
-        out = pq_encode(
-            assigned.withColumn("__resid", resid), "__resid", codebooks,
-            code_col, "jvm",
-        ).drop("__resid")
-        if keep is not None:
-            out = out.select(*keep, cell_col, code_col)
-        return out
-    if engine != "pandas":
-        raise ValueError("engine must be 'jvm' or 'pandas'")
-
+    ``keep``: project the output to these passthrough columns + (cell,
+    codes), and prune the INPUT scan to keep+vec — the index-build path
+    (ivfpq_write_index) passes [id_col] so the 256 B vector column is
+    neither re-serialized out of the kernel nor carried to the writer."""
     if keep is not None:
         df = df.select(*keep, vec_col)
     m, k, dsub = codebooks.shape
@@ -362,6 +292,8 @@ def ivfpq_encode(
     def fused(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if pdf.empty:
+                # mapInPandas sees empty Arrow batches whenever partitions
+                # outnumber rows — pass them through, typed
                 out = pdf[carry_names].copy()
                 out[cell_col] = pd.Series([], dtype=np.int32)
                 out[code_col] = pd.Series([], dtype=object)
@@ -370,9 +302,7 @@ def ivfpq_encode(
             vecs = np.stack(pdf[vec_col].to_numpy()).astype(
                 np.float64, copy=False
             )
-            # coarse assignment + residual + codes, one pass, shared
-            # GEMM-with-exact-repair argmins (bit-parity with the JVM
-            # fold engine — _gemm_argmin_exact)
+            # coarse assignment + residual + codes, one pass
             cell = _gemm_argmin_exact(vecs, cents, *cents_pre)
             resid = vecs - cents[cell]
             codes = np.empty((len(vecs), m), dtype=np.int32)
@@ -409,10 +339,10 @@ def ivfpq_topk(
     ranking over the whole index (the driver-gate mode).
 
     The per-cell frames each re-reference ``encoded``: a persisted index
-    (ivfpq_topk_indexed) turns that into nprobe pruned reads, but an
-    in-memory ivfpq_encode plan would re-run the encode kernel once per
-    probed cell — localCheckpoint/persist it first (the driver gates'
-    pattern)."""
+    (read_ivfpq_index) turns that into nprobe partition-pruned reads
+    (``PartitionFilters: [cell ...]``), but an in-memory ivfpq_encode plan
+    would re-run the encode kernel once per probed cell —
+    localCheckpoint/persist it first (the driver gates' pattern)."""
     from .similarity import _probe_cells
 
     m = codebooks.shape[0]
@@ -448,22 +378,20 @@ def ivfpq_write_index(
     id_col: str,
     centroids: np.ndarray,
     codebooks: np.ndarray,
-    engine: str = "jvm",
 ) -> None:
     """Persist an IVF-PQ index: (id, cell, codes) rows PARTITIONED BY
     cell, with centroids + codebooks stored alongside (model.json — the
-    layout ivf_write_index/lsh_write_index use). The raw vectors are NOT
+    layout lsh_write_index uses). The raw vectors are NOT
     written: the index row is ~12 B, so the persisted index is ~20x
     smaller than the corpus' vector column and every query is a
     partition-pruned read of nprobe cells OVER CODES ONLY — the combined
     IVF (read less) and PQ (read smaller) 100 TB shape. Pass trained
-    (ivf_train, pq_train) or seeded components; queries recompute
-    nothing."""
+    (ivf_train, pq_train) or seeded components; read_ivfpq_index opens
+    the layout as query input, and queries recompute nothing."""
     import json
 
     enc = ivfpq_encode(
-        df, vec_col, centroids, codebooks, cell_col="cell",
-        engine=engine, keep=[id_col],
+        df, vec_col, centroids, codebooks, cell_col="cell", keep=[id_col]
     )
     enc.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/codes")
     meta = {
@@ -477,18 +405,31 @@ def ivfpq_write_index(
     ).write.mode("overwrite").text(f"{path}/model.json")
 
 
-def _read_index_meta(spark, path: str) -> tuple:
-    """model.json of an ivfpq_write_index layout -> (id_col, centroids,
-    codebooks) — one bounded driver-side read of the one-line text file."""
+def read_ivfpq_index(
+    spark, path: str
+) -> tuple[DataFrame, np.ndarray, np.ndarray, str]:
+    """Open an ivfpq_write_index layout as query input: returns
+    (encoded, centroids, codebooks, id_col). ``encoded`` is the persisted
+    (id, cell, codes) frame with ``cell`` renamed to ivfpq_encode's
+    ``ivf_cell``, so it drops into ivfpq_topk, ivfpq_ann_join, ann_topk and
+    ann_join_topk with their default column names. A filter on the
+    renamed column still plans as a partition filter (``PartitionFilters:
+    [cell IN ...]``), so those operators read only the probed cells. The
+    constants come from model.json — one bounded driver-side read of the
+    one-line text file."""
     import json
 
     meta = json.loads(
         spark.read.text(f"{path}/model.json").collect()[0].value
     )
+    encoded = spark.read.parquet(f"{path}/codes").withColumnRenamed(
+        "cell", "ivf_cell"
+    )
     return (
-        meta["id_col"],
+        encoded,
         np.asarray(meta["centroids"], dtype=np.float64),
         np.asarray(meta["codebooks"], dtype=np.float64),
+        meta["id_col"],
     )
 
 
@@ -551,7 +492,6 @@ def ann_topk(
     encoded: DataFrame | None = None,
     centroids: np.ndarray | None = None,
     codebooks: np.ndarray | None = None,
-    index_path: str | None = None,
     cell_col: str = "ivf_cell",
     code_col: str = "pq_code",
     round_to: int = 6,
@@ -563,10 +503,10 @@ def ann_topk(
     (id, sim, rank) descending — cosine_topk's schema, so swapping
     brute-force search for indexed search is a one-line change.
 
-    Index source: either an in-memory ``encoded`` frame + ``centroids`` +
-    ``codebooks`` (the ivfpq_encode output), or ``index_path`` pointing at
-    an ivfpq_write_index layout (codes read partition-pruned to the
-    nprobe probe cells, model.json supplies the constants).
+    Index source: ``encoded`` + ``centroids`` + ``codebooks`` — an
+    in-memory ivfpq_encode output, or a persisted index opened with
+    read_ivfpq_index (codes read partition-pruned to the nprobe probe
+    cells).
 
     Scale shape: stage 1 reads ~12 B (id, cell, codes) rows from nprobe
     cells only and reduces them to ``candidates`` ids via
@@ -580,19 +520,10 @@ def ann_topk(
     path's recall is >= plain ADC top-k recall (pytest-pinned) and sits
     under its own planted-recall driver gate. ``rerank=False`` returns
     the raw ADC top-k (pq_dist ascending) unchanged."""
-    if index_path is not None:
-        spark = df.sparkSession
-        stored_id, centroids, codebooks = _read_index_meta(spark, index_path)
-        encoded = spark.read.parquet(f"{index_path}/codes")
-        cell_col, code_col = "cell", "pq_code"
-        if stored_id != id_col:
-            raise ValueError(
-                f"index at {index_path} stores id_col={stored_id!r}, "
-                f"got {id_col!r}"
-            )
     if encoded is None or centroids is None or codebooks is None:
         raise ValueError(
-            "pass encoded+centroids+codebooks or index_path"
+            "pass encoded, centroids and codebooks (ivfpq_encode output "
+            "or read_ivfpq_index)"
         )
     cand = ivfpq_topk(
         encoded,
@@ -627,12 +558,14 @@ def _ivfpq_probe_frame(
 ):
     """Driver-built (query_id, cell, flattened ADC LUT) probe rows for the
     batch ANN join. The collect is the bounded QUERY workload (same budget
-    class as the lsh_ann_join_indexed probe collect and the _planted_recall
-    harness): |queries| x nprobe rows x m*codebook_size doubles — a few
-    hundred KB for thousands of queries. LUT entries use pq_adc_lut's
-    sequential left fold, so the scored doubles stay bit-identical to the
-    per-query ivfpq_topk path."""
-    from .similarity import _probe_cells
+    class as the _planted_recall harness): |queries| x nprobe rows x
+    m*codebook_size doubles — a few hundred KB for thousands of queries.
+    LUT entries use pq_adc_lut's sequential left fold, so the scored
+    doubles stay bit-identical to the per-query ivfpq_topk path. A bad
+    ``nprobe`` raises before the query collect runs."""
+    from .similarity import _check_nprobe, _probe_cells
+
+    _check_nprobe(len(centroids), nprobe)
 
     qrows = queries.select(query_id_col, query_vec_col).collect()
     id_field = next(
@@ -681,13 +614,21 @@ def ivfpq_ann_join(
     identical doubles to per-query ivfpq_topk, pytest-pinned); a
     per-query window ranks the survivors. The corpus side reads ONLY
     (id, cell, codes) — ~12 B/row — and is scanned once for all queries.
-    Returns (query_id, id, pq_dist, rank) ascending per query."""
+
+    The corpus side is filtered on the LITERAL union of probed cells
+    (built driver-side with the probe rows, bounded by n_cells): on a
+    persisted index (read_ivfpq_index) that is a partition filter — a join
+    on the cell column alone does not prune statically — and on an
+    in-memory frame it drops only rows no probe could join. Returns
+    (query_id, id, pq_dist, rank) ascending per query."""
     rows, schema = _ivfpq_probe_frame(
         queries, query_id_col, query_vec_col, centroids, codebooks, nprobe
     )
+    cells = sorted({r[1] for r in rows})
     spark = encoded.sparkSession
     probes = F.broadcast(spark.createDataFrame(rows, schema))
-    cand = encoded.join(probes, F.col(cell_col) == F.col("__cell"))
+    codes = encoded.filter(F.col(cell_col).isin(cells))
+    cand = codes.join(probes, F.col(cell_col) == F.col("__cell"))
     return _adc_rank(cand, id_col, _adc_score(codebooks, code_col), k,
                      round_to)
 
@@ -711,41 +652,6 @@ def _adc_rank(cand, id_col: str, score, k: int, round_to: int):
             "rank",
         )
     )
-
-
-def ivfpq_ann_join_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    query_id_col: str,
-    query_vec_col: str,
-    k: int = 10,
-    nprobe: int = 4,
-    round_to: int = 6,
-    _meta: tuple | None = None,
-) -> DataFrame:
-    """Batch ADC ANN against a PERSISTED IVF-PQ index (ivfpq_write_index):
-    reads only the UNION of the queries' probe cells via a literal
-    partition filter (static pruning needs a literal — the
-    ivf_ann_join_indexed precedent; the probed-cell union is bounded by
-    n_cells). Scoring and ranking are identical to ivfpq_ann_join.
-    ``_meta`` lets a composing caller (ann_join_topk_indexed) pass the
-    already-read (id_col, centroids, codebooks) instead of re-reading
-    model.json."""
-    id_col, centroids, codebooks = (
-        _meta if _meta is not None else _read_index_meta(spark, path)
-    )
-    rows, schema = _ivfpq_probe_frame(
-        queries, query_id_col, query_vec_col, centroids, codebooks, nprobe
-    )
-    cells = sorted({r[1] for r in rows})
-    probes = F.broadcast(spark.createDataFrame(rows, schema))
-    codes = spark.read.parquet(f"{path}/codes").filter(
-        F.col("cell").isin(cells)
-    )
-    cand = codes.join(probes, F.col("cell") == F.col("__cell"))
-    return _adc_rank(cand, id_col, _adc_score(codebooks, "pq_code"), k,
-                     round_to)
 
 
 def ann_join_topk(
@@ -786,60 +692,3 @@ def ann_join_topk(
     ).select("query_id", id_col)
     return _exact_rerank(df, cand, queries, vec_col, id_col,
                          query_id_col, query_vec_col, k, round_to)
-
-
-def ann_join_topk_indexed(
-    spark,
-    path: str,
-    df: DataFrame,
-    queries: DataFrame,
-    vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    k: int = 10,
-    candidates: int = 100,
-    nprobe: int = 4,
-    round_to: int = 6,
-) -> DataFrame:
-    """ann_join_topk against a PERSISTED IVF-PQ index: candidates come
-    from ivfpq_ann_join_indexed (codes-only, partition-pruned to the
-    probed-cell union), the exact rerank reads only the survivors'
-    vectors from ``df`` — the repeated-workload composition where neither
-    the index build nor the full vector column is touched per query
-    batch. model.json is read once and threaded through. Returns
-    (query_id, id, sim, rank)."""
-    meta = _read_index_meta(spark, path)
-    id_col = meta[0]
-    cand = ivfpq_ann_join_indexed(
-        spark, path, queries, query_id_col, query_vec_col,
-        k=candidates, nprobe=nprobe, round_to=round_to, _meta=meta,
-    ).select("query_id", id_col)
-    return _exact_rerank(df, cand, queries, vec_col, id_col,
-                         query_id_col, query_vec_col, k, round_to)
-
-
-def ivfpq_topk_indexed(
-    spark,
-    path: str,
-    query: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    round_to: int = 6,
-) -> DataFrame:
-    """Query a persisted IVF-PQ index: the probe-cell filter is on the
-    PARTITION column (verify with .explain -> 'PartitionFilters:
-    [cell IN ...]'), so non-probed cells are never read, and the read
-    rows are (id, codes) only. Scoring is identical to ivfpq_topk."""
-    stored_id, centroids, codebooks = _read_index_meta(spark, path)
-    codes = spark.read.parquet(f"{path}/codes")
-    return ivfpq_topk(
-        codes,
-        centroids,
-        codebooks,
-        stored_id,
-        query,
-        k=k,
-        nprobe=nprobe,
-        cell_col="cell",
-        round_to=round_to,
-    )

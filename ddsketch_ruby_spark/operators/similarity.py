@@ -14,10 +14,11 @@
 - ivf_topk: IVF-style coarse quantizer — k-means centroids (k-means++ init,
   several Lloyd iterations, empty-cell reseeding) trained on a driver-side
   sample — + nprobe nearest cells, exact rerank within cells.
-- ivf_write_index / ivf_topk_indexed: the 100 TB shape — persist the corpus
-  partitioned BY CELL with the centroids alongside, so a query reads only
-  nprobe partitions (partition pruning at the scan, verified in tests)
-  instead of the full corpus.
+- lsh_ann_join / ivf_ann_join: the batch shapes — N queries in one job.
+
+The persisted cell-partitioned index is the IVF-PQ one (operators/pq.py
+ivfpq_write_index / read_ivfpq_index): it stores ~12 B codes per vector
+instead of the vectors, and its query operators take it as an input.
 """
 
 from __future__ import annotations
@@ -37,14 +38,10 @@ __all__ = [
     "lsh_write_index",
     "lsh_topk_indexed",
     "lsh_ann_join",
-    "lsh_ann_join_indexed",
     "ivf_train",
     "ivf_assign",
     "ivf_topk",
-    "ivf_write_index",
-    "ivf_topk_indexed",
     "ivf_ann_join",
-    "ivf_ann_join_indexed",
 ]
 
 
@@ -187,7 +184,8 @@ def lsh_write_index(
     the sign bucket, with the plane parameters stored alongside
     (planes.json) so queries recompute nothing. Build once; every query
     then reads only its probe buckets via partition pruning — the module
-    docstring's 100 TB shape, mirroring ivf_write_index/ivf_topk_indexed.
+    docstring's 100 TB shape, mirroring the IVF-PQ index
+    (operators/pq.py ivfpq_write_index).
 
     Without ``prefix_bits``, ``n_planes`` is also the partition fan-out
     (2^n_planes directories): 8 planes -> 256 partitions; above 12 planes
@@ -348,8 +346,7 @@ def _query_probe_frame(
 ) -> DataFrame:
     """(query_id, __qv, __qn, __probe) — each query exploded over its
     _probe_masks neighborhood, base bucket computed with the same JVM
-    fold that buckets the corpus. Shared by lsh_ann_join and
-    lsh_ann_join_indexed."""
+    fold that buckets the corpus (lsh_ann_join)."""
     if max_hamming > 2:
         raise ValueError("max_hamming > 2 not supported (probe explosion)")
     masks = _probe_masks(n_planes, max_hamming)
@@ -398,63 +395,6 @@ def _score_and_rank(
         .filter(F.col("rank") <= k)
         .select("query_id", id_col, "sim", "rank")
     )
-
-
-def lsh_ann_join_indexed(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    id_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    *,
-    k: int = 10,
-    max_hamming: int = 1,
-    round_to: int = 6,
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """Batch multi-probe ANN against a PERSISTED index (lsh_write_index):
-    the repeated-workload combination of lsh_ann_join (N queries, one
-    job) and lsh_topk_indexed (read only probed partitions). Returns
-    (query_id, id, sim, rank).
-
-    Partition pruning needs a LITERAL filter — a join on the partition
-    column does not prune statically and Spark's dynamic partition
-    pruning does not fire for this shape (verified on the executed
-    plan) — so the distinct probe set is collected to the driver first.
-    That collect is BOUNDED metadata, not data: at most
-    |queries| x (1 + n_planes [+ pairs]) longs (thousands of queries ->
-    ~10^4-10^5 values), the same budget class as IVF's driver-side
-    training sample. For query sets large enough that the probe IN-list
-    itself is unwieldy, scan-and-bucket the raw corpus with lsh_ann_join
-    instead — one full scan beats a million-literal plan."""
-    raw = spark.read.text(f"{path}/planes.json").collect()
-    meta = json.loads(raw[0].value)
-    # build the probe frame UNHINTED first: the bounded metadata collect
-    # below is not a join, and a broadcast hint on a non-join plan only
-    # produces a HintErrorLogger warning; the hint is applied for the
-    # actual candidate join afterwards
-    probes = _query_probe_frame(
-        queries, query_id_col, query_vec_col, meta["dim"], meta["n_planes"],
-        meta["seed"], max_hamming, broadcast_queries=False,
-    )
-    probe_vals = sorted(
-        r["__probe"] for r in probes.select("__probe").distinct().collect()
-    )
-    if broadcast_queries:
-        probes = F.broadcast(probes)
-    corpus = spark.read.parquet(f"{path}/corpus")
-    prefix_bits = meta.get("prefix_bits")
-    if prefix_bits is not None:
-        shift = meta["n_planes"] - prefix_bits
-        corpus = corpus.filter(
-            F.col("lsh_prefix").isin(sorted({p >> shift for p in probe_vals}))
-        )
-    corpus = corpus.filter(F.col("lsh_bucket").isin(probe_vals)).withColumn(
-        "__vn", _sqnorm_col(meta["vec_col"])
-    )
-    cand = corpus.join(probes, F.col("lsh_bucket") == F.col("__probe"))
-    return _score_and_rank(cand, meta["vec_col"], id_col, k, round_to)
 
 
 def ivf_train(
@@ -541,9 +481,19 @@ def ivf_assign(
     return df.withColumn(cell_col, cell)
 
 
+def _check_nprobe(n_cells: int, nprobe: int) -> None:
+    if not (1 <= nprobe <= n_cells):
+        raise ValueError(
+            f"nprobe must be in [1, n_cells={n_cells}], got {nprobe}"
+        )
+
+
 def _probe_cells(
     centroids: np.ndarray, query: Sequence[float], nprobe: int
 ) -> list[int]:
+    """The ``nprobe`` cells nearest the query (the per-query IVF and
+    IVF-PQ paths)."""
+    _check_nprobe(len(centroids), nprobe)
     qd = ((centroids - np.asarray(query, dtype=np.float64)) ** 2).sum(1)
     return [int(c) for c in np.argsort(qd)[:nprobe]]
 
@@ -572,58 +522,6 @@ def ivf_topk(
     return cosine_topk(cand, vec_col, id_col, query, k, round_to)
 
 
-def ivf_write_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str,
-    n_cells: int = 16,
-    iters: int = 10,
-    sample_fraction: float = 0.2,
-    seed: int = 42,
-) -> np.ndarray:
-    """Persist an IVF index: the corpus parquet PARTITIONED BY cell, with
-    the trained centroids stored alongside (centroids.json). Build once,
-    then every query is a partition-pruned read of nprobe cells — at corpus
-    scale this is the difference between scanning 100 TB and scanning
-    nprobe/n_cells of it. Returns the centroids."""
-    centroids = ivf_train(df, vec_col, n_cells, iters, sample_fraction, seed=seed)
-    assigned = ivf_assign(df, vec_col, centroids, cell_col="cell")
-    assigned.write.partitionBy("cell").mode("overwrite").parquet(
-        f"{path}/corpus"
-    )
-    # tiny metadata file next to the data (same layout Iceberg would keep
-    # in table properties)
-    meta = {"centroids": centroids.tolist(), "vec_col": vec_col}
-    spark = df.sparkSession
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").coalesce(
-        1
-    ).write.mode("overwrite").text(f"{path}/centroids.json")
-    return centroids
-
-
-def ivf_topk_indexed(
-    spark: SparkSession,
-    path: str,
-    id_col: str,
-    query: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    round_to: int = 6,
-) -> DataFrame:
-    """Query a persisted IVF index: the cell filter is on a PARTITION
-    column, so Spark prunes non-probed cells at planning time (verify with
-    .explain -> 'PartitionFilters: [cell IN ...]'); only nprobe/n_cells of
-    the data is ever read."""
-    raw = spark.read.text(f"{path}/centroids.json").collect()
-    meta = json.loads(raw[0].value)
-    centroids = np.asarray(meta["centroids"], dtype=np.float64)
-    corpus = spark.read.parquet(f"{path}/corpus")
-    cand = corpus.filter(
-        F.col("cell").isin(_probe_cells(centroids, query, nprobe))
-    )
-    return cosine_topk(cand, meta["vec_col"], id_col, query, k, round_to)
-
-
 def _ivf_probe_frame(
     queries: DataFrame,
     query_id_col: str,
@@ -638,10 +536,7 @@ def _ivf_probe_frame(
     cell id on exact ties — np.argsort in the per-query path leaves tie
     order unspecified, but exact float-distance ties do not occur for
     real embeddings), sliced to nprobe."""
-    if not (1 <= nprobe <= len(centroids)):
-        raise ValueError(
-            f"nprobe must be in [1, n_cells={len(centroids)}], got {nprobe}"
-        )
+    _check_nprobe(len(centroids), nprobe)
     qv = F.transform(F.col("__qv"), lambda x: x.cast("double"))
 
     def dist2(cent: np.ndarray):
@@ -710,42 +605,3 @@ def ivf_ann_join(
     )
     cand = bc.join(probes, F.col("__corpus_cell") == F.col("__cell"))
     return _score_and_rank(cand, vec_col, id_col, k, round_to)
-
-
-def ivf_ann_join_indexed(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    id_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    *,
-    k: int = 10,
-    nprobe: int = 4,
-    round_to: int = 6,
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """Batch IVF ANN against a persisted index (ivf_write_index): reads
-    only the UNION of the queries' probe cells via static partition
-    pruning. Like lsh_ann_join_indexed, a literal filter is required for
-    planning-time pruning, so the distinct probed cells are collected
-    first — bounded by n_cells values, strictly smaller metadata than
-    even the LSH probe union."""
-    raw = spark.read.text(f"{path}/centroids.json").collect()
-    meta = json.loads(raw[0].value)
-    centroids = np.asarray(meta["centroids"], dtype=np.float64)
-    probes = _ivf_probe_frame(
-        queries, query_id_col, query_vec_col, centroids, nprobe,
-        broadcast_queries=False,
-    )
-    cells = sorted(
-        r["__cell"] for r in probes.select("__cell").distinct().collect()
-    )
-    if broadcast_queries:
-        probes = F.broadcast(probes)
-    corpus = spark.read.parquet(f"{path}/corpus")
-    corpus = corpus.filter(F.col("cell").isin(cells)).withColumn(
-        "__vn", _sqnorm_col(meta["vec_col"])
-    )
-    cand = corpus.join(probes, F.col("cell") == F.col("__cell"))
-    return _score_and_rank(cand, meta["vec_col"], id_col, k, round_to)

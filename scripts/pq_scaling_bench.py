@@ -1,5 +1,5 @@
 """Scaling-efficiency evidence for the PQ ingest path: the identical
-ivfpq_encode (pandas engine — the production codebook-size path) job at
+ivfpq_encode (the fused Arrow kernel at production codebook size) job at
 two parallelism levels over the same synthetic vector table, reporting
 throughput at both and efficiency = (thr_4N / thr_N) / 4. Same
 methodology as scripts/scaling_bench.py (interleaved levels, best-of per
@@ -86,8 +86,7 @@ def run_child(cores: int) -> None:
         # keep=[id]: the index-build projection — vectors enter the kernel
         # but are never re-serialized out of it (ivfpq_write_index shape)
         enc = ivfpq_encode(
-            frame, "embedding", cents, books, engine="pandas",
-            keep=["vec_id"],
+            frame, "embedding", cents, books, keep=["vec_id"]
         )
         # force full encode; checksum keeps the result honest across runs
         from pyspark.sql import functions as F
@@ -153,7 +152,7 @@ def main() -> None:
         hi / lo
     )
     report = {
-        "job": "ivfpq_encode (pandas engine, m=8, k=256, 16 cells, dim 64)",
+        "job": "ivfpq_encode (m=8, k=256, 16 cells, dim 64)",
         "rows": ROWS,
         "levels": results,
         "efficiency": round(eff, 3),

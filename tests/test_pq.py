@@ -1,11 +1,14 @@
-"""Product quantization (operators/pq.py): encode parity across engines,
-ADC correctness, trained-codebook quality, and the top-k plan shape."""
+"""Product quantization (operators/pq.py): encode parity with the
+left-fold reference, ADC correctness, trained-codebook quality, the top-k
+plan shape, and the persisted index as query input."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from ddsketch_ruby_spark.operators.pq import (
+    _gemm_argmin_exact,
+    _gemm_pre,
     pq_adc_lut,
     pq_codebook,
     pq_encode,
@@ -19,37 +22,86 @@ def emb(spark):
     return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
 
+def _fold_dist2(sub, book):
+    """(n, k) squared L2 as the ordered left fold over the dims — the sum
+    the oracles compute (NumPy's .sum adds 8 or more terms pairwise)."""
+    diff = sub[:, None, :] - book[None, :, :]
+    acc = np.zeros(diff.shape[:2])
+    for j in range(diff.shape[2]):
+        acc = acc + diff[..., j] * diff[..., j]
+    return acc
+
+
 def _np_codes(vecs, books):
     m, k, dsub = books.shape
     out = np.empty((len(vecs), m), dtype=np.int64)
     for s in range(m):
         sub = vecs[:, s * dsub : (s + 1) * dsub]
-        d = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(-1)
-        out[:, s] = d.argmin(1)
+        out[:, s] = _fold_dist2(sub, books[s]).argmin(1)
     return out
 
 
-def test_encode_jvm_equals_pandas_bit_identical(spark, emb):
+def _py_fold_argmin(x, book):
+    """Pure-Python reference: left fold from 0.0, ties to the lowest code."""
+    best, best_d = 0, None
+    for c, entry in enumerate(book):
+        acc = 0.0
+        for a, b in zip(x, entry):
+            acc = acc + (float(a) - float(b)) * (float(a) - float(b))
+        if best_d is None or acc < best_d:
+            best, best_d = c, acc
+    return best
+
+
+def test_argmin_near_ties_follow_the_left_fold():
+    """Constructed near-ties at dsub = 8 (the gate geometry, dim 64 / m 8):
+    the second codebook entry is x + permutation(c1 - x), so both exact
+    distances sum the same squares in a different order and differ by at
+    most an ulp. The kernel and the _np_codes reference must pick what the
+    left fold picks; a pairwise .sum misses a large share of these rows."""
+    rng = np.random.default_rng(0)
+    dsub = 8
+    rows = []
+    for _ in range(1000):
+        x = rng.normal(0.0, 0.125, dsub)
+        c1 = x + rng.normal(0.0, 0.05, dsub)
+        rows.append((x, np.stack([c1, x + rng.permutation(c1 - x)])))
+    pairwise_misses = 0
+    for x, book in rows:
+        want = _py_fold_argmin(x, book)
+        got = _gemm_argmin_exact(x[None, :], book, *_gemm_pre(book))
+        assert got[0] == want
+        assert _np_codes(x[None, :], book[None])[0, 0] == want
+        pairwise = ((x[None, :] - book) ** 2).sum(-1).argmin()
+        pairwise_misses += int(pairwise != want)
+    assert pairwise_misses > 0  # the rows do exercise the repair
+
+
+def test_argmin_far_from_origin_matches_left_fold():
+    """Vectors and codebook entries near (100, ..., 100): the float32
+    expansion ||x||^2 - 2 x.c + ||c||^2 loses ~1e-6 of ||x||^2 ~ 8e4,
+    far more than the gaps between codes, so the repair margin must
+    scale with the norms, not only with the distance."""
+    rng = np.random.default_rng(1)
+    book = 100.0 + 0.05 * rng.normal(size=(16, 8))
+    x = book[rng.integers(16, size=5000)] + 0.03 * rng.normal(size=(5000, 8))
+    got = _gemm_argmin_exact(x, book, *_gemm_pre(book))
+    assert np.array_equal(got, _fold_dist2(x, book).argmin(1))
+
+
+def test_encode_matches_left_fold_reference(spark, emb):
     books = pq_codebook(dim=64, m=8, codebook_size=16, seed=42)
-    a = {
+    got = {
         r["vec_id"]: list(r["pq_code"])
-        for r in pq_encode(emb, "embedding", books, engine="jvm").collect()
+        for r in pq_encode(emb, "embedding", books).collect()
     }
-    b = {
-        r["vec_id"]: list(r["pq_code"])
-        for r in pq_encode(emb, "embedding", books, engine="pandas").collect()
-    }
-    assert a == b
-    # and both match the plain-NumPy reference
     rows = emb.collect()
     vecs = np.stack(
         [np.asarray(r["embedding"], dtype=np.float64) for r in rows]
     )
     ref = _np_codes(vecs, books)
     for i, r in enumerate(rows):
-        assert a[r["vec_id"]] == ref[i].tolist()
-    with pytest.raises(ValueError):
-        pq_encode(emb, "embedding", books, engine="bogus")
+        assert got[r["vec_id"]] == ref[i].tolist()
 
 
 def test_adc_topk_matches_numpy_and_plan(spark, emb):
@@ -133,30 +185,30 @@ def _seeded_model():
     return cents, books
 
 
-def test_ivfpq_encode_engines_agree(spark, emb):
+def _ivfpq_numpy_codes(rows, cents, books):
+    vecs = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
+    cell = _fold_dist2(vecs, cents).argmin(1)
+    return cell, _np_codes(vecs - cents[cell], books)
+
+
+def test_ivfpq_encode_matches_left_fold_reference(spark, emb):
     from ddsketch_ruby_spark.operators.pq import ivfpq_encode
 
     cents, books = _seeded_model()
-    a = {
+    got = {
         r["vec_id"]: (r["ivf_cell"], list(r["pq_code"]))
         for r in ivfpq_encode(emb, "embedding", cents, books).collect()
     }
-    b = {
-        r["vec_id"]: (r["ivf_cell"], list(r["pq_code"]))
-        for r in ivfpq_encode(
-            emb, "embedding", cents, books, engine="pandas"
-        ).collect()
-    }
-    assert a == b
+    rows = emb.collect()
+    cell, codes = _ivfpq_numpy_codes(rows, cents, books)
+    for i, r in enumerate(rows):
+        assert got[r["vec_id"]] == (cell[i], codes[i].tolist())
     # every vector landed in a valid cell; codes are residual codes
-    assert all(0 <= c < 8 for c, _ in a.values())
+    assert all(0 <= c < 8 for c, _ in got.values())
 
 
 def _ivfpq_numpy_scores(rows, cents, books, query):
-    vecs = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    cell = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(-1).argmin(1)
-    resid = vecs - cents[cell]
-    codes = _np_codes(resid, books)
+    cell, codes = _ivfpq_numpy_codes(rows, cents, books)
     q = np.asarray(query, dtype=np.float64)
     scores = np.empty(len(rows))
     m, k, dsub = books.shape
@@ -257,8 +309,8 @@ def test_ivfpq_index_prunes_stores_no_vectors_and_matches_fly(
     from ddsketch_ruby_spark.operators.pq import (
         ivfpq_encode,
         ivfpq_topk,
-        ivfpq_topk_indexed,
         ivfpq_write_index,
+        read_ivfpq_index,
     )
 
     cents, books = _seeded_model()
@@ -271,7 +323,10 @@ def test_ivfpq_index_prunes_stores_no_vectors_and_matches_fly(
         float(x)
         for x in emb.filter(F.col("vec_id") == 2).collect()[0]["embedding"]
     ]
-    res = ivfpq_topk_indexed(spark, path, query, k=5, nprobe=2)
+    enc, icents, ibooks, id_col = read_ivfpq_index(spark, path)
+    assert id_col == "vec_id"
+    assert np.array_equal(icents, cents) and np.array_equal(ibooks, books)
+    res = ivfpq_topk(enc, icents, ibooks, id_col, query, k=5, nprobe=2)
     import re
 
     plan = res._jdf.queryExecution().executedPlan().toString()
@@ -288,7 +343,7 @@ def test_ivfpq_index_prunes_stores_no_vectors_and_matches_fly(
 
 def test_pandas_encode_survives_empty_partitions(spark):
     """mapInPandas sees empty Arrow batches whenever partitions outnumber
-    rows — the pandas engine must pass them through, not np.stack([])."""
+    rows — the encode kernel must pass them through, not np.stack([])."""
     from ddsketch_ruby_spark.operators.pq import ivfpq_encode
 
     cents, books = _seeded_model()
@@ -297,9 +352,9 @@ def test_pandas_encode_survives_empty_partitions(spark):
          for i in range(3)],
         "vec_id long, embedding array<double>",
     ).repartition(16)  # 13+ empty partitions
-    enc = pq_encode(few, "embedding", books, engine="pandas")
+    enc = pq_encode(few, "embedding", books)
     assert enc.count() == 3
-    assert ivfpq_encode(few, "embedding", cents, books, engine="pandas").count() == 3
+    assert ivfpq_encode(few, "embedding", cents, books).count() == 3
 
 
 def test_ann_topk_reranked_matches_bruteforce_when_exhaustive(spark, emb):
@@ -365,37 +420,50 @@ def test_ann_topk_rerank_recall_geq_plain_adc(spark, emb):
 
 
 def test_ann_topk_indexed_and_validation(spark, emb, tmp_path):
-    """index_path mode reads the persisted layout, validates id_col, and
+    """ann_topk over a persisted index (read_ivfpq_index) reranks from the
+    pruned codes read, rejects an id column the index does not store, and
     rerank=False returns raw ADC output."""
+    from pyspark.errors import AnalysisException
+
     from ddsketch_ruby_spark.operators.pq import (
         ann_topk,
-        ivfpq_topk_indexed,
+        ivfpq_topk,
         ivfpq_write_index,
+        read_ivfpq_index,
     )
 
     cents, books = _seeded_model()
     path = str(tmp_path / "annidx")
     ivfpq_write_index(emb, path, "embedding", "vec_id", cents, books)
+    enc, icents, ibooks, id_col = read_ivfpq_index(spark, path)
+    index = dict(encoded=enc, centroids=icents, codebooks=ibooks)
     query = [
         float(x)
         for x in emb.filter(F.col("vec_id") == 2).collect()[0]["embedding"]
     ]
     got = ann_topk(
-        emb, "embedding", "vec_id", query, k=5, candidates=20, nprobe=2,
-        index_path=path,
-    ).collect()
+        emb, "embedding", id_col, query, k=5, candidates=20, nprobe=2,
+        **index,
+    )
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    import re
+
+    assert re.search(r"PartitionFilters: \[[^\]]*cell", plan), plan
+    got = got.collect()
     assert got[0]["vec_id"] == 2 and got[0]["sim"] == 1.0
     raw = ann_topk(
-        emb, "embedding", "vec_id", query, k=5, nprobe=2,
-        index_path=path, rerank=False,
+        emb, "embedding", id_col, query, k=5, nprobe=2, rerank=False,
+        **index,
     )
     assert raw.columns == ["vec_id", "pq_dist"]
     assert [r["vec_id"] for r in raw.collect()] == [
         r["vec_id"]
-        for r in ivfpq_topk_indexed(spark, path, query, k=5, nprobe=2).collect()
+        for r in ivfpq_topk(
+            enc, icents, ibooks, id_col, query, k=5, nprobe=2
+        ).collect()
     ]
-    with pytest.raises(ValueError):
-        ann_topk(emb, "embedding", "wrong_id", query, index_path=path)
+    with pytest.raises(AnalysisException):
+        ann_topk(emb, "embedding", "wrong_id", query, **index)
     with pytest.raises(ValueError):
         ann_topk(emb, "embedding", "vec_id", query)  # no index source
 
@@ -439,9 +507,9 @@ def test_ivfpq_ann_join_matches_per_query(spark, emb):
 def test_ivfpq_ann_join_indexed_prunes_and_matches_fly(spark, emb, tmp_path):
     from ddsketch_ruby_spark.operators.pq import (
         ivfpq_ann_join,
-        ivfpq_ann_join_indexed,
         ivfpq_encode,
         ivfpq_write_index,
+        read_ivfpq_index,
     )
 
     cents, books = _seeded_model()
@@ -450,19 +518,17 @@ def test_ivfpq_ann_join_indexed_prunes_and_matches_fly(spark, emb, tmp_path):
     queries = emb.filter(F.col("vec_id") % 97 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
     )
-    res = ivfpq_ann_join_indexed(
-        spark, path, queries, "qid", "qemb", k=5, nprobe=2
+    idx, icents, ibooks, id_col = read_ivfpq_index(spark, path)
+    res = ivfpq_ann_join(
+        idx, queries, icents, ibooks, id_col, "qid", "qemb", k=5, nprobe=2
     )
     plan = res._jdf.queryExecution().executedPlan().toString()
     import re
 
     assert re.search(r"PartitionFilters: \[[^\]]*cell", plan), plan
-    enc = ivfpq_encode(
-        emb, "embedding", cents, books, cell_col="cell", keep=["vec_id"]
-    )
+    enc = ivfpq_encode(emb, "embedding", cents, books, keep=["vec_id"])
     fly = ivfpq_ann_join(
-        enc, queries, cents, books, "vec_id", "qid", "qemb",
-        k=5, nprobe=2, cell_col="cell",
+        enc, queries, cents, books, "vec_id", "qid", "qemb", k=5, nprobe=2
     )
     assert sorted(
         [(r["query_id"], r["vec_id"], r["pq_dist"], r["rank"]) for r in res.collect()],
@@ -527,9 +593,9 @@ def test_ann_join_topk_indexed_matches_in_memory(spark, emb, tmp_path):
     candidate stage still partition-prunes."""
     from ddsketch_ruby_spark.operators.pq import (
         ann_join_topk,
-        ann_join_topk_indexed,
         ivfpq_encode,
         ivfpq_write_index,
+        read_ivfpq_index,
     )
 
     cents, books = _seeded_model()
@@ -538,16 +604,19 @@ def test_ann_join_topk_indexed_matches_in_memory(spark, emb, tmp_path):
     queries = emb.filter(F.col("vec_id") % 97 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
     )
-    res = ann_join_topk_indexed(
-        spark, path, emb, queries, "embedding", "qid", "qemb",
-        k=5, candidates=20, nprobe=2,
+    idx, icents, ibooks, id_col = read_ivfpq_index(spark, path)
+    res = ann_join_topk(
+        emb, idx, queries, icents, ibooks, "embedding", id_col,
+        "qid", "qemb", k=5, candidates=20, nprobe=2,
     )
-    enc = ivfpq_encode(
-        emb, "embedding", cents, books, cell_col="cell", keep=["vec_id"]
-    )
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    import re
+
+    assert re.search(r"PartitionFilters: \[[^\]]*cell", plan), plan
+    enc = ivfpq_encode(emb, "embedding", cents, books, keep=["vec_id"])
     fly = ann_join_topk(
         emb, enc, queries, cents, books, "embedding", "vec_id",
-        "qid", "qemb", k=5, candidates=20, nprobe=2, cell_col="cell",
+        "qid", "qemb", k=5, candidates=20, nprobe=2,
     )
     key = lambda t: (t[0], t[3])  # noqa: E731
     assert sorted(

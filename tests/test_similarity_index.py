@@ -1,9 +1,8 @@
 """Persisted hyperplane-LSH index (lsh_write_index / lsh_topk_indexed):
 partition pruning at the scan, parity with the on-the-fly lsh_topk path,
-and metadata round-trip — the LSH twin of the IVF index tests in
-test_text_similarity.py. Also pins the round-4 API hardening: the
-ngram_jaccard_exact defaulted-cap FutureWarning and dedup_clusters'
-keyword-only iteration budget."""
+and metadata round-trip; the batch LSH and IVF joins. Also pins the
+round-4 API hardening: the ngram_jaccard_exact defaulted-cap FutureWarning
+and dedup_clusters' keyword-only iteration budget."""
 
 import warnings
 
@@ -199,96 +198,6 @@ def test_dedup_corpus_defaults_to_128bit_exact_keys():
     assert sig.parameters["exact_hash_bits"].default == 128
 
 
-def test_lsh_ann_join_indexed_matches_batch_and_prunes(spark, planted_idx):
-    """The indexed batch path must (a) prune the scan to the union of the
-    queries' probe buckets via a STATIC PartitionFilter, and (b) return
-    exactly what lsh_ann_join computes over the raw corpus with the same
-    planes — for both the full-bucket layout and (c) the prefix layout."""
-    from ddsketch_ruby_spark.operators.similarity import (
-        _hyperplanes,
-        _lsh_probes,
-        lsh_ann_join,
-        lsh_ann_join_indexed,
-    )
-
-    df, query, rows, path, planes = planted_idx
-    qids = [0, 50, 1000]
-    queries = df.filter(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
-    )
-    res = lsh_ann_join_indexed(
-        spark, path, queries, "vec_id", "qid", "qemb", k=4, max_hamming=1
-    )
-    # scan-node metadata strings (PartitionFilters/PushedFilters) truncate
-    # at spark.sql.maxMetadataStringLength (default 100 chars -> the INSET
-    # list renders as "2..."); raise it so the full probe set is parseable
-    old = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    try:
-        plan = res._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.maxMetadataStringLength", old)
-    assert "PartitionFilters: [lsh_bucket" in plan, plan
-    got = sorted(tuple(r) for r in res.collect())
-    want = sorted(
-        tuple(r)
-        for r in lsh_ann_join(
-            df, queries, "embedding", "vec_id", "qid", "qemb",
-            dim=32, k=4, n_planes=8, max_hamming=1,
-        ).collect()
-    )
-    assert got == want
-    # the static filter is exactly the union of the queries' probe sets
-    union = set()
-    for qid in qids:
-        qvec = [float(x) for x in {r[0]: r[1] for r in rows}[qid]]
-        union |= set(_lsh_probes(planes, qvec, 1))
-    import re
-
-    # Catalyst renders short lists as `IN (a,b)` and long ones as
-    # `INSET a, b, ...` — accept either, require exact set equality
-    m = re.search(
-        r"PartitionFilters: \[lsh_bucket[^\]]*?(?:IN \(([^)]*)\)|INSET ([^\]]*))",
-        plan,
-    )
-    assert m, plan
-    vals = m.group(1) or m.group(2)
-    got_set = {
-        int(t) for t in (x.strip() for x in vals.split(","))
-        if t.lstrip("-").isdigit()  # the filter list also carries
-    }  # isnotnull(...) entries after the INSET values
-    assert got_set == union
-
-
-def test_lsh_ann_join_indexed_prefix_layout(spark, planted_idx, tmp_path):
-    from ddsketch_ruby_spark.operators.similarity import (
-        lsh_ann_join,
-        lsh_ann_join_indexed,
-        lsh_write_index,
-    )
-
-    df, query, rows, _, _ = planted_idx
-    path = str(tmp_path / "idx16b")
-    lsh_write_index(df, path, "embedding", dim=32, n_planes=16, prefix_bits=6)
-    queries = df.filter(F.col("vec_id").isin([0, 1000])).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
-    )
-    res = lsh_ann_join_indexed(
-        spark, path, queries, "vec_id", "qid", "qemb", k=4, max_hamming=1
-    )
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [lsh_prefix" in plan, plan
-    got = sorted(tuple(r) for r in res.collect())
-    want = sorted(
-        tuple(r)
-        for r in lsh_ann_join(
-            df, queries, "embedding", "vec_id", "qid", "qemb",
-            dim=32, k=4, n_planes=16, max_hamming=1,
-        ).collect()
-    )
-    assert got == want
-
-
 def test_ivf_ann_join_matches_per_query_topk(spark, planted_idx):
     """Batch IVF must equal the per-query operator row-for-row when both
     use the SAME trained centroids (passed explicitly so neither
@@ -325,49 +234,41 @@ def test_ivf_ann_join_matches_per_query_topk(spark, planted_idx):
         ], qid
 
 
-def test_ivf_ann_join_indexed_matches_batch_and_prunes(
-    spark, planted_idx, tmp_path
-):
+def test_ivf_probe_frame_rejects_bad_nprobe(spark, planted_idx):
+    """Every probe path — the batch IVF join, the per-query IVF and IVF-PQ
+    top-k, and the batch IVF-PQ join — refuses an nprobe outside
+    [1, n_cells] instead of probing a wrong cell set (-1 would probe all
+    cells but one) or returning nothing (0)."""
+    from ddsketch_ruby_spark.operators.pq import (
+        ivfpq_ann_join,
+        ivfpq_topk,
+        pq_codebook,
+    )
     from ddsketch_ruby_spark.operators.similarity import (
         ivf_ann_join,
-        ivf_ann_join_indexed,
-        ivf_write_index,
+        ivf_topk,
+        ivf_train,
     )
 
-    df, query, rows, _, _ = planted_idx
-    path = str(tmp_path / "ivfidx")
-    cents = ivf_write_index(df, path, "embedding", n_cells=8, seed=42)
-    queries = df.filter(F.col("vec_id").isin([0, 1000])).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
-    )
-    res = ivf_ann_join_indexed(
-        spark, path, queries, "vec_id", "qid", "qemb", k=4, nprobe=2
-    )
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [cell" in plan, plan
-    got = sorted(tuple(r) for r in res.collect())
-    want = sorted(
-        tuple(r)
-        for r in ivf_ann_join(
-            df, queries, "embedding", "vec_id", "qid", "qemb",
-            k=4, nprobe=2, centroids=cents,
-        ).collect()
-    )
-    assert got == want
-
-
-def test_ivf_probe_frame_rejects_bad_nprobe(spark, planted_idx):
-    from ddsketch_ruby_spark.operators.similarity import ivf_ann_join, ivf_train
-
-    df = planted_idx[0]
+    df, query = planted_idx[0], planted_idx[1]
     cents = ivf_train(df, "embedding", n_cells=4, seed=42)
+    books = pq_codebook(dim=32, m=4, codebook_size=4)
     q = df.limit(1).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
     )
-    for bad in (0, 5):
+    for bad in (0, 5, -1):
         with pytest.raises(ValueError, match="nprobe"):
             ivf_ann_join(df, q, "embedding", "vec_id", "qid", "qemb",
                          nprobe=bad, centroids=cents)
+        with pytest.raises(ValueError, match="nprobe"):
+            ivf_topk(df, "embedding", "vec_id", query, n_cells=4,
+                     nprobe=bad, sample_fraction=1.0)
+        # the encoded frame is never read: the check runs at plan time
+        with pytest.raises(ValueError, match="nprobe"):
+            ivfpq_topk(df, cents, books, "vec_id", query, nprobe=bad)
+        with pytest.raises(ValueError, match="nprobe"):
+            ivfpq_ann_join(df, q, cents, books, "vec_id", "qid", "qemb",
+                           nprobe=bad)
 
 
 def test_batch_ann_and_simhash_pairs_handle_empty_inputs(spark, planted_idx):

@@ -259,31 +259,6 @@ def test_ivf_train_clusters_planted(spark, planted):
     assert len(planted_cells) == 1, planted_cells
 
 
-def test_ivf_index_partition_pruning(spark, planted, tmp_path):
-    """Persisted IVF index: querying must (a) return the planted
-    neighbors, (b) prune non-probed cells at the SCAN via the partition
-    column — the 100 TB read-volume lever."""
-    from ddsketch_ruby_spark.operators.similarity import (
-        ivf_topk_indexed,
-        ivf_write_index,
-    )
-
-    df, query, rows = planted
-    path = str(tmp_path / "ivf")
-    ivf_write_index(df, path, "embedding", n_cells=8, iters=10,
-                    sample_fraction=1.0)
-    res = ivf_topk_indexed(spark, path, "vec_id", query, k=8, nprobe=2)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [cell" in plan, plan
-    got = {r["vec_id"] for r in res.collect()}
-    exact = set(_exact_topk(rows, query, 8))
-    assert len(exact & got) >= 6
-    # pruned read: only the probed partitions' files are listed
-    corpus = spark.read.parquet(f"{path}/corpus")
-    n_cells_on_disk = corpus.select("cell").distinct().count()
-    assert n_cells_on_disk > 2  # there genuinely was something to prune
-
-
 def test_lsh_scans_subset(spark, emb):
     """On the driver's (near-random) embeddings the value of LSH is the
     candidate-set reduction; verify the bucket filter actually prunes."""
