@@ -4291,7 +4291,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "ddsketch_ruby_spark.operators.dedup", fromlist=["minhash_signatures"]
     ).minhash_signatures(
         _tables(spark, sf_dir, "documents")[0], "text", "doc_id",
-        num_hashes=64, variant="oph",
+        num_hashes=64,
     ).select("doc_id", F.posexplode("sig").alias("pos", "sig")),
     "cosine_allpairs_dup": lambda spark, sf_dir: __import__(
         "ddsketch_ruby_spark.operators.dedup", fromlist=["cosine_pairs_exact"]

@@ -1,18 +1,32 @@
 """Deduplication operators for web-scale corpora.
 
 - exact_dedup: hash-groupBy exact duplicate collapse (one shuffle on the
-  dedup key; at 100 TB prefer key_cols=[xxhash64(text)] so the shuffle
-  carries 8-byte keys instead of full documents — provided via hash_key).
-- minhash_lsh_dedup: shingle -> minhash signature -> banded LSH buckets ->
-  candidate pairs within buckets. All hashing is vectorized NumPy inside
-  mapInPandas; the only shuffles are the band-bucket groupBys.
-- simhash: 64-bit near-dup fingerprint per document.
-- simhash_near_dup_pairs: Hamming-band LSH over those fingerprints —
-  EXACT (pigeonhole-lossless) near-dup pairs for max_dist < bands.
+  dedup key; at 100 TB pass hash_key=True so the shuffle carries 8/16-byte
+  xxhash64 keys instead of full documents).
+- minhash_signatures / minhash_lsh_pairs: shingle -> one-permutation
+  minhash signature -> banded LSH buckets -> candidate pairs within
+  buckets, scored with the estimated Jaccard. All hashing is vectorized
+  NumPy inside mapInPandas; the only wide shuffle is the bucket self-join.
+- ngram_jaccard_pairs / ngram_jaccard_exact: exact shingle-set Jaccard,
+  on LSH candidates or by the relational shingle equi-join.
+- cosine_near_dup_pairs / cosine_pairs_exact: embedding-cosine pairs, on
+  hyperplane-LSH buckets or all pairs.
+- simhash / simhash_near_dup_pairs: 64-bit fingerprints and Hamming-band
+  LSH over them — EXACT (pigeonhole-lossless) pairs for max_dist < bands.
+- dedup_clusters / collapse_near_dups / dedup_corpus: pair graph ->
+  min-id clusters -> one canonical survivor per cluster.
+- decontaminate / duplicate_spans: word n-gram overlap against a
+  benchmark set, and repeated-span detection.
+
+The pair operators share one pipeline: _drop_hot_keys (the aggregate +
+broadcast-anti hot-key cap) and _self_pairs (the ``l.id < r.id`` self-join
+on shared keys).
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -20,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .similarity import _doubles, _dot_col, _sqnorm_col, lsh_bucket
 
 __all__ = [
     "exact_dedup",
@@ -109,22 +125,45 @@ def _shingle_hashes(text: str, width: int, unique: bool = True) -> np.ndarray:
     return np.unique(h) if unique else h
 
 
-def _minhash_batch(
-    texts: pd.Series, num_hashes: int, shingle: int, seed: int
-) -> list[np.ndarray]:
-    """Multiply-shift universal hashing (odd multiplier, uint64 wraparound,
-    top-63-bit keep) instead of mod-Mersenne — ~4x cheaper per (hash,
-    shingle) with the same minwise-independence quality in practice."""
-    rng = np.random.default_rng(seed)
-    a = (rng.integers(1, 1 << 62, size=num_hashes, dtype=np.uint64) << 1) | 1
-    b = rng.integers(0, 1 << 62, size=num_hashes, dtype=np.uint64)
-    out = []
+# FNV-64 prime: odd, so invertible mod 2^64 — the prefix-product word
+# hash below divides by p^start via multiplication with this inverse.
+_GRAM_P = np.uint64(1099511628211)
+_GRAM_P_INV = np.uint64(pow(1099511628211, -1, 1 << 64))
+_GRAM_CHUNK_BYTES = 1 << 22  # flat bytes per kernel pass; see _oph_batch
+
+
+def _finalize64(h: np.ndarray) -> np.ndarray:
+    """Murmur-style avalanche, in place — same mix as _shingle_hashes."""
+    h ^= h >> np.uint64(33)
+    h *= np.uint64(0xFF51AFD7ED558CCD)
+    h ^= h >> np.uint64(33)
+    return h
+
+
+def _poly_coef(width: int) -> np.ndarray:
+    """p^0 .. p^(width-1) mod 2^64: the rolling-hash weights per byte
+    (or per word hash) of a window."""
+    return np.power(_GRAM_P, np.arange(width, dtype=np.uint64), dtype=np.uint64)
+
+
+def _concat_padded(
+    texts: pd.Series | list, width: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The batched hashing prelude: every doc's UTF-8 bytes, space-padded
+    to at least ``width`` bytes (the _shingle_hashes rule), concatenated
+    into one flat array. Returns (data, starts, counts): the bytes, each
+    doc's start offset in them, and each doc's window count. ``texts``
+    must be nonempty."""
+    bufs = []
     for t in texts:
-        sh = _shingle_hashes(t or "", shingle, unique=False)
-        with np.errstate(over="ignore"):
-            vals = (a[:, None] * sh[None, :] + b[:, None]) >> np.uint64(1)
-        out.append(vals.min(axis=1).astype(np.int64))
-    return out
+        b = np.frombuffer((t or "").encode("utf-8", "ignore"), dtype=np.uint8)
+        if len(b) < width:
+            b = np.pad(b, (0, width - len(b)), constant_values=32)
+        bufs.append(b)
+    lens = np.fromiter((len(b) for b in bufs), np.int64, len(bufs))
+    starts = np.zeros(len(bufs), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    return np.concatenate(bufs), starts, lens - width + 1
 
 
 def _batch_window_hashes(
@@ -137,41 +176,23 @@ def _batch_window_hashes(
     masked out by construction, and the murmur-style finalizer is applied
     to the surviving windows. Returns (hv, doc_of, n): the uint64 window
     hashes (identical values to _shingle_hashes), the owning doc index per
-    window, and the doc count. The shared kernel behind the batched OPH
-    minhash, batched SimHash, and batched shingle-set extraction — per-doc
-    Python overhead appears in none of them."""
-    W = width
+    window, and the doc count. The shared kernel behind batched SimHash
+    and batched shingle-set extraction (_oph_batch runs the same hash
+    chunked) — per-doc Python overhead appears in none of them."""
     n = len(texts)
-    bufs = []
-    lens = np.empty(n, dtype=np.int64)
-    for i, t in enumerate(texts):
-        b = np.frombuffer((t or "").encode("utf-8", "ignore"), dtype=np.uint8)
-        if len(b) < W:
-            b = np.pad(b, (0, W - len(b)), constant_values=32)
-        bufs.append(b)
-        lens[i] = len(b)
     if n == 0:
         return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64), 0
-    data = np.concatenate(bufs)
-    total = len(data)
-    m = total - W + 1
-    coef = np.power(
-        np.uint64(1099511628211), np.arange(W, dtype=np.uint64), dtype=np.uint64
-    )
+    data, starts, counts = _concat_padded(texts, width)
+    m = len(data) - width + 1
+    coef = _poly_coef(width)
     with np.errstate(over="ignore"):
         h = np.zeros(m, dtype=np.uint64)
-        for b_i in range(W):
+        for b_i in range(width):
             h += data[b_i : b_i + m].astype(np.uint64) * coef[b_i]
-        # valid window starts per doc: start_i .. start_i + len_i - W
-        starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        counts = lens - W + 1
+        # valid window starts per doc: start_i .. start_i + len_i - width
         doc_of = np.repeat(np.arange(n, dtype=np.int64), counts)
         base = np.repeat(starts - (np.cumsum(counts) - counts), counts)
-        hv = h[np.arange(len(doc_of), dtype=np.int64) + base]
-        hv ^= hv >> np.uint64(33)
-        hv *= np.uint64(0xFF51AFD7ED558CCD)
-        hv ^= hv >> np.uint64(33)
+        hv = _finalize64(h[np.arange(len(doc_of), dtype=np.int64) + base])
     return hv, doc_of, n
 
 
@@ -229,21 +250,6 @@ def _per_doc_unique(
     return hs, ds, cs
 
 
-# FNV-64 prime: odd, so invertible mod 2^64 — the prefix-product word
-# hash below divides by p^start via multiplication with this inverse.
-_GRAM_P = np.uint64(1099511628211)
-_GRAM_P_INV = np.uint64(pow(1099511628211, -1, 1 << 64))
-_GRAM_CHUNK_BYTES = 1 << 22  # flat bytes per kernel pass; see _oph_batch
-
-
-def _finalize64(h: np.ndarray) -> np.ndarray:
-    """Murmur-style avalanche, in place — same mix as _shingle_hashes."""
-    h ^= h >> np.uint64(33)
-    h *= np.uint64(0xFF51AFD7ED558CCD)
-    h ^= h >> np.uint64(33)
-    return h
-
-
 def _batch_word_gram_hashes(
     texts: pd.Series | list, n: int
 ) -> tuple[np.ndarray, np.ndarray, int]:
@@ -278,7 +284,7 @@ def _batch_word_gram_hashes(
     ndocs = len(encoded)
     out_h: list[np.ndarray] = []
     out_d: list[np.ndarray] = []
-    coef = np.power(_GRAM_P, np.arange(n, dtype=np.uint64), dtype=np.uint64)
+    coef = _poly_coef(n)
     i = 0
     while i < ndocs:
         j, size = i, 0
@@ -431,23 +437,10 @@ def _oph_batch(
     mix = np.uint64(seed * 2 + 1)
     n = len(texts)
     int64_max = np.iinfo(np.int64).max
-    bufs = []
-    lens = np.empty(n, dtype=np.int64)
-    for i, t in enumerate(texts):
-        b = np.frombuffer((t or "").encode("utf-8", "ignore"), dtype=np.uint8)
-        if len(b) < W:
-            b = np.pad(b, (0, W - len(b)), constant_values=32)
-        bufs.append(b)
-        lens[i] = len(b)
     if n == 0:
         return []
-    data = np.concatenate(bufs)
-    coef = np.power(
-        np.uint64(1099511628211), np.arange(W, dtype=np.uint64), dtype=np.uint64
-    )
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    counts = lens - W + 1
+    data, starts, counts = _concat_padded(texts, W)
+    coef = _poly_coef(W)
     cum_counts = np.cumsum(counts)
     total_windows = int(cum_counts[-1])
     sig = np.full(n * H, int64_max, dtype=np.int64)
@@ -471,9 +464,7 @@ def _oph_batch(
                 np.copyto(tp, data[pos + b_i], casting="unsafe")
                 tp *= coef[b_i]
                 hv += tp
-            hv ^= hv >> np.uint64(33)
-            hv *= np.uint64(0xFF51AFD7ED558CCD)
-            hv ^= hv >> np.uint64(33)
+            _finalize64(hv)
             hv *= mix
         if H & (H - 1) == 0:  # power-of-two bin count: mask, not divide
             np.copyto(g, hv & np.uint64(H - 1), casting="unsafe")
@@ -506,18 +497,16 @@ def minhash_signatures(
     num_hashes: int = 128,
     shingle: int = 5,
     seed: int = 42,
-    variant: str = "oph",
 ) -> DataFrame:
     """One minhash signature row per document: (id, sig array<long>).
 
-    variant="oph" (default): one-permutation hashing with rotation
-    densification (Li et al.) — O(n + H) per doc, cost flat in H.
-    variant="classic": num_hashes independent multiply-shift permutations,
-    O(n*H) per doc. Measured head-to-head on planted-Jaccard pairs
-    (j in {0.3,0.5,0.7,0.9}, 200-shingle docs): OPH estimator std matches
-    classic (0.052 vs 0.054 at H=64; 0.036 vs 0.038 at H=128, bias < 0.005
-    both) at 3-6.5x the single-core throughput, so the cheap variant is the
-    default; classic remains for cross-checking."""
+    One-permutation hashing with rotation densification (Li et al.,
+    _oph_batch) — O(n + H) per doc, cost flat in H. Measured head-to-head
+    against classic minhash (H independent multiply-shift permutations,
+    O(n*H) per doc) on planted-Jaccard pairs (j in {0.3,0.5,0.7,0.9},
+    200-shingle docs): the OPH estimator std matched classic (0.052 vs
+    0.054 at H=64; 0.036 vs 0.038 at H=128, bias < 0.005 both) at 3-6.5x
+    the single-core throughput, so OPH is the only signature."""
     out_schema = T.StructType(
         [
             next(f for f in df.schema.fields if f.name == id_col),
@@ -525,13 +514,11 @@ def minhash_signatures(
         ]
     )
 
-    hasher = {"classic": _minhash_batch, "oph": _oph_batch}[variant]
-
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            sigs = hasher(pdf[text_col], num_hashes, shingle, seed)
+            sigs = _oph_batch(pdf[text_col], num_hashes, shingle, seed)
             yield pd.DataFrame({id_col: pdf[id_col].values, "sig": sigs})
 
     src = df.select(id_col, text_col)
@@ -549,6 +536,53 @@ def minhash_signatures(
     return src.mapInPandas(compute, schema=out_schema)
 
 
+def _drop_hot_keys(
+    rows: DataFrame, keys: list[str], cap: int | None
+) -> DataFrame:
+    """``rows`` minus every row whose ``keys`` value occurs more than
+    ``cap`` times (``cap=None``: no cap) — the hot-key cap every pair
+    self-join runs first: a key shared by d rows makes d^2/2 join rows,
+    so one boilerplate mega-cluster would otherwise blow the join up
+    quadratically.
+
+    The key sizes are an aggregate (map-side combine: the shuffle carries
+    one row per distinct key) and the few over-cap keys are BROADCAST and
+    anti-joined, instead of a Window.partitionBy(keys) count — a window
+    would funnel the hottest key's rows into ONE task before dropping
+    them, exactly the skew the cap exists to prevent; with the broadcast
+    the capped rows never shuffle for the cap at all. ASSUMPTION: the
+    number of DISTINCT over-cap keys stays driver-broadcastable (millions,
+    not billions — each is 8-12 B); a corpus with a larger hot-key
+    universe fails loudly at the broadcast build."""
+    if cap is None:
+        return rows
+    hot = (
+        rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > cap)
+        .select(*keys)
+    )
+    return rows.join(F.broadcast(hot), keys, "left_anti")
+
+
+def _self_pairs(
+    rows: DataFrame, keys: list[str], id_col: str, *cols: F.Column
+) -> DataFrame:
+    """(id_a, id_b, *cols) for every two rows of ``rows`` that agree on
+    all ``keys`` (``keys=[]``: every two rows), id_a < id_b — the one
+    pair self-join. The sides are aliased ``l`` and ``r``, so ``cols``
+    can read both (``F.col("l.vec")``). A pair sharing several keys
+    appears once per shared key."""
+    on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    on.append(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+    pairs = rows.alias("l").join(rows.alias("r"), reduce(operator.and_, on))
+    return pairs.select(
+        F.col(f"l.{id_col}").alias("id_a"),
+        F.col(f"r.{id_col}").alias("id_b"),
+        *cols,
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -558,10 +592,8 @@ def minhash_lsh_pairs(
     shingle: int = 5,
     seed: int = 42,
     min_jaccard: float = 0.0,
-    variant: str = "oph",
     max_bucket_size: int | None = 1000,
     signatures: DataFrame | None = None,
-    broadcast_cap: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded LSH.
 
@@ -572,10 +604,10 @@ def minhash_lsh_pairs(
     8+8-byte keys — no document text ever shuffles.
 
     ``max_bucket_size`` drops buckets larger than the cap before the
-    self-join: a boilerplate mega-cluster would otherwise blow up
-    quadratically (cap^2 per bucket is the worst-case join size). Capped
-    buckets are near-certain duplicates of each other anyway — at corpus
-    scale route them to exact_dedup on a boilerplate fingerprint instead.
+    self-join (_drop_hot_keys): cap^2 per bucket is the worst-case join
+    size. Capped buckets are near-certain duplicates of each other anyway
+    — at corpus scale route them to exact_dedup on a boilerplate
+    fingerprint instead.
 
     The signature matrix is referenced several times (bucket sizes + both
     self-join sides), so it is ``localCheckpoint``-ed lazily: CPU-heavy
@@ -592,7 +624,7 @@ def minhash_lsh_pairs(
         sigs = signatures
     else:
         sigs = minhash_signatures(
-            df, text_col, id_col, num_hashes, shingle, seed, variant
+            df, text_col, id_col, num_hashes, shingle, seed
         ).localCheckpoint(eager=False)
     sig_col = F.col("sig")
     # the band index is hashed as a LONG so the bucket value is a pure
@@ -617,43 +649,9 @@ def minhash_lsh_pairs(
             F.array(*[F.col(f"band_{b}") for b in range(bands)])
         ).alias("bucket"),
     )
-    if max_bucket_size is not None:
-        # Aggregate bucket sizes (map-side combine: the shuffle carries one
-        # row per distinct bucket) and broadcast-ANTI-join the few buckets
-        # OVER the cap, instead of a Window.partitionBy("bucket") count —
-        # a window would funnel the hottest bucket's rows into ONE task
-        # before dropping them, exactly the skew this cap exists to
-        # prevent. Hot buckets are rare by construction (that is what makes
-        # them droppable), so the anti side broadcasts and the exploded
-        # rows never shuffle for the cap at all. ASSUMPTION: the number of
-        # DISTINCT over-cap buckets stays driver-broadcastable (millions,
-        # not billions — each is 8 B). An adversarial corpus with a huge
-        # hot-bucket universe fails loudly at the broadcast build; pass
-        # ``broadcast_cap=False`` there: AQE then sizes the anti side at
-        # runtime and falls back to a shuffled anti-join (costing one
-        # local-shuffle materialization of the thin 16 B rows).
-        hot_buckets = (
-            exploded.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") > max_bucket_size)
-            .select("bucket")
-        )
-        if broadcast_cap:
-            hot_buckets = F.broadcast(hot_buckets)
-        exploded = exploded.join(hot_buckets, "bucket", "left_anti")
-    left = exploded.alias("l")
-    right = exploded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    exploded = _drop_hot_keys(exploded, ["bucket"], max_bucket_size)
+    cand = _self_pairs(exploded, ["bucket"], id_col).dropDuplicates(
+        ["id_a", "id_b"]
     )
     # score once per UNIQUE candidate pair: rejoin the (checkpointed)
     # signatures by id and compare positions — the only stage that ever
@@ -816,6 +814,15 @@ def ngram_jaccard_pairs(
     return pairs.mapInPandas(verify, schema=schema)
 
 
+def _pair_cosine(vec_col: str) -> F.Column:
+    """Cosine between the ``l`` and ``r`` sides' vectors of a _self_pairs
+    join, in float64: the dot product and both norms are the
+    left-to-right JVM folds the ANN operators use (operators/similarity.py
+    _dot_col, _sqnorm_col)."""
+    dot = _dot_col(_doubles(f"l.{vec_col}"), _doubles(f"r.{vec_col}"))
+    return dot / (_sqnorm_col(f"l.{vec_col}") * _sqnorm_col(f"r.{vec_col}"))
+
+
 def cosine_near_dup_pairs(
     df: DataFrame,
     vec_col: str,
@@ -835,32 +842,12 @@ def cosine_near_dup_pairs(
     it from the first row — a driver-side scan action at
     plan-construction time, retired so the library plans without ever
     touching data.)"""
-    from .similarity import lsh_bucket
     b = lsh_bucket(df, vec_col, dim, n_planes, seed).select(
         F.col(id_col), F.col(vec_col), F.col("lsh_bucket")
     )
-    v = lambda side: F.transform(F.col(f"{side}.{vec_col}"), lambda x: x.cast("double"))  # noqa: E731
-    left, right = b.alias("l"), b.alias("r")
-    pairs = left.join(
-        right,
-        (F.col("l.lsh_bucket") == F.col("r.lsh_bucket"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-    )
-    dot = F.aggregate(
-        F.zip_with(v("l"), v("r"), lambda a, bb: a * bb),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda side: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(v(side), lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
     return (
-        pairs.select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            (dot / (norm("l") * norm("r"))).alias("cosine"),
+        _self_pairs(
+            b, ["lsh_bucket"], id_col, _pair_cosine(vec_col).alias("cosine")
         )
         .filter(F.col("cosine") >= min_cosine)
         .dropDuplicates(["id_a", "id_b"])
@@ -893,10 +880,6 @@ def shingle_hash_rows(
     return df.select(id_col, text_col).mapInPandas(compute, schema=out_schema)
 
 
-_MAX_DOC_FREQ_DEFAULT = 1000
-_MAX_DOC_FREQ_SENTINEL = object()
-
-
 def ngram_jaccard_exact(
     df: DataFrame,
     text_col: str,
@@ -905,8 +888,7 @@ def ngram_jaccard_exact(
     shingle: int = 5,
     round_to: int = 6,
     shingle_rows: DataFrame | None = None,
-    max_doc_freq: int | None = _MAX_DOC_FREQ_SENTINEL,  # type: ignore[assignment]
-    broadcast_cap: bool = True,
+    max_doc_freq: int | None = 1000,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs via the relational algorithm: explode
     shingle sets, equi-join on the shingle hash (only pairs sharing a
@@ -919,78 +901,29 @@ def ngram_jaccard_exact(
     documents contributes d^2/2 join rows, so one boilerplate fragment in
     10^6 docs means a 10^12-row join. Shingles with document frequency
     above the cap are removed from the shingle universe BEFORE the
-    self-join (aggregate + anti-join, map-side combined — same shape as
-    minhash_lsh_pairs' bucket cap); sizes and intersections are both
-    computed on the filtered universe, so the Jaccard stays a true set
-    similarity over the kept shingles. The DEFAULT cap (1000) bounds the
-    join at ~500k rows per distinct shingle — the safe-by-default setting
-    for arbitrary corpora; pass ``max_doc_freq=None`` to opt out on
-    bounded inputs where the full universe is wanted (the uncapped join
-    is quadratic in the hottest shingle's document frequency).
-    BEHAVIOR CHANGE NOTE: the default was ``None`` before round 3 —
-    results on corpora containing shingles with document frequency over
-    1000 differ from earlier releases unless ``max_doc_freq=None`` is
-    passed explicitly (values remain exact Jaccard over the capped
-    universe either way). When the cap is DEFAULTED (not passed) a
-    ``FutureWarning`` is emitted at plan time so upgrading callers find
-    out loudly instead of from silently different Jaccard values;
-    explicitly passing ``max_doc_freq`` (any value, including ``None``
-    or 1000) opts out of the warning. The warning is plan-time rather
-    than data-dependent by design: whether the cap fires depends on the
-    corpus, and materializing the hot-shingle count just to decide
-    whether to warn would add a full shuffle to every call.
+    self-join (_drop_hot_keys, the cap minhash_lsh_pairs runs on its
+    buckets); sizes and intersections are both computed on the filtered
+    universe, so the value stays an exact Jaccard over the kept shingles.
+    The default cap (1000) bounds the join at ~500k rows per distinct
+    shingle — the safe-by-default setting for arbitrary corpora; pass
+    ``max_doc_freq=None`` on bounded inputs where the full universe is
+    wanted (the uncapped join is quadratic in the hottest shingle's
+    document frequency).
 
     The shingle explosion is referenced three times (two join sides +
     sizes); for repeated or large runs pass a cached DataFrame via
     ``shingle_rows`` (from shingle_hash_rows) and manage its lifecycle —
     no hidden persist() is taken here, so one-shot calls leak nothing."""
-    if max_doc_freq is _MAX_DOC_FREQ_SENTINEL:
-        import warnings
-
-        warnings.warn(
-            "ngram_jaccard_exact now caps hot shingles at max_doc_freq="
-            f"{_MAX_DOC_FREQ_DEFAULT} by default (was uncapped before "
-            "round 3); corpora with shingles above that document "
-            "frequency yield different Jaccard values than earlier "
-            "releases. Pass max_doc_freq explicitly (e.g. "
-            f"max_doc_freq={_MAX_DOC_FREQ_DEFAULT} to keep the cap, "
-            "max_doc_freq=None for the old uncapped behavior) to "
-            "silence this warning.",
-            FutureWarning,
-            stacklevel=2,
-        )
-        max_doc_freq = _MAX_DOC_FREQ_DEFAULT
     rows = (
         shingle_rows
         if shingle_rows is not None
         else shingle_hash_rows(df, text_col, id_col, shingle)
     )
-    if max_doc_freq is not None:
-        # stop-shingles are rare by construction -> broadcast the anti
-        # side (same assumption + escape hatch as minhash_lsh_pairs'
-        # bucket cap: broadcast_cap=False lets AQE fall back to a
-        # shuffled anti-join for adversarial hot-shingle universes)
-        hot = (
-            rows.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_doc_freq)
-            .select("h")
-        )
-        if broadcast_cap:
-            hot = F.broadcast(hot)
-        rows = rows.join(hot, "h", "left_anti")
+    rows = _drop_hot_keys(rows, ["h"], max_doc_freq)
     sizes = rows.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
-    a, b = rows.alias("a"), rows.alias("b")
     common = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+        _self_pairs(rows, ["h"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
     na = sizes.select(
@@ -1023,26 +956,10 @@ def cosine_pairs_exact(
     verification baseline for cosine_near_dup_pairs, SQL-oracle-checkable
     end-to-end. Use the LSH-bucketed variant at corpus scale; use this on
     bounded candidate sets (a shard, a bucket, a cluster)."""
-    v = lambda side: F.transform(F.col(f"{side}.{vec_col}"), lambda x: x.cast("double"))  # noqa: E731
-    b = df.select(id_col, vec_col)
-    pairs = b.alias("l").join(
-        b.alias("r"), F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
+    cosine = F.round(_pair_cosine(vec_col), round_to).alias("cosine")
+    return _self_pairs(df.select(id_col, vec_col), [], id_col, cosine).filter(
+        F.col("cosine") >= min_cosine
     )
-    dot = F.aggregate(
-        F.zip_with(v("l"), v("r"), lambda a, bb: a * bb),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda side: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(v(side), lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    return pairs.select(
-        F.col(f"l.{id_col}").alias("id_a"),
-        F.col(f"r.{id_col}").alias("id_b"),
-        F.round(dot / (norm("l") * norm("r")), round_to).alias("cosine"),
-    ).filter(F.col("cosine") >= min_cosine)
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -1242,23 +1159,10 @@ def dedup_corpus(
     if min_length is not None:
         src = src.filter(F.length(text_col) >= min_length)
     # exact stage: min id per identical text, via hashed keys
-    if exact_hash_bits == 128:
-        key = [
-            F.xxhash64(text_col).alias("__k1"),
-            F.xxhash64(F.lit(1), text_col).alias("__k2"),
-        ]
-    elif exact_hash_bits == 64:
-        key = [F.xxhash64(text_col).alias("__k1")]
-    else:
-        raise ValueError("exact_hash_bits must be 64 or 128")
-    group_cols = ["__k1"] + (["__k2"] if exact_hash_bits == 128 else [])
-    winners = (
-        src.select(*key, id_col)
-        .groupBy(*group_cols)
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
+    winners = exact_dedup(
+        src, [text_col], id_col, hash_key=True, hash_bits=exact_hash_bits
     )
-    exact_kept = src.join(winners, id_col, "left_semi")
+    exact_kept = src.join(winners.select(id_col), id_col, "left_semi")
     pairs = ngram_jaccard_pairs(
         exact_kept,
         text_col,
@@ -1309,7 +1213,6 @@ def simhash_near_dup_pairs(
     max_dist: int = 3,
     max_band_size: int | None = 1000,
     fingerprints: DataFrame | None = None,
-    broadcast_cap: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via Hamming-band LSH over SimHash
     fingerprints: split each 64-bit fingerprint into ``bands`` equal bit
@@ -1331,11 +1234,10 @@ def simhash_near_dup_pairs(
     frame (id_col, simhash) and no checkpoint is taken), the exploded band
     rows carry only (id, band_idx, band_val) — the fingerprint itself
     never rides the self-join shuffle — and boilerplate mega-clusters are
-    routed away from the quadratic join by ``max_band_size``, an
-    aggregate + broadcast-ANTI cap identical to the LSH bucket cap
-    (``broadcast_cap=False`` falls back to a shuffled anti-join; capped
-    groups are near-certain exact duplicates — collapse them with
-    exact_dedup first, as dedup_corpus does for MinHash)."""
+    routed away from the quadratic join by ``max_band_size`` — the same
+    _drop_hot_keys cap as the LSH buckets (capped groups are near-certain
+    exact duplicates — collapse them with exact_dedup first, as
+    dedup_corpus does for MinHash)."""
     if 64 % bands != 0:
         raise ValueError(f"bands must divide 64, got {bands}")
     width = 64 // bands
@@ -1364,31 +1266,9 @@ def simhash_near_dup_pairs(
     exploded = fps.select(id_col, F.explode(entries).alias("e")).select(
         id_col, F.col("e.band_idx"), F.col("e.band_val")
     )
-    if max_band_size is not None:
-        hot = (
-            exploded.groupBy("band_idx", "band_val")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") > max_band_size)
-            .select("band_idx", "band_val")
-        )
-        if broadcast_cap:
-            hot = F.broadcast(hot)
-        exploded = exploded.join(hot, ["band_idx", "band_val"], "left_anti")
-    left = exploded.alias("l")
-    right = exploded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_val") == F.col("r.band_val"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    band = ["band_idx", "band_val"]
+    exploded = _drop_hot_keys(exploded, band, max_band_size)
+    cand = _self_pairs(exploded, band, id_col).dropDuplicates(["id_a", "id_b"])
     fa = fps.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("__fa"))
     fb = fps.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("__fb"))
     dist = F.bit_count(F.col("__fa").bitwiseXOR(F.col("__fb")))

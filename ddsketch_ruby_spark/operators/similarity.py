@@ -45,24 +45,39 @@ __all__ = [
 ]
 
 
+def _doubles(vec_col: str):
+    """An array column cast element-wise to double."""
+    return F.transform(F.col(vec_col), lambda x: x.cast("double"))
+
+
+def _dot_col(a, b):
+    """Dot product of two array columns as the left-to-right JVM fold."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _sqnorm_col(vec_col: str):
+    """L2 norm of an array column as the left-to-right JVM fold."""
+    return F.sqrt(
+        F.aggregate(
+            F.transform(_doubles(vec_col), lambda x: x * x),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
+
+
 def _cosine_col(vec_col: str, query: Sequence[float]):
     """Cosine similarity between an array column and a literal query vector,
     computed in float64 JVM-side."""
     q = [float(x) for x in query]
     qnorm = math.sqrt(sum(x * x for x in q))
     qarr = F.array(*[F.lit(x) for x in q])
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(v, qarr, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    vnorm = F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-    return dot / (vnorm * F.lit(qnorm))
+    dot = _dot_col(_doubles(vec_col), qarr)
+    return dot / (_sqnorm_col(vec_col) * F.lit(qnorm))
 
 
 def cosine_topk(
@@ -103,15 +118,10 @@ def lsh_bucket(
     """Adds a random-hyperplane LSH bucket column (int). Sign pattern of
     n_planes dot products — JVM-side arithmetic, no UDF."""
     planes = _hyperplanes(dim, n_planes, seed)
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = _doubles(vec_col)
     bucket = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
-        parr = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(v, parr, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        dot = _dot_col(v, F.array(*[F.lit(float(x)) for x in plane]))
         bucket = bucket + F.when(dot > 0, F.lit(1 << i).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -282,7 +292,6 @@ def lsh_ann_join(
     seed: int = 42,
     max_hamming: int = 1,
     round_to: int = 6,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """BATCH multi-probe ANN: the per-query top-k for EVERY row of a
     ``queries`` DataFrame in one distributed job — the production shape
@@ -294,13 +303,11 @@ def lsh_ann_join(
     Plan shape at corpus scale: the corpus is scanned ONCE, bucketed by
     the JVM hyperplane expression (no UDF); each query expands to its
     1 + n_planes (+ pairs, at max_hamming=2) probe buckets — a thin
-    (query_id, probe, query_vec) frame that is broadcast by default
-    (queries are typically thousands of rows against a corpus of
-    billions; pass ``broadcast_queries=False`` for huge query sets and
-    AQE plans the join) — so candidate generation is a broadcast hash
-    join with NO corpus shuffle. Norms are computed ONCE per corpus row
-    and once per query (8 B columns through the join), never per
-    candidate; the dot product is the same JVM fold as cosine_topk, and
+    (query_id, probe, query_vec) frame that is broadcast (queries are
+    typically thousands of rows against a corpus of billions) — so
+    candidate generation is a broadcast hash join with NO corpus
+    shuffle. Norms are computed ONCE per corpus row and once per query
+    (8 B columns through the join), never per candidate; the dot product is the same JVM fold as cosine_topk, and
     the final top-k window partitions BY QUERY (hash distributed, sized
     by |candidates| — never the single-partition WindowExec trap).
 
@@ -316,22 +323,10 @@ def lsh_ann_join(
     )
     probes = _query_probe_frame(
         queries, query_id_col, query_vec_col, dim, n_planes, seed,
-        max_hamming, broadcast_queries,
+        max_hamming,
     )
     cand = bc.join(probes, F.col("lsh_bucket") == F.col("__probe"))
     return _score_and_rank(cand, vec_col, id_col, k, round_to)
-
-
-def _sqnorm_col(vec_col: str):
-    """L2 norm of an array column as the left-to-right JVM fold."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
 
 
 def _query_probe_frame(
@@ -342,7 +337,6 @@ def _query_probe_frame(
     n_planes: int,
     seed: int,
     max_hamming: int,
-    broadcast_queries: bool,
 ) -> DataFrame:
     """(query_id, __qv, __qn, __probe) — each query exploded over its
     _probe_masks neighborhood, base bucket computed with the same JVM
@@ -373,20 +367,14 @@ def _query_probe_frame(
             )
         ).alias("__probe"),
     )
-    return F.broadcast(probes) if broadcast_queries else probes
+    return F.broadcast(probes)
 
 
 def _score_and_rank(
     cand: DataFrame, vec_col: str, id_col: str, k: int, round_to: int
 ) -> DataFrame:
     """Cosine from precomputed norms (__vn, __qn) + per-query top-k."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    qv = F.transform(F.col("__qv"), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(v, qv, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot_col(_doubles(vec_col), _doubles("__qv"))
     sim = F.round(dot / (F.col("__vn") * F.col("__qn")), round_to)
     scored = cand.select("query_id", F.col(id_col), sim.alias("sim"))
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col(id_col))
@@ -512,7 +500,11 @@ def ivf_topk(
     round_to: int = 6,
 ) -> DataFrame:
     """IVF ANN in one shot: train on a sample, assign JVM-side, exact
-    rerank within the ``nprobe`` cells nearest to the query."""
+    rerank within the ``nprobe`` cells nearest to the query. A bad
+    ``nprobe`` is refused before training; _probe_cells checks it again
+    against the trained cell count (k-means caps it at the sample
+    size)."""
+    _check_nprobe(n_cells, nprobe)
     centroids = ivf_train(
         df, vec_col, n_cells, iters, sample_fraction, seed=seed
     )
@@ -528,7 +520,6 @@ def _ivf_probe_frame(
     query_vec_col: str,
     centroids: np.ndarray,
     nprobe: int,
-    broadcast_queries: bool,
 ) -> DataFrame:
     """(query_id, __qv, __qn, __cell) — each query exploded over its
     nprobe nearest centroid cells, computed JVM-side: an array of
@@ -565,7 +556,7 @@ def _ivf_probe_frame(
         _sqnorm_col("__qv").alias("__qn"),
         F.explode(cells).alias("__cell"),
     )
-    return F.broadcast(probes) if broadcast_queries else probes
+    return F.broadcast(probes)
 
 
 def ivf_ann_join(
@@ -583,7 +574,6 @@ def ivf_ann_join(
     sample_fraction: float = 0.2,
     seed: int = 42,
     round_to: int = 6,
-    broadcast_queries: bool = True,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """Batch IVF ANN: the nprobe-cell top-k for every row of ``queries``
@@ -592,16 +582,17 @@ def ivf_ann_join(
     join, per-query top-k window partitioned by query). Pass trained
     ``centroids`` to skip training (and to share them with a per-query
     ivf_topk for comparison); otherwise k-means trains on the bounded
-    driver-side sample exactly as ivf_topk does."""
+    driver-side sample exactly as ivf_topk does, after checking
+    ``nprobe`` against ``n_cells``."""
     if centroids is None:
+        _check_nprobe(n_cells, nprobe)
         centroids = ivf_train(
             corpus, vec_col, n_cells, iters, sample_fraction, seed=seed
         )
     bc = ivf_assign(corpus, vec_col, centroids, cell_col="__corpus_cell")
     bc = bc.withColumn("__vn", _sqnorm_col(vec_col))
     probes = _ivf_probe_frame(
-        queries, query_id_col, query_vec_col, centroids, nprobe,
-        broadcast_queries,
+        queries, query_id_col, query_vec_col, centroids, nprobe
     )
     cand = bc.join(probes, F.col("__corpus_cell") == F.col("__cell"))
     return _score_and_rank(cand, vec_col, id_col, k, round_to)

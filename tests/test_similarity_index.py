@@ -1,10 +1,8 @@
 """Persisted hyperplane-LSH index (lsh_write_index / lsh_topk_indexed):
 partition pruning at the scan, parity with the on-the-fly lsh_topk path,
-and metadata round-trip; the batch LSH and IVF joins. Also pins the
-round-4 API hardening: the ngram_jaccard_exact defaulted-cap FutureWarning
-and dedup_clusters' keyword-only iteration budget."""
-
-import warnings
+and metadata round-trip; the batch LSH and IVF joins. Also pins
+dedup_clusters' keyword-only iteration budget and dedup_corpus's 128-bit
+exact-key default."""
 
 import numpy as np
 import pytest
@@ -154,27 +152,6 @@ def test_lsh_index_prefix_bits_validation(spark, planted_idx):
                             n_planes=32, prefix_bits=bad)
 
 
-def test_ngram_defaulted_cap_warns(spark, sf_dir):
-    """Leaving max_doc_freq defaulted emits the behavior-change
-    FutureWarning; passing ANY explicit value (the default included)
-    silences it."""
-    from ddsketch_ruby_spark.operators.dedup import ngram_jaccard_exact
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        ngram_jaccard_exact(docs, "text", "doc_id")
-    assert any(
-        issubclass(c.category, FutureWarning) and "max_doc_freq" in str(c.message)
-        for c in caught
-    )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        ngram_jaccard_exact(docs, "text", "doc_id", max_doc_freq=1000)
-        ngram_jaccard_exact(docs, "text", "doc_id", max_doc_freq=None)
-    assert not [c for c in caught if issubclass(c.category, FutureWarning)]
-
-
 def test_dedup_clusters_rejects_positional_budget(spark):
     """The old id_type positional slot must fail loudly at the call site
     (max_iterations is keyword-only since round 4)."""
@@ -234,11 +211,14 @@ def test_ivf_ann_join_matches_per_query_topk(spark, planted_idx):
         ], qid
 
 
-def test_ivf_probe_frame_rejects_bad_nprobe(spark, planted_idx):
-    """Every probe path — the batch IVF join, the per-query IVF and IVF-PQ
-    top-k, and the batch IVF-PQ join — refuses an nprobe outside
-    [1, n_cells] instead of probing a wrong cell set (-1 would probe all
-    cells but one) or returning nothing (0)."""
+def test_ivf_probe_frame_rejects_bad_nprobe(spark, planted_idx, monkeypatch):
+    """Every probe path — the batch IVF join (given or trained centroids),
+    the per-query IVF and IVF-PQ top-k, and the batch IVF-PQ join —
+    refuses an nprobe outside [1, n_cells] instead of probing a wrong cell
+    set (-1 would probe all cells but one) or returning nothing (0). The
+    paths that train refuse it BEFORE training (a Spark sample job plus
+    driver k-means): ivf_train is patched to raise here."""
+    from ddsketch_ruby_spark.operators import similarity
     from ddsketch_ruby_spark.operators.pq import (
         ivfpq_ann_join,
         ivfpq_topk,
@@ -256,10 +236,18 @@ def test_ivf_probe_frame_rejects_bad_nprobe(spark, planted_idx):
     q = df.limit(1).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
     )
+
+    def no_training(*args, **kwargs):
+        raise AssertionError("ivf_train ran before the nprobe check")
+
+    monkeypatch.setattr(similarity, "ivf_train", no_training)
     for bad in (0, 5, -1):
         with pytest.raises(ValueError, match="nprobe"):
             ivf_ann_join(df, q, "embedding", "vec_id", "qid", "qemb",
                          nprobe=bad, centroids=cents)
+        with pytest.raises(ValueError, match="nprobe"):
+            ivf_ann_join(df, q, "embedding", "vec_id", "qid", "qemb",
+                         n_cells=4, nprobe=bad)
         with pytest.raises(ValueError, match="nprobe"):
             ivf_topk(df, "embedding", "vec_id", query, n_cells=4,
                      nprobe=bad, sample_fraction=1.0)

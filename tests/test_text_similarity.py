@@ -1,5 +1,7 @@
 """Text-analysis column functions + similarity search + near-dup operators."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -288,7 +290,7 @@ def test_oph_minhash_finds_near_dups(spark, textdf):
     pairs = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
         for r in minhash_lsh_pairs(
-            textdf, "text", "doc_id", num_hashes=128, bands=32, variant="oph"
+            textdf, "text", "doc_id", num_hashes=128, bands=32
         ).collect()
     }
     assert (1, 4) in pairs and pairs[(1, 4)] == 1.0
@@ -297,13 +299,13 @@ def test_oph_minhash_finds_near_dups(spark, textdf):
     a = {
         r["doc_id"]: list(r["sig"])
         for r in minhash_signatures(
-            textdf, "text", "doc_id", 64, variant="oph"
+            textdf, "text", "doc_id", 64
         ).collect()
     }
     b = {
         r["doc_id"]: list(r["sig"])
         for r in minhash_signatures(
-            textdf.repartition(4), "text", "doc_id", 64, variant="oph"
+            textdf.repartition(4), "text", "doc_id", 64
         ).collect()
     }
     assert a == b
@@ -359,21 +361,33 @@ def test_exact_dedup_128bit(spark, textdf):
 
 
 def test_lsh_bucket_cap_plan_uses_aggregate_not_window(spark):
-    """The cap must be an aggregate+join (map-side combinable), never a
+    """Every hot-key cap (LSH buckets, SimHash bands, stop-shingles) must
+    be an aggregate+join (map-side combinable), never a
     Window.partitionBy(bucket) — a window would shuffle the entire
-    mega-bucket into one task before dropping it."""
-    from ddsketch_ruby_spark.operators.dedup import minhash_lsh_pairs
+    mega-bucket into one task before dropping it — and the over-cap keys
+    must reach the join as a broadcast left-anti side."""
+    from ddsketch_ruby_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        ngram_jaccard_exact,
+        simhash_near_dup_pairs,
+    )
 
     df = spark.createDataFrame(
         [(i, f"document number {i} with some text") for i in range(8)],
         "doc_id long, text string",
     )
-    pairs = minhash_lsh_pairs(
-        df, "text", "doc_id", num_hashes=64, bands=16, max_bucket_size=10
-    )
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "HashAggregate" in plan
+    capped = [
+        minhash_lsh_pairs(
+            df, "text", "doc_id", num_hashes=64, bands=16, max_bucket_size=10
+        ),
+        simhash_near_dup_pairs(df, "text", "doc_id", max_band_size=10),
+        ngram_jaccard_exact(df, "text", "doc_id", max_doc_freq=10),
+    ]
+    for pairs in capped:
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan
+        assert "HashAggregate" in plan
+        assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan
 
 
 def test_dedup_clusters_bounded_plan_on_chain(spark):
