@@ -136,41 +136,38 @@ def register_sketch_sql(
                 return False
         return True
 
+    def _probe(spec, probe, payloads: pd.Series, hashed: pd.Series, dtype):
+        """probe(state, hashes) over a batch of (state payload, hash)
+        rows: the state is decoded once when every row carries the same
+        one, else once per row with a one-hash probe."""
+        if len(payloads) == 0:
+            return pd.Series([], dtype=dtype)
+        (field,) = [f.name for f in spec.state_fields()]
+        h = hashed.to_numpy()
+        if _constant_state(payloads):
+            state = spec.row_to_state({field: payloads.iloc[0]})
+            return pd.Series(probe(state, h), dtype=dtype)
+        return pd.Series(
+            [
+                probe(spec.row_to_state({field: p}), [int(x)])[0]
+                for p, x in zip(payloads, h)
+            ],
+            dtype=dtype,
+        )
+
     @pandas_udf(T.DoubleType())
     def cms_est(counts: pd.Series, hashed: pd.Series) -> pd.Series:
         from ..sketches.cms import CMSSpec
 
         spec = CMSSpec(width=cms_width, depth=cms_depth)
-        if len(counts) == 0:
-            return pd.Series([], dtype="float64")
-        h = hashed.to_numpy()
-        if _constant_state(counts):
-            state = spec.row_to_state({"counts": counts.iloc[0]})
-            return pd.Series(spec.estimate(state, h), dtype="float64")
-        out = []
-        for i in range(len(counts)):
-            state = spec.row_to_state({"counts": counts.iloc[i]})
-            out.append(float(spec.estimate(state, [int(h[i])])[0]))
-        return pd.Series(out, dtype="float64")
+        return _probe(spec, spec.estimate, counts, hashed, "float64")
 
     @pandas_udf(T.BooleanType())
     def bloom_maybe(bits: pd.Series, hashed: pd.Series) -> pd.Series:
         from ..sketches.bloom import BloomSpec
 
-        spec = BloomSpec(
-            expected_items=bloom_expected_items, fpp=bloom_fpp
-        )
-        if len(bits) == 0:
-            return pd.Series([], dtype="bool")
-        h = hashed.to_numpy()
-        if _constant_state(bits):
-            state = spec.row_to_state({"bits": bits.iloc[0]})
-            return pd.Series(spec.contains(state, h), dtype="bool")
-        out = []
-        for i in range(len(bits)):
-            state = spec.row_to_state({"bits": bits.iloc[i]})
-            out.append(bool(spec.contains(state, [int(h[i])])[0]))
-        return pd.Series(out, dtype="bool")
+        spec = BloomSpec(expected_items=bloom_expected_items, fpp=bloom_fpp)
+        return _probe(spec, spec.contains, bits, hashed, "bool")
 
     @pandas_udf(T.DoubleType())
     def kmv_card(minima: pd.Series, k: pd.Series) -> pd.Series:

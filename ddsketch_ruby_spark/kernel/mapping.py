@@ -34,6 +34,21 @@ __all__ = [
 ]
 
 
+def _libm(fn, values: np.ndarray) -> np.ndarray:
+    """``fn`` (a libm scalar function) applied element by element on
+    Python floats, so the bits do not depend on numpy's SIMD dispatch."""
+    out = [fn(t) for t in np.atleast_1d(values).tolist()]
+    return np.array(out, dtype=np.float64).reshape(np.shape(values))
+
+
+def _exp2(t: float) -> float:
+    """2**t by libm pow; overflow gives inf, as np.exp2 does."""
+    try:
+        return 2.0**t
+    except OverflowError:
+        return math.inf
+
+
 class KeyMapping:
     """Abstract value<->key bijection with relative accuracy guarantee.
 
@@ -105,7 +120,12 @@ class LogarithmicKeyMapping(KeyMapping):
         return np.log2(values) * self._multiplier
 
     def _pow_gamma(self, values: np.ndarray) -> np.ndarray:
-        return np.exp2(values / self._multiplier)
+        # libm pow, not np.exp2: numpy sends exp2 to a SIMD loop whose
+        # last ulp depends on the CPU (AVX-512 or not), so one sketch
+        # would give different quantile bits on different executors. The
+        # reference's 2**x is libm pow; this path only sees the handful of
+        # keys picked at quantile time, so the scalar loop costs nothing.
+        return _libm(_exp2, values / self._multiplier)
 
 
 class LinearlyInterpolatedKeyMapping(KeyMapping):
@@ -163,9 +183,7 @@ class CubicallyInterpolatedKeyMapping(KeyMapping):
         # CBRT) is libm, and this path only ever sees a handful of keys at
         # quantile-extraction time, so the scalar loop costs nothing.
         cbrt_arg = (delta_1 - np.sqrt(delta_1 * delta_1 - 4.0 * delta_0**3)) / 2.0
-        cardano = np.array(
-            [math.cbrt(t) for t in np.atleast_1d(cbrt_arg)], dtype=np.float64
-        ).reshape(np.shape(cbrt_arg))
+        cardano = _libm(math.cbrt, cbrt_arg)
         significand_plus_one = -(B + cardano + delta_0 / cardano) / (3.0 * A) + 1.0
         mantissa = significand_plus_one / 2.0
         return np.ldexp(mantissa, exponent.astype(np.int64) + 1)

@@ -196,11 +196,17 @@ def _batch_window_hashes(
     return hv, doc_of, n
 
 
-def _batch_distinct_per_doc(
-    hv: np.ndarray, doc_of: np.ndarray, ndocs: int | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Distinct (doc, hash) rows from _batch_window_hashes output, sorted
-    by (doc, hash) — set semantics for Jaccard/SimHash.
+def _per_doc_unique(
+    hv: np.ndarray,
+    doc_of: np.ndarray,
+    ndocs: int | None,
+    with_counts: bool,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """Distinct (hash, doc[, count]) rows from doc-grouped window hashes
+    (_batch_window_hashes / _batch_word_gram_hashes output), sorted by
+    (doc, hash): the one per-doc distinct reducer behind Jaccard / SimHash
+    set semantics and the gram occurrence counts. ``counts`` is None
+    unless ``with_counts``.
 
     Implementation note: this slices the (already doc-grouped) window
     array and runs np.unique per doc rather than one global
@@ -210,19 +216,6 @@ def _batch_distinct_per_doc(
     arrays is memory-bandwidth-bound and ~15x slower than many small
     sorts that never leave L2. The per-doc Python overhead is ~3 us/doc,
     two orders of magnitude below the sort work it replaces."""
-    hs, ds, _ = _per_doc_unique(hv, doc_of, ndocs, with_counts=False)
-    return hs, ds
-
-
-def _per_doc_unique(
-    hv: np.ndarray,
-    doc_of: np.ndarray,
-    ndocs: int | None,
-    with_counts: bool,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
-    """Shared slicing core for the per-doc distinct reducers (see the
-    _batch_distinct_per_doc docstring for why per-doc np.unique beats a
-    global lexsort). ``counts`` is None unless ``with_counts``."""
     if ndocs is None:
         ndocs = int(doc_of[-1]) + 1 if len(doc_of) else 0
     if len(hv) == 0:
@@ -239,7 +232,7 @@ def _per_doc_unique(
             cs_l.append(c)
     else:
         # branch-free loop: this is the measured hot shape (~0.3 s for 7M
-        # windows; see the _batch_distinct_per_doc docstring)
+        # windows; see the docstring)
         hs_l = [np.unique(hv[bounds[i] : bounds[i + 1]]) for i in range(ndocs)]
     hs = np.concatenate(hs_l)
     ds = np.repeat(
@@ -349,17 +342,6 @@ def _batch_word_gram_hashes(
     return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64), ndocs
 
 
-def _batch_distinct_counts_per_doc(
-    hv: np.ndarray, doc_of: np.ndarray, ndocs: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(hash, doc, count) distinct rows from doc-grouped window hashes —
-    the with-occurrence-counts twin of _batch_distinct_per_doc, on the
-    same per-doc cache-resident np.unique slices (the global-lexsort
-    alternative is measured ~15x slower; see BENCH/kernel_vectorization)."""
-    hs, ds, cs = _per_doc_unique(hv, doc_of, ndocs, with_counts=True)
-    return hs, ds, cs
-
-
 def _hashed_gram_rows(
     df: DataFrame,
     text_col: str,
@@ -387,9 +369,7 @@ def _hashed_gram_rows(
             if id_col is None:
                 yield pd.DataFrame({"__ng": np.unique(gh).view(np.int64)})
             elif with_counts:
-                hs, ds, cs = _batch_distinct_counts_per_doc(
-                    gh, doc_of, ndocs
-                )
+                hs, ds, cs = _per_doc_unique(gh, doc_of, ndocs, with_counts=True)
                 yield pd.DataFrame(
                     {
                         id_col: pdf[id_col].values[ds],
@@ -398,7 +378,7 @@ def _hashed_gram_rows(
                     }
                 )
             else:
-                hs, ds = _batch_distinct_per_doc(gh, doc_of)
+                hs, ds, _ = _per_doc_unique(gh, doc_of, None, with_counts=False)
                 yield pd.DataFrame(
                     {
                         id_col: pdf[id_col].values[ds],
@@ -738,7 +718,7 @@ def ngram_jaccard_pairs(
             if pdf.empty:
                 continue
             hv, doc_of, n = _batch_window_hashes(pdf[text_col], shingle)
-            hs, ds = _batch_distinct_per_doc(hv, doc_of)
+            hs, ds, _ = _per_doc_unique(hv, doc_of, None, with_counts=False)
             splits = np.split(
                 hs.view(np.int64), np.cumsum(np.bincount(ds, minlength=n))[:-1]
             )
@@ -872,7 +852,7 @@ def shingle_hash_rows(
             if pdf.empty:
                 continue
             hv, doc_of, n = _batch_window_hashes(pdf[text_col], shingle)
-            hs, ds = _batch_distinct_per_doc(hv, doc_of)
+            hs, ds, _ = _per_doc_unique(hv, doc_of, None, with_counts=False)
             yield pd.DataFrame(
                 {id_col: pdf[id_col].values[ds], "h": hs.view(np.int64)}
             )
@@ -1065,8 +1045,9 @@ def _simhash_batch(texts: pd.Series | list, shingle: int) -> np.ndarray:
     """64-bit SimHash fingerprints for a whole Arrow batch: ONE
     concatenated rolling-hash pass for every document's windows
     (_batch_window_hashes — the expensive step, measured ~3.5x cheaper
-    than the per-doc sliding_window_view matrix), then per-doc distinct +
-    bit votes on the cache-resident ~350-element slices. Returns the
+    than the per-doc sliding_window_view matrix), then the per-doc
+    distinct hashes of _per_doc_unique and bit votes on their
+    cache-resident ~350-element slices. Returns the
     int64 wire representation (two's-complement view). Property-tested
     against the per-doc reference in tests/test_properties.py.
 
@@ -1079,13 +1060,13 @@ def _simhash_batch(texts: pd.Series | list, shingle: int) -> np.ndarray:
     hv, doc_of, n = _batch_window_hashes(texts, shingle)
     if n == 0:
         return np.zeros(0, dtype=np.int64)
-    cnt = np.bincount(doc_of, minlength=n)
-    bounds = np.concatenate([[0], np.cumsum(cnt)])
+    hs, ds, _ = _per_doc_unique(hv, doc_of, n, with_counts=False)
+    bounds = np.concatenate([[0], np.cumsum(np.bincount(ds, minlength=n))])
     bits = np.arange(64, dtype=np.uint64)
     powers = np.uint64(1) << bits
     out = np.empty(n, dtype=np.uint64)
     for i in range(n):
-        sh = np.unique(hv[bounds[i] : bounds[i + 1]])
+        sh = hs[bounds[i] : bounds[i + 1]]
         votes = ((sh[:, None] >> bits[None, :]) & np.uint64(1)).sum(axis=0)
         majority = votes * 2 >= len(sh)
         out[i] = powers[majority].sum(dtype=np.uint64)

@@ -9,14 +9,19 @@ memory for any number of keys) or when a later job needs cheap membership
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Callable, Iterable
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..sketches.base import SketchSpec
 from ..sketches.bloom import BloomSpec
 from ..sketches.cms import CMSSpec
+from ..sketches.hll import HLLSpec, hll_estimate
+from ..sketches.kmv import KmvSpec, kmv_estimate, kmv_intersect_stats
 from .agg import sketch_agg
 
 __all__ = [
@@ -40,18 +45,26 @@ def hash_items(spark, items: Iterable, dtype: str = "long") -> list[int]:
     return [r["h"] for r in df.select(F.xxhash64("item").alias("h")).collect()]
 
 
-def cms_build(
-    df: DataFrame, col: str, spec: CMSSpec, weight_col: str | None = None
+def _hashed_state(
+    df: DataFrame, col: str, spec: SketchSpec, weight_col: str | None = None
 ) -> np.ndarray:
-    """Distributed count-min build over xxhash64(col); returns the state."""
+    """The one global state over xxhash64(col), hashed JVM-side: the build
+    behind cms_build and bloom_build."""
     hashed = df.select(
         F.xxhash64(col).alias("__h"),
-        *( [F.col(weight_col)] if weight_col else [] ),
+        *([F.col(weight_col)] if weight_col else []),
     )
     rows = sketch_agg(
         hashed, spec, "__h", [], weight_col=weight_col, output="state"
     ).collect()
     return spec.row_to_state(rows[0].asDict())
+
+
+def cms_build(
+    df: DataFrame, col: str, spec: CMSSpec, weight_col: str | None = None
+) -> np.ndarray:
+    """Distributed count-min build over xxhash64(col); returns the state."""
+    return _hashed_state(df, col, spec, weight_col)
 
 
 def cms_estimate(
@@ -74,69 +87,116 @@ def _scratch_col(df: DataFrame, base: str) -> str:
     return name
 
 
-def cms_probe_column(
-    df: DataFrame, col: str, spec: CMSSpec, state: np.ndarray
+def _probe_column(
+    df: DataFrame,
+    col: str,
+    name: str,
+    dtype: T.DataType,
+    probe: Callable[[np.ndarray], np.ndarray],
 ) -> DataFrame:
-    """Adds double ``est_count`` by probing the count-min state inside a
-    pandas iterator — the state broadcasts once per executor via the
-    closure, each batch is estimated in ONE vectorized call (O(depth) per
-    row); no join, no shuffle. The distributed-scale twin of
-    ``cms_estimate`` (which collects literal items on the driver)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    counts = state.copy()
+    """Appends ``name`` = probe(xxhash64(col)) inside a pandas iterator:
+    one vectorized probe per batch over a scratch hash column that is
+    dropped again. The state rides the probe's closure, so it ships once
+    per executor; no join, no shuffle."""
     schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("est_count", T.DoubleType())]
+        list(df.schema.fields) + [T.StructField(name, dtype)]
     )
     hcol = _scratch_col(df, "__h")
-    hashed = df.withColumn(hcol, F.xxhash64(col))
 
-    def probe(batches):
+    def run(batches):
         for pdf in batches:
             if pdf.empty:
                 continue
             h = pdf[hcol].to_numpy()
             out = pdf.drop(columns=[hcol])
-            out["est_count"] = spec.estimate(counts, h)
+            out[name] = probe(h)
             yield out
 
-    return hashed.mapInPandas(probe, schema=schema)
+    return df.withColumn(hcol, F.xxhash64(col)).mapInPandas(run, schema=schema)
+
+
+def cms_probe_column(
+    df: DataFrame, col: str, spec: CMSSpec, state: np.ndarray
+) -> DataFrame:
+    """Adds double ``est_count`` by probing the count-min state (O(depth)
+    per row, see _probe_column). The distributed-scale twin of
+    ``cms_estimate`` (which collects literal items on the driver)."""
+    counts = state.copy()
+    return _probe_column(
+        df, col, "est_count", T.DoubleType(), lambda h: spec.estimate(counts, h)
+    )
 
 
 def bloom_build(df: DataFrame, col: str, spec: BloomSpec) -> np.ndarray:
-    hashed = df.select(F.xxhash64(col).alias("__h"))
-    rows = sketch_agg(hashed, spec, "__h", [], output="state").collect()
-    return spec.row_to_state(rows[0].asDict())
+    """Distributed Bloom build over xxhash64(col); returns the state."""
+    return _hashed_state(df, col, spec)
 
 
 def bloom_filter_column(
     df: DataFrame, col: str, spec: BloomSpec, state: np.ndarray
 ) -> DataFrame:
-    """Adds boolean ``maybe_member`` by probing the Bloom state inside a
-    pandas iterator — the state broadcasts once per executor via the
-    closure; no join, no shuffle."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    """Adds boolean ``maybe_member`` by probing the Bloom state (see
+    _probe_column)."""
     bits = state.copy()
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("maybe_member", T.BooleanType())]
+    return _probe_column(
+        df, col, "maybe_member", T.BooleanType(), lambda h: spec.contains(bits, h)
     )
-    hcol = _scratch_col(df, "__h")
-    hashed = df.withColumn(hcol, F.xxhash64(col))
 
-    def probe(batches):
+
+def _pair_overlap(
+    df: DataFrame,
+    hash_col: str,
+    group_col: str,
+    spec: SketchSpec,
+    est_names: list[str],
+    estimate: Callable[[np.ndarray, np.ndarray], tuple],
+) -> DataFrame:
+    """One row per unordered group pair (type_a < type_b) with the double
+    columns ``est_names`` = estimate(state_a, state_b).
+
+    Scale shape: the expensive part is the distributed two-phase state
+    build (sketch_agg; shuffle volume partitions x groups x state size,
+    row-count independent). The pairing joins two g-row state frames with
+    an inequality condition: a BROADCAST nested loop over g rows a side,
+    bounded by the group cardinality, never by input rows. Each pair's
+    state bytes are decoded by ``spec.row_to_state`` and estimated in
+    NumPy inside mapInPandas."""
+    (field,) = [f.name for f in spec.state_fields()]
+    states = sketch_agg(df, spec, hash_col, [group_col], output="state")
+    gtype = states.schema[group_col].dataType
+    a = states.select(
+        F.col(group_col).alias("type_a"), F.col(field).alias("__sa")
+    )
+    b = states.select(
+        F.col(group_col).alias("type_b"), F.col(field).alias("__sb")
+    )
+    pairs = a.join(F.broadcast(b), F.col("type_a") < F.col("type_b"))
+    out_schema = T.StructType(
+        [T.StructField("type_a", gtype), T.StructField("type_b", gtype)]
+        + [T.StructField(n, T.DoubleType()) for n in est_names]
+    )
+
+    def decode(payload) -> np.ndarray:
+        return spec.row_to_state({field: payload})
+
+    def est_pairs(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            h = pdf[hcol].to_numpy()
-            member = spec.contains(bits, h)
-            out = pdf.drop(columns=[hcol])
-            out["maybe_member"] = member
-            yield out
+            rows = [
+                (ta, tb, *estimate(decode(sa), decode(sb)))
+                for ta, tb, sa, sb in zip(
+                    pdf["type_a"], pdf["type_b"], pdf["__sa"], pdf["__sb"]
+                )
+            ]
+            yield pd.DataFrame(rows, columns=out_schema.names)
 
-    return hashed.mapInPandas(probe, schema=schema)
+    return pairs.mapInPandas(est_pairs, schema=out_schema)
+
+
+def _hll_pair(ra: np.ndarray, rb: np.ndarray) -> tuple:
+    ea = hll_estimate(ra)
+    eb = hll_estimate(rb)
+    eu = hll_estimate(np.maximum(ra, rb))
+    return ea, eb, eu, max(0.0, (ea + eb) - eu)
 
 
 def hll_overlap(
@@ -155,58 +215,16 @@ def hll_overlap(
     xxhash64 values (hash JVM-side). Output: one row per unordered group
     pair (type_a < type_b) with est_a / est_b / est_union /
     est_intersect (clamped at 0 — inclusion-exclusion can go slightly
-    negative for disjoint sets).
-
-    Scale shape: the expensive part is the distributed register build
-    (two-phase sketch_agg — shuffle volume partitions x groups x 16 kB,
-    row-count independent). The pairing joins two g-row state frames
-    with an inequality condition: a BROADCAST nested loop over g rows a
-    side — bounded by construction (g = group cardinality after
-    aggregation), never by input rows. The estimator folds each pair's
-    16 kB registers in NumPy inside mapInPandas."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..sketches.hll import HLLSpec, hll_estimate
-
-    spec = HLLSpec(p)
-    states = sketch_agg(df, spec, hash_col, [group_col], output="state")
-    gtype = states.schema[group_col].dataType
-    a = states.select(
-        F.col(group_col).alias("type_a"), F.col("registers").alias("__ra")
+    negative for disjoint sets). Scale shape: see _pair_overlap (16 kB
+    of registers per group at p = 14)."""
+    return _pair_overlap(
+        df,
+        hash_col,
+        group_col,
+        HLLSpec(p),
+        ["est_a", "est_b", "est_union", "est_intersect"],
+        _hll_pair,
     )
-    b = states.select(
-        F.col(group_col).alias("type_b"), F.col("registers").alias("__rb")
-    )
-    pairs = a.join(F.broadcast(b), F.col("type_a") < F.col("type_b"))
-    out_schema = T.StructType(
-        [
-            T.StructField("type_a", gtype),
-            T.StructField("type_b", gtype),
-            T.StructField("est_a", T.DoubleType()),
-            T.StructField("est_b", T.DoubleType()),
-            T.StructField("est_union", T.DoubleType()),
-            T.StructField("est_intersect", T.DoubleType()),
-        ]
-    )
-
-    def est_pairs(batches):
-        for pdf in batches:
-            rows = []
-            for ta, tb, ra_b, rb_b in zip(
-                pdf["type_a"], pdf["type_b"], pdf["__ra"], pdf["__rb"]
-            ):
-                ra = np.frombuffer(bytes(ra_b), dtype=np.uint8)
-                rb = np.frombuffer(bytes(rb_b), dtype=np.uint8)
-                ea = hll_estimate(ra)
-                eb = hll_estimate(rb)
-                eu = hll_estimate(np.maximum(ra, rb))
-                rows.append(
-                    (ta, tb, ea, eb, eu, max(0.0, (ea + eb) - eu))
-                )
-            yield pd.DataFrame(rows, columns=out_schema.names)
-
-    return pairs.mapInPandas(est_pairs, schema=out_schema)
 
 
 def kmv_overlap(
@@ -227,55 +245,24 @@ def kmv_overlap(
     Every output is a pure function of the distinct-hash SETS (k-smallest
     selection + two correctly-rounded float ops), so the driver oracle
     hash-matches the estimates themselves — no error-bound gate needed.
+    Scale shape: see _pair_overlap (≤ 8·k bytes of sorted minima per
+    group)."""
 
-    Scale shape: identical to hll_overlap — the distributed two-phase
-    state build dominates (shuffle rows are ≤ 8k-byte sorted arrays, one
-    per partition x group, row-count independent); pairing is a broadcast
-    nested loop over the g-row state frame (bounded by group cardinality,
-    never input rows); the estimator folds pairs of ≤k-long uint64 arrays
-    in NumPy inside mapInPandas."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    def kmv_pair(ma: np.ndarray, mb: np.ndarray) -> tuple:
+        return (
+            kmv_estimate(ma, k),
+            kmv_estimate(mb, k),
+            *kmv_intersect_stats(ma, mb, k),
+        )
 
-    from ..sketches.kmv import KmvSpec, kmv_estimate, kmv_intersect_stats
-
-    spec = KmvSpec(k)
-    states = sketch_agg(df, spec, hash_col, [group_col], output="state")
-    gtype = states.schema[group_col].dataType
-    a = states.select(
-        F.col(group_col).alias("type_a"), F.col("minima").alias("__ma")
+    return _pair_overlap(
+        df,
+        hash_col,
+        group_col,
+        KmvSpec(k),
+        ["est_a", "est_b", "est_union", "jaccard", "est_intersect"],
+        kmv_pair,
     )
-    b = states.select(
-        F.col(group_col).alias("type_b"), F.col("minima").alias("__mb")
-    )
-    pairs = a.join(F.broadcast(b), F.col("type_a") < F.col("type_b"))
-    out_schema = T.StructType(
-        [
-            T.StructField("type_a", gtype),
-            T.StructField("type_b", gtype),
-            T.StructField("est_a", T.DoubleType()),
-            T.StructField("est_b", T.DoubleType()),
-            T.StructField("est_union", T.DoubleType()),
-            T.StructField("jaccard", T.DoubleType()),
-            T.StructField("est_intersect", T.DoubleType()),
-        ]
-    )
-
-    def est_pairs(batches):
-        for pdf in batches:
-            rows = []
-            for ta, tb, ma_b, mb_b in zip(
-                pdf["type_a"], pdf["type_b"], pdf["__ma"], pdf["__mb"]
-            ):
-                ma = np.frombuffer(bytes(ma_b), dtype=np.uint64)
-                mb = np.frombuffer(bytes(mb_b), dtype=np.uint64)
-                ea = kmv_estimate(ma, k)
-                eb = kmv_estimate(mb, k)
-                eu, jac, ei = kmv_intersect_stats(ma, mb, k)
-                rows.append((ta, tb, ea, eb, eu, jac, ei))
-            yield pd.DataFrame(rows, columns=out_schema.names)
-
-    return pairs.mapInPandas(est_pairs, schema=out_schema)
 
 
 def heavy_hitters(

@@ -70,6 +70,17 @@ def _sqnorm_col(vec_col: str):
     )
 
 
+def _dist2_col(vec_col: str, cent: np.ndarray):
+    """Squared L2 distance from an array column to a literal centroid as
+    the left-to-right JVM fold (the one IVF cell distance)."""
+    carr = F.array(*[F.lit(float(x)) for x in cent])
+    return F.aggregate(
+        F.zip_with(_doubles(vec_col), carr, lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def _cosine_col(vec_col: str, query: Sequence[float]):
     """Cosine similarity between an array column and a literal query vector,
     computed in float64 JVM-side."""
@@ -454,17 +465,7 @@ def ivf_assign(
     """Adds the nearest-centroid cell id as a column. All JVM-side: an
     array of n_cells squared distances (each computed once), argmin via
     array_position(array_min) — no UDF, no shuffle."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-    def dist2(cent: np.ndarray):
-        carr = F.array(*[F.lit(float(x)) for x in cent])
-        return F.aggregate(
-            F.zip_with(v, carr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    dists = F.array(*[dist2(c) for c in centroids])
+    dists = F.array(*[_dist2_col(vec_col, c) for c in centroids])
     cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
     return df.withColumn(cell_col, cell)
 
@@ -528,19 +529,11 @@ def _ivf_probe_frame(
     order unspecified, but exact float-distance ties do not occur for
     real embeddings), sliced to nprobe."""
     _check_nprobe(len(centroids), nprobe)
-    qv = F.transform(F.col("__qv"), lambda x: x.cast("double"))
-
-    def dist2(cent: np.ndarray):
-        carr = F.array(*[F.lit(float(x)) for x in cent])
-        return F.aggregate(
-            F.zip_with(qv, carr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     structs = F.array(
         *[
-            F.struct(dist2(c).alias("d"), F.lit(i).cast("int").alias("c"))
+            F.struct(
+                _dist2_col("__qv", c).alias("d"), F.lit(i).cast("int").alias("c")
+            )
             for i, c in enumerate(centroids)
         ]
     )

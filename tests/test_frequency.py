@@ -8,6 +8,7 @@ from ddsketch_ruby_spark.operators.frequency import (
     bloom_filter_column,
     cms_build,
     cms_estimate,
+    cms_probe_column,
 )
 from ddsketch_ruby_spark.sketches.bloom import BloomSpec
 from ddsketch_ruby_spark.sketches.cms import CMSSpec
@@ -47,3 +48,26 @@ def test_bloom_filter_column(spark, sf_dir):
     non_members = sum(1 for r in rows if r["c_custkey"] not in actual)
     if non_members:
         assert fp / non_members < 0.05
+
+
+def test_cms_probe_column_matches_estimate(spark, sf_dir):
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    spec = CMSSpec(width=1024, depth=4)
+    state = cms_build(li, "l_partkey", spec)
+    # a user column literally named __h (the probe's scratch name) must
+    # come through untouched
+    probe_in = (
+        li.select("l_partkey")
+        .distinct()
+        .orderBy("l_partkey")
+        .limit(50)
+        .withColumn("__h", -F.col("l_partkey"))
+    )
+    probed = cms_probe_column(probe_in, "l_partkey", spec, state)
+    assert probed.columns == ["l_partkey", "__h", "est_count"]
+    rows = probed.collect()
+    items = [r["l_partkey"] for r in rows]
+    assert len(items) == 50
+    assert all(r["__h"] == -r["l_partkey"] for r in rows)
+    est = cms_estimate(spark, state, spec, items)
+    assert {r["l_partkey"]: r["est_count"] for r in rows} == est

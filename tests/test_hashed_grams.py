@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 
 import ddsketch_ruby_spark.operators.dedup as dd
 from ddsketch_ruby_spark.operators.dedup import (
-    _batch_distinct_counts_per_doc,
     _batch_word_gram_hashes,
+    _per_doc_unique,
     decontaminate,
     duplicate_spans,
 )
@@ -120,7 +120,7 @@ def test_distinct_counts_per_doc():
     gh, doc_of, nd = _batch_word_gram_hashes(
         ["a b c a b c a b c", "", "x y z"], 3
     )
-    hs, ds, cs = _batch_distinct_counts_per_doc(gh, doc_of, nd)
+    hs, ds, cs = _per_doc_unique(gh, doc_of, nd, with_counts=True)
     # doc 0: grams {a b c: 3, b c a: 2, c a b: 2}; doc 1 empty; doc 2 one
     assert sorted(cs[ds == 0].tolist()) == [2, 2, 3]
     assert (ds == 1).sum() == 0

@@ -85,3 +85,62 @@ def test_interpolation_tags():
     assert LogarithmicKeyMapping(0.01).interpolation is None
     assert LinearlyInterpolatedKeyMapping(0.01).interpolation == "linear"
     assert CubicallyInterpolatedKeyMapping(0.01).interpolation == "cubic"
+
+
+def _libm_pow_mismatches() -> int:
+    """Keys of the default logarithmic mapping (alpha = 0.01, offset 0)
+    whose ``value_batch`` differs from the reference formula
+    2**(k/multiplier) * 2/(1+gamma) computed with libm pow."""
+    m = LogarithmicKeyMapping(0.01)
+    keys = np.arange(m.key(m.min_possible), m.key(m.max_possible) + 1)
+    assert len(keys) == 70_905
+    scale = 2.0 / (1.0 + m.gamma)
+    ref = np.array(
+        [2.0 ** ((k - m.offset) / m._multiplier) * scale for k in keys.tolist()]
+    )
+    return int((m.value_batch(keys) != ref).sum())
+
+
+def _avx512_features() -> list[str]:
+    try:
+        from numpy._core._multiarray_umath import __cpu_features__
+    except ImportError:
+        from numpy.core._multiarray_umath import __cpu_features__
+    return [f for f, on in __cpu_features__.items() if on and f.startswith("AVX512")]
+
+
+def test_value_batch_is_libm_pow_under_any_simd_dispatch():
+    # numpy's SIMD exp2 differs from libm pow in the last ulp on ~19k of
+    # these keys with AVX-512 dispatch and on ~60 without it; libm pow
+    # gives the same bits on every CPU
+    assert _libm_pow_mismatches() == 0
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        NPY_DISABLE_CPU_FEATURES=" ".join(_avx512_features()),
+        PYTHONPATH=root,
+    )
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from tests.test_mapping import _libm_pow_mismatches as f; print(f())",
+        ],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "0", out.stderr
+
+
+def test_value_overflow_is_inf():
+    m = LogarithmicKeyMapping(0.01)
+    top = m.key(m.max_possible)
+    assert np.isfinite(m.value(top))
+    assert m.value_batch(np.array([top + 10, 10**9])).tolist() == [math.inf] * 2

@@ -290,14 +290,14 @@ def test_searchsorted_pair_intersection_equals_intersect1d(texts):
     import pandas as pd
 
     from ddsketch_ruby_spark.operators.dedup import (
-        _batch_distinct_per_doc,
         _batch_window_hashes,
+        _per_doc_unique,
         _shingle_hashes,
     )
 
     W = 5
     hv, doc_of, n = _batch_window_hashes(pd.Series(texts), W)
-    hs, ds = _batch_distinct_per_doc(hv, doc_of)
+    hs, ds, _ = _per_doc_unique(hv, doc_of, None, with_counts=False)
     # the wire representation the verify stage receives from Arrow
     splits = np.split(
         hs.view(np.int64), np.cumsum(np.bincount(ds, minlength=n))[:-1]
