@@ -6,10 +6,12 @@ is checked against ``oracle_sql()[name]`` via DuckDB at sf=0.01.
 Oracle strategy for quantiles: DDSketch with the logarithmic mapping is
 fully SQL-expressible — key = CEIL(LOG2(v) * multiplier), histogram by key,
 windowed cumulative count, first key whose running count exceeds
-rank = q*(n-1), value = POWER(gamma, key) * 2/(1+gamma) (reference
-base_sketch.rb:121-138, key_mapping.rb:69-82). The Spark side uses the
-'pow' value formula so both engines execute the same libm operations;
-outputs are rounded to 6 decimals on both sides.
+rank = q*(n-1), value = 2^((key - offset) / multiplier) * 2/(1+gamma)
+(reference base_sketch.rb:121-138, key_mapping.rb:69-82). The library has
+one bucket-value formula, ``KeyMapping.value``; the oracles replay it op
+for op through ``_log_value_sql`` (libm pow on both sides), so the gate
+checks the values every default call returns. Outputs are rounded to 6
+decimals on both sides.
 """
 
 from __future__ import annotations
@@ -20,15 +22,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ddsketch_ruby_spark.kernel.mapping import LogarithmicKeyMapping
+
 # ---------------------------------------------------------------------------
-# DDSketch constants for alpha = 0.01, logarithmic mapping — computed exactly
-# as the kernel does (kernel/mapping.py) and inlined into the oracle SQL via
-# repr() so both engines use the identical doubles.
+# The alpha = 0.01 logarithmic mapping is the kernel's own object; its
+# constants are inlined into the oracle SQL via _dlit so both engines use
+# the identical doubles.
 ALPHA = 0.01
-_GM = 2.0 * ALPHA / (1.0 - ALPHA)
-GAMMA = 1.0 + _GM
-MULT = (1.0 / math.log(_GM + 1.0)) * math.log(2.0)  # 1/log2(gamma)
-COEFF = 2.0 / (1.0 + GAMMA)
+_LOG_MAPPING = LogarithmicKeyMapping(ALPHA)
+MULT = _LOG_MAPPING._multiplier  # 1/log2(gamma)
 
 _QS = {"q50": 0.5, "q95": 0.95, "q99": 0.99}
 
@@ -44,6 +46,16 @@ def _dlit(x: float) -> str:
     sign = "-" if x < 0 else ""
     m, e = math.frexp(abs(x))
     return f"({sign}CAST({int(m * (1 << 53))} AS DOUBLE) * POWER(2.0, {e - 53}))"
+
+
+def _log_value_sql(mapping, key_expr: str) -> str:
+    """Bucket value of logarithmic key ``key_expr``: the kernel's
+    ``KeyMapping.value`` op for op — 2^((k - offset) / multiplier) by
+    POWER (libm pow in DuckDB, as in the kernel), times 2/(1+gamma)."""
+    return (
+        f"(POWER(2.0, (CAST({key_expr} AS DOUBLE) - {_dlit(mapping.offset)})"
+        f" / {_dlit(mapping._multiplier)}) * {_dlit(2.0 / (1.0 + mapping.gamma))})"
+    )
 
 
 def _tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
@@ -117,10 +129,8 @@ def _ddsketch_oracle_sql(
                 f"CAST(TRUNC(CEIL(LN(v) / LN(2.0) * {_dlit(mult)})"
                 f" + {_dlit(offset)}) AS BIGINT)"
             )
-            pow_arg = f"(CAST(kq AS DOUBLE) - {_dlit(offset)})"
         else:
             key_expr = f"CAST(CEIL(LN(v) / LN(2.0) * {_dlit(mult)}) AS BIGINT)"
-            pow_arg = "kq"
         hist = f"""
 hist AS (
   SELECT {g_comma}{key_expr} AS k,
@@ -129,7 +139,7 @@ hist AS (
 ),"""
         final = (
             f"SELECT {g_comma}qname, "
-            f"ROUND(POWER({_dlit(m.gamma)}, {pow_arg}) * {_dlit(coeff)}, 6) AS qvalue "
+            f"ROUND({_log_value_sql(m, 'kq')}, 6) AS qvalue "
             f"FROM keys"
         )
     else:
@@ -303,7 +313,6 @@ def _q_ddsketch_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantiles={"q50": 0.5, "q95": 0.95},
         weight_col="w",
         include_stats=False,
-        value_formula="pow",
     )
     return wide.select(
         F.expr("stack(2, 'q50', round(q50, 6), 'q95', round(q95, 6)) "
@@ -825,7 +834,6 @@ def _q_ddsketch_collapsed_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
         store_type="collapsing_lowest",
         bin_limit=20,
         include_stats=False,
-        value_formula="pow",
     )
     return wide.select(
         F.expr(
@@ -861,7 +869,7 @@ sel AS (
   WHERE cum.rc > qs.q * (n.cnt - 1)
   GROUP BY qname
 )
-SELECT qname, ROUND(POWER({_dlit(GAMMA)}, kq) * {_dlit(COEFF)}, 6) AS qvalue
+SELECT qname, ROUND({_log_value_sql(_LOG_MAPPING, "kq")}, 6) AS qvalue
 FROM sel
 """
 
@@ -958,9 +966,7 @@ def _q_ddsketch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ddsketch_drift_oracle_sql() -> str:
-    from ddsketch_ruby_spark.kernel.mapping import mapping_from_name
-
-    m = mapping_from_name("logarithmic", ALPHA)
+    m = _LOG_MAPPING
     mp = m.min_possible
     key = lambda col: (  # noqa: E731
         f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
@@ -1032,9 +1038,7 @@ def _q_ddsketch_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ddsketch_psi_oracle_sql() -> str:
-    from ddsketch_ruby_spark.kernel.mapping import mapping_from_name
-
-    m = mapping_from_name("logarithmic", ALPHA)
+    m = _LOG_MAPPING
     mp = m.min_possible
     key = lambda col: (  # noqa: E731
         f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
@@ -1329,9 +1333,7 @@ def _q_stream_psi_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_psi_oracle_sql() -> str:
-    from ddsketch_ruby_spark.kernel.mapping import mapping_from_name
-
-    m = mapping_from_name("logarithmic", ALPHA)
+    m = _LOG_MAPPING
     mp = m.min_possible
     key = lambda col: (  # noqa: E731
         f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
@@ -1382,9 +1384,7 @@ FROM terms GROUP BY day
 
 
 def _stream_drift_oracle_sql() -> str:
-    from ddsketch_ruby_spark.kernel.mapping import mapping_from_name
-
-    m = mapping_from_name("logarithmic", ALPHA)
+    m = _LOG_MAPPING
     mp = m.min_possible
     key = lambda col: (  # noqa: E731
         f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
@@ -2394,9 +2394,7 @@ def _ddsketch_cdf_oracle_sql(probes: list[float]) -> str:
     same plan-time kernel bucket key per probe (inlined as an integer
     literal), the same LN-ratio key expression per row, the same
     conditional counts and double division."""
-    from ddsketch_ruby_spark.kernel.mapping import mapping_from_name
-
-    m = mapping_from_name("logarithmic", ALPHA, 0.0)
+    m = _LOG_MAPPING
     mult = m._multiplier
     keys = [int(m.key(p)) for p in probes]
     cnt_cols = ",\n  ".join(
@@ -3126,7 +3124,6 @@ def _q_ddsketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = DDSketchSpec(
         quantiles={"q50": 0.5, "q99": 0.99},
         include_stats=False,
-        value_formula="pow",
     )
     cube = sketch_cube_union(states, spec, ["lang", "source"], output="result")
     return cube.select(
@@ -3156,7 +3153,6 @@ def _q_ddsketch_weighted_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantiles={"q50": 0.5, "q95": 0.95},
         weight_col="w",
         include_stats=False,
-        value_formula="pow",
     )
     return wide.select(
         "l_linestatus",
@@ -3203,7 +3199,6 @@ def _q_ddsketch_threezone(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         quantiles={"q10": 0.1, "q25": 0.25, "q50": 0.5, "q90": 0.9},
         include_stats=False,
-        value_formula="pow",
     )
     return wide.select(
         F.expr(
@@ -3218,10 +3213,8 @@ def _threezone_oracle_sql(value_expr: str, table: str, qs: dict[str, float]) -> 
     the negative store (REVERSED rank, upper scan: first key with
     running count >= reversed_rank + 1), the zero band, or the positive
     store (lower scan: running count > rank'), mirroring
-    kernel/sketch.py quantile_key op-for-op."""
-    from ddsketch_ruby_spark.kernel.mapping import mapping_from_name
-
-    m = mapping_from_name("logarithmic", ALPHA)
+    kernel/sketch.py get_quantile_value op-for-op."""
+    m = _LOG_MAPPING
     mp = m.min_possible
     qvalues = ", ".join(f"('{name}', {_dlit(q)})" for name, q in qs.items())
     key = lambda col: (  # noqa: E731
@@ -3271,10 +3264,8 @@ resolved AS (
 SELECT qname,
        ROUND(CASE zone
                WHEN 'zero' THEN 0.0
-               WHEN 'pos' THEN POWER({_dlit(m.gamma)}, kq)
-                               * {_dlit(2.0 / (1.0 + m.gamma))}
-               ELSE -(POWER({_dlit(m.gamma)}, kq)
-                      * {_dlit(2.0 / (1.0 + m.gamma))})
+               WHEN 'pos' THEN {_log_value_sql(m, "kq")}
+               ELSE -{_log_value_sql(m, "kq")}
              END, 6) AS qvalue
 FROM resolved
 """
@@ -3295,7 +3286,6 @@ def _q_ddsketch_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"price": "l_extendedprice", "qty": "l_quantity"},
         quantiles={"q50": 0.5, "q99": 0.99},
         include_stats=False,
-        value_formula="pow",
     )
     return wide.select(
         "measure",
@@ -3409,9 +3399,7 @@ def _q_ddsketch_stream_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        spec = DDSketchSpec(
-            include_stats=False, value_formula="pow", quantiles=_QS
-        )
+        spec = DDSketchSpec(include_stats=False, quantiles=_QS)
         hist = sketch_stream_hist(
             stream.filter(F.col("value") > 0).select("ts", "value"),
             spec,
@@ -3494,9 +3482,7 @@ def _q_ddsketch_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        spec = DDSketchSpec(
-            include_stats=False, value_formula="pow", quantiles=_QS
-        )
+        spec = DDSketchSpec(include_stats=False, quantiles=_QS)
         hist = sketch_stream_hist(
             stream.filter(F.col("value") > 0).select("ts", "value"),
             spec,
@@ -4136,9 +4122,7 @@ def _q_proto_roundtrip_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _proto_roundtrip_oracle_sql() -> str:
     """Three-zone histogram of value-50 per event_type from raw rows —
     what a lossless proto round-trip must reproduce exactly."""
-    from ddsketch_ruby_spark.kernel.mapping import mapping_from_name
-
-    m = mapping_from_name("logarithmic", ALPHA)
+    m = _LOG_MAPPING
     key = lambda col: (  # noqa: E731
         f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
     )
@@ -4397,7 +4381,7 @@ keys AS (
   WHERE cum.rc > qs.q * (n.cnt - 1)
   GROUP BY {g_comma}qs.qname
 )
-SELECT {g_comma}qname, ROUND(POWER({_dlit(GAMMA)}, kq) * {_dlit(COEFF)}, 6)
+SELECT {g_comma}qname, ROUND({_log_value_sql(_LOG_MAPPING, "kq")}, 6)
   AS qvalue
 FROM keys
 """

@@ -114,8 +114,7 @@ def main() -> None:
             events, "value", group_by=["event_type"], quantiles=(0.5, 0.95, 0.99)
         ).collect(),
         "ddsketch_cubic_events": lambda: ddsketch_quantiles(
-            events, "value", quantiles=(0.5, 0.99), mapping="cubic",
-            value_formula="reference",
+            events, "value", quantiles=(0.5, 0.99), mapping="cubic"
         ).collect(),
         "ddsketch_lineitem_by_flag": lambda: ddsketch_quantiles_long(
             lineitem.filter(F.col("l_extendedprice") > 0),

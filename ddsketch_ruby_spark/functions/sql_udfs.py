@@ -94,11 +94,12 @@ def register_sketch_sql(
 
     @pandas_udf(T.DoubleType())
     def hll_card(registers: pd.Series) -> pd.Series:
-        from ..sketches.hll import hll_estimate
+        from ..sketches.hll import HLLSpec, hll_estimate
 
+        codec = HLLSpec()  # the register codec does not depend on p
         return pd.Series(
             [
-                hll_estimate(np.frombuffer(bytes(r), dtype=np.uint8))
+                hll_estimate(codec.row_to_state({"registers": r}))
                 for r in registers
             ],
             dtype="float64",
@@ -171,15 +172,16 @@ def register_sketch_sql(
 
     @pandas_udf(T.DoubleType())
     def kmv_card(minima: pd.Series, k: pd.Series) -> pd.Series:
-        from ..sketches.kmv import kmv_estimate
+        from ..sketches.kmv import KmvSpec, kmv_estimate
 
         if len(minima) == 0:
             return pd.Series([], dtype="float64")
         ks = k.to_numpy()
         out = []
         for i in range(len(minima)):
-            state = np.frombuffer(bytes(minima.iloc[i]), dtype=np.uint64)
-            out.append(float(kmv_estimate(state, int(ks[i]))))
+            spec = KmvSpec(int(ks[i]))
+            state = spec.row_to_state({"minima": minima.iloc[i]})
+            out.append(float(kmv_estimate(state, spec.k)))
         return pd.Series(out, dtype="float64")
 
     spark.udf.register("ddsketch_q", ddsketch_q)

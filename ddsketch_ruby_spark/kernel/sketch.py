@@ -178,34 +178,20 @@ class DDSketch:
     def num_values(self) -> float:
         return self.count
 
-    def quantile_key(self, quantile: float):
-        """Resolve a quantile to (zone, key): zone in {"neg","zero","pos"}.
-
-        Exposes the bucket key so callers can apply their own key->value
-        formula (the SQL-oracle path uses gamma**key directly).
-        """
+    def get_quantile_value(self, quantile: float) -> float | None:
+        """Approximate value at the quantile (base_sketch.rb:121-138)."""
         if quantile < 0 or quantile > 1 or self.count == 0:
             return None
         rank = quantile * (self.count - 1.0)
         neg_count = self.negative_store.count
         if rank < neg_count:
             reversed_rank = neg_count - rank - 1.0
-            return ("neg", self.negative_store.key_at_rank(reversed_rank, lower=False))
+            key = self.negative_store.key_at_rank(reversed_rank, lower=False)
+            return -self.mapping.value(key)
         if rank < self.zero_count + neg_count:
-            return ("zero", 0)
-        key = self.store.key_at_rank(rank - self.zero_count - neg_count)
-        return ("pos", key)
-
-    def get_quantile_value(self, quantile: float) -> float | None:
-        """Approximate value at the quantile (base_sketch.rb:121-138)."""
-        zone_key = self.quantile_key(quantile)
-        if zone_key is None:
-            return None
-        zone, key = zone_key
-        if zone == "zero":
             return 0.0
-        value = self.mapping.value(key)
-        return -value if zone == "neg" else value
+        key = self.store.key_at_rank(rank - self.zero_count - neg_count)
+        return self.mapping.value(key)
 
     # -- merge ----------------------------------------------------------------
     def mergeable(self, other: "DDSketch") -> bool:

@@ -24,12 +24,15 @@ assembling after a full groupBy is legal.
 
 Numerics: Spark's LOG2 computes ln(v)/ln(2) — a SQL oracle must mirror
 that exact expression (LN(v)/LN(2)) to be bit-compatible. JVM keys equal
-the kernel's ``key_batch`` keys exactly for all three mappings: pinned on
-a binade-boundary grid (tests/test_spark_ddsketch.py::
-test_jvm_keys_bit_match_kernel) and by the hypothesis property
+the kernel's ``key_batch`` keys for all three mappings on data away from
+the bucket boundaries gamma^k: pinned on a binade-boundary grid
+(tests/test_spark_ddsketch.py::test_jvm_keys_bit_match_kernel) and by the
+hypothesis property
 tests/test_properties.py::test_jvm_key_expr_matches_kernel_property,
 fractional offsets included. So a sketch built here equals the kernel-backed
-``operators.agg.sketch_agg`` build bin for bin.
+``operators.agg.sketch_agg`` build bin for bin on such data. Within an ulp
+of a logarithmic boundary gamma^k the two log2s (Spark's ln ratio, numpy's
+log2) can round to different sides, and the key moves by one.
 
 Input contract, as in the kernel: null and NaN values are dropped; a
 non-positive, null or NaN weight raises "weight must be positive" and a +-inf
@@ -43,8 +46,9 @@ true binade exponent; the significand v / 2^e - 1 is then exact because
 scaling by a power of two and subtracting 1 are exact float ops. Every
 remaining op (polynomial in the significand, + exponent, * multiplier,
 ceil) is the identical IEEE-754 operation sequence the NumPy kernel runs,
-so JVM keys are bit-identical to kernel keys — verified bin-for-bin in
-tests/test_spark_ddsketch.py — and a DuckDB oracle can replicate them.
+so JVM keys equal kernel keys (away from gamma^k boundaries, as above) —
+verified bin-for-bin in tests/test_spark_ddsketch.py — and a DuckDB oracle
+can replicate them.
 """
 
 from __future__ import annotations

@@ -54,7 +54,6 @@ def ddsketch_quantiles(
     mapping: str = "logarithmic",
     weight_col: str | None = None,
     include_stats: bool = True,
-    value_formula: str = "reference",
     mapping_offset: float = 0.0,
 ) -> DataFrame:
     """One row per group: requested quantile columns (+ exact count/sum/
@@ -67,7 +66,6 @@ def ddsketch_quantiles(
         mapping,
         quantiles=_quantile_map(quantiles),
         include_stats=include_stats,
-        value_formula=value_formula,
         mapping_offset=mapping_offset,
     )
     return ddsketch_jvm_agg(df, spec, value_col, group_by, weight_col)
@@ -81,20 +79,15 @@ def ddsketch_quantiles_long(
     relative_accuracy: float = DEFAULT_REL_ACC,
     round_to: int = 6,
     mapping: str = "logarithmic",
-    value_formula: str | None = None,
     mapping_offset: float = 0.0,
 ) -> DataFrame:
     """Long format: one row per (group, quantile) with columns
     (group..., qname, qvalue), rounded to ``round_to`` decimals so an
-    ANSI-SQL oracle is bit-compatible. Default value formula: 'pow'
-    (gamma**key * 2/(1+gamma), mirrors POWER()) for the logarithmic
-    mapping; 'reference' (the mapping's true interpolated inverse, which a
-    SQL oracle replicates op-for-op — see __spark_entry__) for linear and
-    cubic, where the pow formula would not be the bucket representative."""
+    ANSI-SQL oracle is bit-compatible. The values are the wide form's,
+    rounded: the mapping's bucket value (``KeyMapping.value``), which a
+    SQL oracle replicates op for op (see __spark_entry__)."""
     group_by = list(group_by)
     qmap = _quantile_map(quantiles)
-    if value_formula is None:
-        value_formula = "pow" if mapping == "logarithmic" else "reference"
     wide = ddsketch_quantiles(
         df,
         value_col,
@@ -102,7 +95,6 @@ def ddsketch_quantiles_long(
         qmap,
         relative_accuracy,
         include_stats=False,
-        value_formula=value_formula,
         mapping=mapping,
         mapping_offset=mapping_offset,
     )
@@ -120,7 +112,6 @@ def ddsketch_multi(
     quantiles: Iterable[float] | dict[str, float] = (0.5, 0.95, 0.99),
     relative_accuracy: float = DEFAULT_REL_ACC,
     include_stats: bool = True,
-    value_formula: str = "reference",
 ) -> DataFrame:
     """Sketch several measures in ONE scan: returns one row per
     (measure, group...). At corpus scale this is the shape to prefer —
@@ -146,7 +137,6 @@ def ddsketch_multi(
         quantiles,
         relative_accuracy,
         include_stats=include_stats,
-        value_formula=value_formula,
     )
 
 
@@ -166,10 +156,10 @@ def ddsketch_quantile_of_quantiles(
 
     Both levels are ordinary distributed sketch aggregations (the inner
     one emits one row per inner group — millions of hosts is still a
-    trivial second pass), and both use the 'pow' value formula with the
-    inner values rounded to ``round_inner_to``, so the whole composition
-    is reproducible by nesting two copies of the SQL oracle pipeline
-    (__spark_entry__ ddsketch_q_of_q oracle)."""
+    trivial second pass), and the inner values are rounded to
+    ``round_inner_to``, so the whole composition is reproducible by
+    nesting two copies of the SQL oracle pipeline (__spark_entry__
+    ddsketch_q_of_q oracle)."""
     inner_group_by = list(inner_group_by)
     outer_group_by = list(outer_group_by)
     inner = ddsketch_quantiles(
@@ -179,7 +169,6 @@ def ddsketch_quantile_of_quantiles(
         {"__iq": inner_quantile},
         relative_accuracy,
         include_stats=False,
-        value_formula="pow",
     ).select(
         *outer_group_by, F.round("__iq", round_inner_to).alias("__iq")
     )
@@ -190,7 +179,6 @@ def ddsketch_quantile_of_quantiles(
         quantiles,
         relative_accuracy,
         include_stats=False,
-        value_formula="pow",
     )
 
 
@@ -206,7 +194,9 @@ def ddsketch_state(
 ) -> DataFrame:
     """One mergeable sketch-state row per group (persist / merge later).
     Its bins equal the kernel's: JVM keys are bit-identical to
-    ``KeyMapping.key_batch``."""
+    ``KeyMapping.key_batch`` except for values within an ulp of a
+    logarithmic bucket boundary gamma^k, where the two log2s can round
+    apart."""
     spec = DDSketchSpec(
         relative_accuracy, store_type, bin_limit, mapping, include_stats=False
     )

@@ -12,25 +12,13 @@ rolled-up dimensions (the SQL ROLLUP output shape).
 
 from __future__ import annotations
 
-from typing import Iterable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sketches.base import SketchSpec
 from .agg import sketch_finalize
 
-__all__ = ["merge_states", "sketch_rollup", "sketch_cube_union"]
-
-
-def merge_states(
-    states: DataFrame,
-    spec: SketchSpec,
-    group_by: Iterable[str],
-    output: str = "state",
-) -> DataFrame:
-    """Fold sketch-state rows to a coarser grouping (pure merges)."""
-    return sketch_finalize(states, spec, group_by, output)
+__all__ = ["sketch_rollup", "sketch_cube_union"]
 
 
 def sketch_rollup(
@@ -46,7 +34,7 @@ def sketch_rollup(
     out = {}
     for i in range(len(dims), -1, -1):
         level = tuple(dims[:i])
-        out[level] = merge_states(states, spec, level, output=output)
+        out[level] = sketch_finalize(states, spec, level, output)
     return out
 
 

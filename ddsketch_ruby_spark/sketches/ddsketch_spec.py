@@ -42,14 +42,9 @@ class DDSketchSpec(SketchSpec):
         mapping: str = "logarithmic",
         quantiles: dict[str, float] | None = None,
         include_stats: bool = True,
-        value_formula: str = "reference",
         mapping_offset: float = 0.0,
     ) -> None:
-        """value_formula: "reference" uses the kernel's pow_gamma
-        (2**(k/multiplier), bit-faithful to the reference); "pow" computes
-        gamma**k * 2/(1+gamma) with libm pow — algebraically identical,
-        chosen so SQL oracles (POWER(gamma, k)) reproduce it bit-for-bit.
-        mapping_offset: the key-mapping index offset (may be fractional,
+        """mapping_offset: the key-mapping index offset (may be fractional,
         key_mapping.rb:69-71)."""
         self.relative_accuracy = relative_accuracy
         self.store_type = store_type
@@ -62,9 +57,6 @@ class DDSketchSpec(SketchSpec):
             else {quantile_col_name(q): q for q in (0.5, 0.95, 0.99)}
         )
         self.include_stats = include_stats
-        if value_formula not in ("reference", "pow"):
-            raise ValueError("value_formula must be 'reference' or 'pow'")
-        self.value_formula = value_formula
 
     # -- monoid ---------------------------------------------------------
     def zero(self) -> DDSketch:
@@ -161,22 +153,9 @@ class DDSketchSpec(SketchSpec):
             ]
         return fields
 
-    def _quantile_value(self, state: DDSketch, q: float) -> float | None:
-        if self.value_formula == "reference":
-            return state.get_quantile_value(q)
-        zone_key = state.quantile_key(q)
-        if zone_key is None:
-            return None
-        zone, key = zone_key
-        if zone == "zero":
-            return 0.0
-        m = state.mapping
-        v = (m.gamma ** (key - m.offset)) * (2.0 / (1.0 + m.gamma))
-        return -v if zone == "neg" else v
-
     def result(self, state: DDSketch) -> dict[str, Any]:
         out = {
-            name: self._quantile_value(state, q)
+            name: state.get_quantile_value(q)
             for name, q in self.quantiles.items()
         }
         if self.include_stats:

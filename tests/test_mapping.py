@@ -139,6 +139,31 @@ def test_value_batch_is_libm_pow_under_any_simd_dispatch():
     assert out.stdout.strip() == "0", out.stderr
 
 
+@pytest.mark.parametrize(
+    "alpha, offset",
+    [(0.01, 0.0), (0.01, 7768.3), (0.01, -12.23), (0.02, 0.0), (0.05, 3.0)],
+)
+def test_log_value_sql_replays_value_batch(alpha, offset):
+    # the DuckDB quantile oracles compute bucket values through
+    # _log_value_sql; its POWER is libm pow, as the kernel's _exp2 is
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    m = LogarithmicKeyMapping(alpha, offset=offset)
+    keys = np.arange(m.key(m.min_possible), m.key(m.max_possible) + 1)
+    got = (
+        duckdb.connect()
+        .execute(
+            f"SELECT {entry._log_value_sql(m, 'k')} AS v "
+            f"FROM range({keys[0]}, {keys[-1] + 1}) t(k) ORDER BY k"
+        )
+        .fetchnumpy()["v"]
+    )
+    assert len(got) == len(keys) > 14_000
+    assert int((got != m.value_batch(keys)).sum()) == 0
+
+
 def test_value_overflow_is_inf():
     m = LogarithmicKeyMapping(0.01)
     top = m.key(m.max_possible)

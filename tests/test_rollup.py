@@ -3,9 +3,9 @@ rebuilding from raw data at each level (monoid exactness)."""
 
 from pyspark.sql import functions as F
 
-from ddsketch_ruby_spark.operators.agg import sketch_agg
+from ddsketch_ruby_spark.operators.agg import sketch_agg, sketch_finalize
 from ddsketch_ruby_spark.operators.quantiles import ddsketch_state
-from ddsketch_ruby_spark.operators.rollup import merge_states, sketch_cube_union
+from ddsketch_ruby_spark.operators.rollup import sketch_cube_union
 from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
 
 
@@ -17,7 +17,7 @@ def test_rollup_equals_direct_build(spark, sf_dir):
     # fold states (lang, source) -> (lang)
     rolled = {
         r["lang"]: r.asDict()
-        for r in merge_states(fine, spec, ["lang"], output="result").collect()
+        for r in sketch_finalize(fine, spec, ["lang"], output="result").collect()
     }
     direct = {
         r["lang"]: r.asDict()
@@ -31,7 +31,7 @@ def test_rollup_equals_direct_build(spark, sf_dir):
         assert rolled[lang]["max"] == direct[lang]["max"]
 
     # fold all the way to the global sketch
-    total = merge_states(fine, spec, [], output="result").collect()[0].asDict()
+    total = sketch_finalize(fine, spec, [], output="result").collect()[0].asDict()
     n = docs.count()
     assert total["count"] == n
 
@@ -47,17 +47,17 @@ def test_cross_job_gamma_guard(spark, sf_dir):
     fine = ddsketch_state(docs, "n_chars", ["lang"], relative_accuracy=0.01)
     wrong_spec = DDSketchSpec(0.05)
     with pytest.raises(Exception) as exc_info:
-        merge_states(fine, wrong_spec, [], output="result").collect()
+        sketch_finalize(fine, wrong_spec, [], output="result").collect()
     assert "different relative accuracy" in str(exc_info.value)
 
 
-def test_merge_states_rejects_unknown_output(spark, sf_dir):
+def test_finalize_rejects_unknown_output(spark, sf_dir):
     import pytest
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fine = ddsketch_state(docs, "n_chars", ["lang"])
     with pytest.raises(ValueError, match="output must be"):
-        merge_states(fine, DDSketchSpec(0.01), ["lang"], output="states")
+        sketch_finalize(fine, DDSketchSpec(0.01), ["lang"], output="states")
 
 
 def test_cube_union_shape(spark, sf_dir):

@@ -282,7 +282,6 @@ def test_groups_straddling_arrow_batches(spark):
     from pyspark.sql import types as T
 
     from ddsketch_ruby_spark.operators.agg import sketch_finalize
-    from ddsketch_ruby_spark.operators.rollup import merge_states
 
     df = _keyed_frame(spark)
     spec = DDSketchSpec(ALPHA)
@@ -299,7 +298,9 @@ def test_groups_straddling_arrow_batches(spark):
         "global": lambda: ddsketch_quantiles(df, "v"),
         "state": lambda: ddsketch_state(df, "v", ["g", "s"]),
         "finalize": lambda: sketch_finalize(states, spec, ["g", "s"]),
-        "merge_states": lambda: merge_states(states, spec, ["s"]),
+        "finalize_state": lambda: sketch_finalize(
+            states, spec, ["s"], output="state"
+        ),
     }
     default = {k: _bits(b().collect()) for k, b in builds.items()}
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -471,6 +472,32 @@ def test_spark_matches_kernel(spark, events):
     assert dist["count"] == local.count
 
 
+def test_long_form_is_the_wide_form_rounded(spark):
+    """One sketch gives one bucket value in both forms. Above 1e10 a
+    double's ulp exceeds 1e-6, so rounding to 6 decimals keeps the last
+    bits of the bucket value and a second value formula would show."""
+    from ddsketch_ruby_spark.operators.quantiles import ddsketch_quantiles_long
+
+    rng = np.random.default_rng(20)
+    groups = rng.integers(0, 40, 20_000).tolist()
+    values = (10.0 ** rng.uniform(7.0, 12.0, 20_000)).tolist()
+    df = spark.createDataFrame(list(zip(groups, values)), "g long, v double")
+    names = [quantile_col_name(q) for q in QS]
+    wide = ddsketch_quantiles(df, "v", ["g"], QS, include_stats=False)
+    rounded = {
+        (r["g"], name): r[name]
+        for r in wide.select("g", *[F.round(n, 6).alias(n) for n in names])
+        .collect()
+        for name in names
+    }
+    long = {
+        (r["g"], r["qname"]): r["qvalue"]
+        for r in ddsketch_quantiles_long(df, "v", ["g"], QS, round_to=6).collect()
+    }
+    assert len(rounded) == 40 * len(QS)
+    assert long == rounded
+
+
 def test_ddsketch_multi_one_pass(spark, events):
     """Multi-measure single-scan API equals per-measure runs."""
     from ddsketch_ruby_spark.operators.quantiles import ddsketch_multi
@@ -508,13 +535,13 @@ def test_quantile_of_quantiles_grouped(spark, events):
     }
     inner = ddsketch_quantiles(
         df, "value", ["user_id", "event_type"], {"__iq": 0.95},
-        include_stats=False, value_formula="pow",
+        include_stats=False,
     ).select("event_type", F.round("__iq", 6).alias("__iq"))
     ref = {
         r["event_type"]: r["q50"]
         for r in ddsketch_quantiles(
             inner, "__iq", ["event_type"], {"q50": 0.5},
-            include_stats=False, value_formula="pow",
+            include_stats=False,
         ).collect()
     }
     assert got == ref and len(got) >= 3
