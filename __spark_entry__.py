@@ -4,10 +4,13 @@
 is checked against ``oracle_sql()[name]`` via DuckDB at sf=0.01.
 
 Oracle strategy for quantiles: DDSketch with the logarithmic mapping is
-fully SQL-expressible — key = CEIL(LOG2(v) * multiplier), histogram by key,
-windowed cumulative count, first key whose running count exceeds
+fully SQL-expressible — key = ceil(ln(v) / ln(2) * multiplier), histogram
+by key, windowed cumulative count, first key whose running count exceeds
 rank = q*(n-1), value = 2^((key - offset) / multiplier) * 2/(1+gamma)
-(reference base_sketch.rb:121-138, key_mapping.rb:69-82). The library has
+(reference base_sketch.rb:121-138, key_mapping.rb:69-82). The key is
+Spark's LOG2 (an ln ratio), written once in ``_log_key_sql``; the
+three-zone split (positive store, negative store, zero band at
++-min_possible) is written once in ``_zone_hist_sql``. The library has
 one bucket-value formula, ``KeyMapping.value``; the oracles replay it op
 for op through ``_log_value_sql`` (libm pow on both sides), so the gate
 checks the values every default call returns. Outputs are rounded to 6
@@ -30,7 +33,6 @@ from ddsketch_ruby_spark.kernel.mapping import LogarithmicKeyMapping
 # the identical doubles.
 ALPHA = 0.01
 _LOG_MAPPING = LogarithmicKeyMapping(ALPHA)
-MULT = _LOG_MAPPING._multiplier  # 1/log2(gamma)
 
 _QS = {"q50": 0.5, "q95": 0.95, "q99": 0.99}
 
@@ -56,6 +58,39 @@ def _log_value_sql(mapping, key_expr: str) -> str:
         f"(POWER(2.0, (CAST({key_expr} AS DOUBLE) - {_dlit(mapping.offset)})"
         f" / {_dlit(mapping._multiplier)}) * {_dlit(2.0 / (1.0 + mapping.gamma))})"
     )
+
+
+def _log_key_sql(mapping, col: str) -> str:
+    """Bucket key of positive column ``col``: the kernel's ``key_batch`` as
+    ``ddsketch_jvm.key_column`` computes it — CEIL of Spark's LOG2 (the ln
+    ratio) times the multiplier, then a fractional offset truncated toward
+    zero (Ruby ``Integer()``, key_mapping.rb:69-71) as a double add and
+    TRUNC, mirroring the JVM's CAST(double AS LONG)."""
+    raw = f"CEIL(LN({col}) / LN(2.0) * {_dlit(mapping._multiplier)})"
+    if mapping.offset:
+        return f"CAST(TRUNC({raw} + {_dlit(mapping.offset)}) AS BIGINT)"
+    return f"CAST({raw} AS BIGINT)"
+
+
+def _zone_hist_sql(src: str, cols: list[str]) -> str:
+    """Three-zone DDSketch histogram (cols..., zone, k, c) of the double
+    column ``v`` of CTE ``src``, as kernel/sketch.py add files it: zone 1
+    keyed on v above min_possible, zone -1 keyed on -v below
+    -min_possible, zone 0 (key 0) for the band between; c counts rows.
+    Rows with a null v fall in no zone."""
+    m = _LOG_MAPPING
+    hi, lo = _dlit(m.min_possible), _dlit(-m.min_possible)
+    g = "".join(f"{c}, " for c in cols)
+    arms = (
+        ("1", _log_key_sql(m, "v"), f"v > {hi}"),
+        ("-1", _log_key_sql(m, "-v"), f"v < {lo}"),
+        ("0", "CAST(0 AS BIGINT)", f"v >= {lo} AND v <= {hi}"),
+    )
+    return "(\n" + "\n  UNION ALL\n".join(
+        f"  SELECT {g}{zone} AS zone, {key} AS k, CAST(COUNT(*) AS DOUBLE) AS c\n"
+        f"  FROM {src} WHERE {cond} GROUP BY {g}zone, k"
+        for zone, key, cond in arms
+    ) + "\n)"
 
 
 def _tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
@@ -94,13 +129,17 @@ def _ddsketch_oracle_sql(
     qs: dict[str, float],
     mapping: str = "logarithmic",
     offset: float = 0.0,
+    weight_expr: str = "1",
 ) -> str:
     """DuckDB SQL replicating the DDSketch quantile pipeline exactly, for
-    any of the three key mappings.
+    any of the three key mappings. Each row counts ``weight_expr`` (once by
+    default): the histogram and the rank run over SUM(weight), kernel
+    quantile semantics for weights > 0. Weights must be dyadic-valued so
+    the float sums are exact in any accumulation order.
 
-    Logarithmic: key = ceil(log2(v) * multiplier); LN(v)/LN(2.0) mirrors
-    Spark's LOG2 implementation (ln ratio) op-for-op so the oracle is
-    bit-compatible with the JVM fast path (operators/ddsketch_jvm.py).
+    Logarithmic: the key is ``_log_key_sql``, Spark's LOG2 (ln ratio) op
+    for op, so the oracle is bit-compatible with the JVM fast path
+    (operators/ddsketch_jvm.py).
 
     Linear/cubic (reference linear_interpolated_key_mapping.rb:35-49,
     cubically_interpolated_key_mapping.rb:10-67): frexp recovered exactly in
@@ -121,20 +160,9 @@ def _ddsketch_oracle_sql(
     join_n = f"JOIN n USING ({g})" if g else "CROSS JOIN n"
 
     if mapping == "logarithmic":
-        if offset:
-            # fractional offset: Ruby Integer() truncates toward zero
-            # (key_mapping.rb:69-71) — the Spark fast path casts
-            # double -> long, mirrored here as TRUNC + CAST
-            key_expr = (
-                f"CAST(TRUNC(CEIL(LN(v) / LN(2.0) * {_dlit(mult)})"
-                f" + {_dlit(offset)}) AS BIGINT)"
-            )
-        else:
-            key_expr = f"CAST(CEIL(LN(v) / LN(2.0) * {_dlit(mult)}) AS BIGINT)"
         hist = f"""
 hist AS (
-  SELECT {g_comma}{key_expr} AS k,
-         CAST(COUNT(*) AS DOUBLE) AS c
+  SELECT {g_comma}{_log_key_sql(m, "v")} AS k, SUM(w) AS c
   FROM vals GROUP BY {g_comma}k
 ),"""
         final = (
@@ -161,15 +189,14 @@ hist AS (
             key_expr = f"CAST(CEIL({poly} * {_dlit(mult)}) AS BIGINT)"
             u_expr = f"CAST(kq AS DOUBLE) / {_dlit(mult)}"
         hist = f"""
-fx0 AS (SELECT {g_comma}v, CAST(FLOOR(LOG2(v)) AS BIGINT) AS eg FROM vals),
-fx1 AS (SELECT {g_comma}v,
+fx0 AS (SELECT {g_comma}v, w, CAST(FLOOR(LOG2(v)) AS BIGINT) AS eg FROM vals),
+fx1 AS (SELECT {g_comma}v, w,
                CASE WHEN POWER(2.0, eg) > v THEN eg - 1
                     WHEN v / POWER(2.0, eg) >= 2.0 THEN eg + 1
                     ELSE eg END AS e FROM fx0),
-fx2 AS (SELECT {g_comma}e, v / POWER(2.0, e) - 1.0 AS s FROM fx1),
+fx2 AS (SELECT {g_comma}e, w, v / POWER(2.0, e) - 1.0 AS s FROM fx1),
 hist AS (
-  SELECT {g_comma}{key_expr} AS k,
-         CAST(COUNT(*) AS DOUBLE) AS c
+  SELECT {g_comma}{key_expr} AS k, SUM(w) AS c
   FROM fx2 GROUP BY {g_comma}k
 ),"""
         if mapping == "linear":
@@ -207,14 +234,15 @@ FROM sp"""
 
     return f"""
 WITH vals AS (
-  SELECT {g_comma}CAST({value_expr} AS DOUBLE) AS v
+  SELECT {g_comma}CAST({value_expr} AS DOUBLE) AS v,
+         CAST({weight_expr} AS DOUBLE) AS w
   FROM {table} WHERE {value_expr} > 0
 ),{hist}
 cum AS (
   SELECT {g_comma}k, SUM(c) OVER ({part}ORDER BY k) AS rc FROM hist
 ),
 n AS (
-  SELECT {g_comma}CAST(COUNT(*) AS DOUBLE) AS cnt FROM vals {("GROUP BY " + g) if g else ""}
+  SELECT {g_comma}SUM(w) AS cnt FROM vals {("GROUP BY " + g) if g else ""}
 ),
 qs(qname, q) AS (VALUES {qvalues}),
 keys AS (
@@ -853,7 +881,7 @@ WITH vals AS (
   SELECT CAST(value AS DOUBLE) AS v FROM events WHERE value > 0
 ),
 ks AS (
-  SELECT CAST(CEIL(LN(v) / LN(2.0) * {_dlit(MULT)}) AS BIGINT) AS k FROM vals
+  SELECT {_log_key_sql(_LOG_MAPPING, "v")} AS k FROM vals
 ),
 mx AS (SELECT MAX(k) AS maxk FROM ks),
 hist AS (
@@ -965,41 +993,30 @@ def _q_ddsketch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ddsketch_drift_oracle_sql() -> str:
-    m = _LOG_MAPPING
-    mp = m.min_possible
-    key = lambda col: (  # noqa: E731
-        f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
-    )
-    cum = (
-        "OVER (PARTITION BY event_type ORDER BY zone, zone * k "
-        "ROWS UNBOUNDED PRECEDING)"
-    )
-    tot = "OVER (PARTITION BY event_type)"
-    return f"""
+# The drift and PSI oracles' shared prefix: value - 50 per event_type,
+# split on event_id parity, as per-bucket counts ca (odd) and cb (even).
+_SPLIT_PIV_SQL = f"""
 WITH src AS (
   SELECT event_type, CAST(value - 50.0 AS DOUBLE) AS v,
          (event_id % 2 = 0) AS b
   FROM events WHERE value IS NOT NULL AND NOT isnan(value)
 ),
-pz AS (SELECT event_type, b, 1 AS zone, {key("v")} AS k,
-              CAST(COUNT(*) AS DOUBLE) AS c
-       FROM src WHERE v > {_dlit(mp)} GROUP BY event_type, b, 4),
-nz AS (SELECT event_type, b, -1 AS zone, {key("-v")} AS k,
-              CAST(COUNT(*) AS DOUBLE) AS c
-       FROM src WHERE v < {_dlit(-mp)} GROUP BY event_type, b, 4),
-zz AS (SELECT event_type, b, 0 AS zone, CAST(0 AS BIGINT) AS k,
-              CAST(COUNT(*) AS DOUBLE) AS c
-       FROM src WHERE v >= {_dlit(-mp)} AND v <= {_dlit(mp)}
-       GROUP BY event_type, b),
-h AS (SELECT * FROM pz UNION ALL SELECT * FROM nz
-      UNION ALL SELECT * FROM zz),
+h AS {_zone_hist_sql("src", ["event_type", "b"])},
 piv AS (
   SELECT event_type, zone, k,
          SUM(CASE WHEN NOT b THEN c ELSE 0.0 END) AS ca,
          SUM(CASE WHEN b THEN c ELSE 0.0 END) AS cb
   FROM h GROUP BY event_type, zone, k
-),
+)"""
+
+
+def _ddsketch_drift_oracle_sql() -> str:
+    cum = (
+        "OVER (PARTITION BY event_type ORDER BY zone, zone * k "
+        "ROWS UNBOUNDED PRECEDING)"
+    )
+    tot = "OVER (PARTITION BY event_type)"
+    return f"""{_SPLIT_PIV_SQL},
 cum AS (
   SELECT event_type,
          SUM(ca) {cum} AS fa,
@@ -1038,38 +1055,10 @@ def _q_ddsketch_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ddsketch_psi_oracle_sql() -> str:
-    m = _LOG_MAPPING
-    mp = m.min_possible
-    key = lambda col: (  # noqa: E731
-        f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
-    )
     tot = "OVER (PARTITION BY event_type)"
     pa = "((ca + 0.5) / (na + 0.5 * nbk))"
     pb = "((cb + 0.5) / (nb + 0.5 * nbk))"
-    return f"""
-WITH src AS (
-  SELECT event_type, CAST(value - 50.0 AS DOUBLE) AS v,
-         (event_id % 2 = 0) AS b
-  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
-),
-pz AS (SELECT event_type, b, 1 AS zone, {key("v")} AS k,
-              CAST(COUNT(*) AS DOUBLE) AS c
-       FROM src WHERE v > {_dlit(mp)} GROUP BY event_type, b, 4),
-nz AS (SELECT event_type, b, -1 AS zone, {key("-v")} AS k,
-              CAST(COUNT(*) AS DOUBLE) AS c
-       FROM src WHERE v < {_dlit(-mp)} GROUP BY event_type, b, 4),
-zz AS (SELECT event_type, b, 0 AS zone, CAST(0 AS BIGINT) AS k,
-              CAST(COUNT(*) AS DOUBLE) AS c
-       FROM src WHERE v >= {_dlit(-mp)} AND v <= {_dlit(mp)}
-       GROUP BY event_type, b),
-h AS (SELECT * FROM pz UNION ALL SELECT * FROM nz
-      UNION ALL SELECT * FROM zz),
-piv AS (
-  SELECT event_type, zone, k,
-         SUM(CASE WHEN NOT b THEN c ELSE 0.0 END) AS ca,
-         SUM(CASE WHEN b THEN c ELSE 0.0 END) AS cb
-  FROM h GROUP BY event_type, zone, k
-),
+    return f"""{_SPLIT_PIV_SQL},
 tot AS (
   SELECT event_type, ca, cb,
          SUM(ca) {tot} AS na,
@@ -1332,31 +1321,23 @@ def _q_stream_psi_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return histogram_psi(baseline, live, ["day"])
 
 
-def _stream_psi_oracle_sql() -> str:
-    m = _LOG_MAPPING
-    mp = m.min_possible
-    key = lambda col: (  # noqa: E731
-        f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
-    )
-    tot = "OVER (PARTITION BY day)"
-    pa = "((ca + 0.5) / (na + 0.5 * nbk))"
-    pb = "((cb + 0.5) / (nb + 0.5 * nbk))"
-    return f"""
+# The stream drift and PSI oracles' shared prefix: value - 50 per day as
+# per-day bucket counts hd and the all-days (baseline) histogram hg.
+_DAY_HIST_SQL = f"""
 WITH src AS (
   SELECT CAST(ts AS DATE) AS day, CAST(value - 50.0 AS DOUBLE) AS v
   FROM events WHERE value IS NOT NULL AND NOT isnan(value)
 ),
-pzd AS (SELECT day, 1 AS zone, {key("v")} AS k, CAST(COUNT(*) AS DOUBLE) AS c
-        FROM src WHERE v > {_dlit(mp)} GROUP BY day, 3),
-nzd AS (SELECT day, -1 AS zone, {key("-v")} AS k, CAST(COUNT(*) AS DOUBLE) AS c
-        FROM src WHERE v < {_dlit(-mp)} GROUP BY day, 3),
-zzd AS (SELECT day, 0 AS zone, CAST(0 AS BIGINT) AS k,
-               CAST(COUNT(*) AS DOUBLE) AS c
-        FROM src WHERE v >= {_dlit(-mp)} AND v <= {_dlit(mp)} GROUP BY day),
-hd AS (SELECT * FROM pzd UNION ALL SELECT * FROM nzd
-       UNION ALL SELECT * FROM zzd),
+hd AS {_zone_hist_sql("src", ["day"])},
 hg AS (SELECT zone, k, SUM(c) AS c FROM hd GROUP BY zone, k),
-days AS (SELECT DISTINCT day FROM src),
+days AS (SELECT DISTINCT day FROM src)"""
+
+
+def _stream_psi_oracle_sql() -> str:
+    tot = "OVER (PARTITION BY day)"
+    pa = "((ca + 0.5) / (na + 0.5 * nbk))"
+    pb = "((cb + 0.5) / (nb + 0.5 * nbk))"
+    return f"""{_DAY_HIST_SQL},
 grid AS (
   SELECT d.day, g.zone, g.k, g.c AS ca, COALESCE(h.c, 0.0) AS cb
   FROM days d CROSS JOIN hg g
@@ -1384,32 +1365,12 @@ FROM terms GROUP BY day
 
 
 def _stream_drift_oracle_sql() -> str:
-    m = _LOG_MAPPING
-    mp = m.min_possible
-    key = lambda col: (  # noqa: E731
-        f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
-    )
     cum = (
         "OVER (PARTITION BY day ORDER BY zone, zone * k "
         "ROWS UNBOUNDED PRECEDING)"
     )
     tot = "OVER (PARTITION BY day)"
-    return f"""
-WITH src AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(value - 50.0 AS DOUBLE) AS v
-  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
-),
-pzd AS (SELECT day, 1 AS zone, {key("v")} AS k, CAST(COUNT(*) AS DOUBLE) AS c
-        FROM src WHERE v > {_dlit(mp)} GROUP BY day, 3),
-nzd AS (SELECT day, -1 AS zone, {key("-v")} AS k, CAST(COUNT(*) AS DOUBLE) AS c
-        FROM src WHERE v < {_dlit(-mp)} GROUP BY day, 3),
-zzd AS (SELECT day, 0 AS zone, CAST(0 AS BIGINT) AS k,
-               CAST(COUNT(*) AS DOUBLE) AS c
-        FROM src WHERE v >= {_dlit(-mp)} AND v <= {_dlit(mp)} GROUP BY day),
-hd AS (SELECT * FROM pzd UNION ALL SELECT * FROM nzd
-       UNION ALL SELECT * FROM zzd),
-hg AS (SELECT zone, k, SUM(c) AS c FROM hd GROUP BY zone, k),
-days AS (SELECT DISTINCT day FROM src),
+    return f"""{_DAY_HIST_SQL},
 grid AS (
   SELECT day, zone, k, c AS ca, 0.0 AS cb FROM days CROSS JOIN hg
   UNION ALL
@@ -2395,7 +2356,6 @@ def _ddsketch_cdf_oracle_sql(probes: list[float]) -> str:
     literal), the same LN-ratio key expression per row, the same
     conditional counts and double division."""
     m = _LOG_MAPPING
-    mult = m._multiplier
     keys = [int(m.key(p)) for p in probes]
     cnt_cols = ",\n  ".join(
         f"SUM(CASE WHEN kk <= {k} THEN 1 ELSE 0 END) AS c_{i}"
@@ -2410,9 +2370,7 @@ def _ddsketch_cdf_oracle_sql(probes: list[float]) -> str:
     return f"""
 WITH src AS (SELECT event_type, value AS v FROM events WHERE value > 0),
 k AS (
-  SELECT event_type,
-         CAST(CEIL(LN(v) / LN(2.0) * {_dlit(mult)}) AS BIGINT) AS kk
-  FROM src
+  SELECT event_type, {_log_key_sql(m, "v")} AS kk FROM src
 ),
 agg AS (
   SELECT event_type, COUNT(*) AS n,
@@ -3215,29 +3173,17 @@ def _threezone_oracle_sql(value_expr: str, table: str, qs: dict[str, float]) -> 
     store (lower scan: running count > rank'), mirroring
     kernel/sketch.py get_quantile_value op-for-op."""
     m = _LOG_MAPPING
-    mp = m.min_possible
     qvalues = ", ".join(f"('{name}', {_dlit(q)})" for name, q in qs.items())
-    key = lambda col: (  # noqa: E731
-        f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
-    )
     return f"""
 WITH vals AS (SELECT CAST({value_expr} AS DOUBLE) AS v FROM {table}),
-pos_h AS (
-  SELECT {key("v")} AS k, CAST(COUNT(*) AS DOUBLE) AS c
-  FROM vals WHERE v > {_dlit(mp)} GROUP BY k
-),
-neg_h AS (
-  SELECT {key("-v")} AS k, CAST(COUNT(*) AS DOUBLE) AS c
-  FROM vals WHERE v < {_dlit(-mp)} GROUP BY k
-),
-pos_c AS (SELECT k, SUM(c) OVER (ORDER BY k) AS rc FROM pos_h),
-neg_c AS (SELECT k, SUM(c) OVER (ORDER BY k) AS rc FROM neg_h),
+h AS {_zone_hist_sql("vals", [])},
+pos_c AS (SELECT k, SUM(c) OVER (ORDER BY k) AS rc FROM h WHERE zone = 1),
+neg_c AS (SELECT k, SUM(c) OVER (ORDER BY k) AS rc FROM h WHERE zone = -1),
 nn AS (
-  SELECT CAST(COALESCE((SELECT SUM(c) FROM pos_h), 0) AS DOUBLE) AS npos,
-         CAST(COALESCE((SELECT SUM(c) FROM neg_h), 0) AS DOUBLE) AS nneg,
-         CAST((SELECT COUNT(*) FROM vals
-               WHERE v >= {_dlit(-mp)} AND v <= {_dlit(mp)}) AS DOUBLE)
-           AS nzero
+  SELECT COALESCE(SUM(c) FILTER (WHERE zone = 1), 0.0) AS npos,
+         COALESCE(SUM(c) FILTER (WHERE zone = -1), 0.0) AS nneg,
+         COALESCE(SUM(c) FILTER (WHERE zone = 0), 0.0) AS nzero
+  FROM h
 ),
 qs(qname, q) AS (VALUES {qvalues}),
 ranked AS (
@@ -4122,27 +4068,15 @@ def _q_proto_roundtrip_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _proto_roundtrip_oracle_sql() -> str:
     """Three-zone histogram of value-50 per event_type from raw rows —
     what a lossless proto round-trip must reproduce exactly."""
-    m = _LOG_MAPPING
-    key = lambda col: (  # noqa: E731
-        f"CAST(CEIL(LN({col}) / LN(2.0) * {_dlit(m._multiplier)}) AS BIGINT)"
-    )
-    mp = m.min_possible
     return f"""
 WITH vals AS (
   SELECT event_type, CAST(value - 50.0 AS DOUBLE) AS v FROM events
-)
-SELECT event_type, 'pos' AS zone, {key("v")} AS bucket_key,
-       CAST(COUNT(*) AS DOUBLE) AS bin_count
-FROM vals WHERE v > {_dlit(mp)} GROUP BY event_type, bucket_key
-UNION ALL
-SELECT event_type, 'neg' AS zone, {key("-v")} AS bucket_key,
-       CAST(COUNT(*) AS DOUBLE) AS bin_count
-FROM vals WHERE v < {_dlit(-mp)} GROUP BY event_type, bucket_key
-UNION ALL
-SELECT event_type, 'zero' AS zone, CAST(0 AS BIGINT) AS bucket_key,
-       CAST(COUNT(*) AS DOUBLE) AS bin_count
-FROM vals WHERE v >= {_dlit(-mp)} AND v <= {_dlit(mp)}
-GROUP BY event_type
+),
+h AS {_zone_hist_sql("vals", ["event_type"])}
+SELECT event_type,
+       CASE zone WHEN 1 THEN 'pos' WHEN -1 THEN 'neg' ELSE 'zero' END AS zone,
+       k AS bucket_key, c AS bin_count
+FROM h
 """
 
 
@@ -4157,8 +4091,7 @@ def _collapsed_bins_oracle_sql(clamp: str) -> str:
         expr = f"LEAST(k, {bound})"
     return f"""
 WITH keys AS (
-  SELECT event_type,
-         CAST(CEIL(LN(value) / LN(2.0) * {_dlit(MULT)}) AS BIGINT) AS k
+  SELECT event_type, {_log_key_sql(_LOG_MAPPING, "value")} AS k
   FROM events WHERE value > 0
 ),
 clamped AS (SELECT event_type, {expr} AS bucket_key FROM keys)
@@ -4345,51 +4278,10 @@ FROM documents GROUP BY text
 }
 
 
-def _weighted_oracle_sql(
-    value_expr: str,
-    weight_expr: str,
-    table: str,
-    group_cols: list[str],
-    qs: dict[str, float],
-) -> str:
-    """Weighted DDSketch oracle: histogram of SUM(weight) per key, rank
-    over the weighted cumulative count (kernel quantile semantics,
-    weights > 0). Weight expressions must be dyadic-valued so float sums
-    are exact independent of accumulation order."""
-    g = ", ".join(group_cols)
-    g_comma = f"{g}, " if g else ""
-    part = f"PARTITION BY {g} " if g else ""
-    qvalues = ", ".join(f"('{name}', {_dlit(q)})" for name, q in qs.items())
-    join_n = f"JOIN n USING ({g})" if g else "CROSS JOIN n"
-    return f"""
-WITH vals AS (
-  SELECT {g_comma}CAST({value_expr} AS DOUBLE) AS v,
-         CAST({weight_expr} AS DOUBLE) AS w
-  FROM {table} WHERE {value_expr} > 0
-),
-hist AS (
-  SELECT {g_comma}CAST(CEIL(LN(v) / LN(2.0) * {_dlit(MULT)}) AS BIGINT) AS k,
-         SUM(w) AS c
-  FROM vals GROUP BY {g_comma}k
-),
-cum AS (SELECT {g_comma}k, SUM(c) OVER ({part}ORDER BY k) AS rc FROM hist),
-n AS (SELECT {g_comma}SUM(w) AS cnt FROM vals {("GROUP BY " + g) if g else ""}),
-qs(qname, q) AS (VALUES {qvalues}),
-keys AS (
-  SELECT {g_comma}qs.qname AS qname, MIN(cum.k) AS kq
-  FROM qs CROSS JOIN cum {join_n}
-  WHERE cum.rc > qs.q * (n.cnt - 1)
-  GROUP BY {g_comma}qs.qname
-)
-SELECT {g_comma}qname, ROUND({_log_value_sql(_LOG_MAPPING, "kq")}, 6)
-  AS qvalue
-FROM keys
-"""
-
-
 def _weighted_ddsketch_oracle() -> str:
-    return _weighted_oracle_sql(
-        "l_quantity", "l_linenumber", "lineitem", [], {"q50": 0.5, "q95": 0.95}
+    return _ddsketch_oracle_sql(
+        "l_quantity", "lineitem", [], {"q50": 0.5, "q95": 0.95},
+        weight_expr="l_linenumber",
     )
 
 
@@ -5352,7 +5244,7 @@ SELECT vec_id, sim, rank FROM ranked WHERE rank <= 10
 ORACLES.update(
     {
         "ddsketch_bins_events": f"""
-SELECT CAST(CEIL(LN(value) / LN(2.0) * {_dlit(MULT)}) AS BIGINT) AS bucket_key,
+SELECT {_log_key_sql(_LOG_MAPPING, "value")} AS bucket_key,
        CAST(COUNT(*) AS DOUBLE) AS bin_count
 FROM events WHERE value > 0 GROUP BY bucket_key
 """,
@@ -5489,12 +5381,12 @@ GROUP BY event_type
             [],
             {"q50": 0.5, "q99": 0.99},
         ),
-        "ddsketch_weighted_grouped": _weighted_oracle_sql(
+        "ddsketch_weighted_grouped": _ddsketch_oracle_sql(
             "l_extendedprice",
-            "l_linenumber / 4.0",
             "lineitem",
             ["l_linestatus"],
             {"q50": 0.5, "q95": 0.95},
+            weight_expr="l_linenumber / 4.0",
         ),
         "ddsketch_threezone_events": _threezone_oracle_sql(
             "value - 50.0", "events",

@@ -113,6 +113,28 @@ def key_column(mapping, v):
     return (raw.cast("double") + F.lit(float(mapping.offset))).cast("long")
 
 
+def _zone_key(mapping, v):
+    """(zone, key) columns of non-null, non-NaN double column ``v``, as
+    kernel/sketch.py add files it: zone 1 (positive store) above
+    min_possible, -1 (negative store, keyed on |v|) below -min_possible,
+    0 (zero band, key 0) between. +-inf raises "value must be finite", as
+    the kernel does, instead of keying to a saturated CEIL (Long.MAX)."""
+    mp = mapping.min_possible
+    inf = F.abs(v) == F.lit(float("inf"))
+    zone = (
+        F.when(inf, F.raise_error(F.lit("value must be finite")))
+        .when(v > F.lit(mp), F.lit(1))
+        .when(v < F.lit(-mp), F.lit(-1))
+        .otherwise(F.lit(0))
+    )
+    # the zone guard keeps key_column off the zero band: vectorized eval
+    # does not short-circuit, and key_column(0) would CEIL(-inf) under ANSI
+    key = F.when(zone == 0, F.lit(0).cast("long")).otherwise(
+        key_column(mapping, F.abs(v))
+    )
+    return zone, key
+
+
 def histogram_rows(
     df: DataFrame,
     spec: DDSketchSpec,
@@ -126,8 +148,6 @@ def histogram_rows(
     (streaming/sketch_stream.py) and the resumable build (plans/lineage.py)
     run the same JVM aggregation and assemble sketches downstream."""
     mapping = spec.zero().mapping
-    mp = mapping.min_possible
-
     v = F.col(value_col).cast("double")
     w = F.lit(1.0)
     if weight_col:
@@ -138,17 +158,7 @@ def histogram_rows(
             F.raise_error(F.lit("weight must be positive"))
         )
     src = df.where(v.isNotNull() & ~F.isnan(v))
-    # +-inf would key to a saturated CEIL (Long.MAX); raise as the kernel does
-    inf = F.abs(v) == F.lit(float("inf"))
-    zone = (
-        F.when(inf, F.raise_error(F.lit("value must be finite")))
-        .when(v > F.lit(mp), F.lit(1))
-        .when(v < F.lit(-mp), F.lit(-1))
-        .otherwise(F.lit(0))
-    )
-    key = F.when(zone == 0, F.lit(0).cast("long")).otherwise(
-        key_column(mapping, F.abs(v))
-    )
+    zone, key = _zone_key(mapping, v)
     return src.groupBy(
         *group_by, zone.alias("__zone"), key.alias("__key")
     ).agg(

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..kernel import DEFAULT_BIN_LIMIT, DEFAULT_REL_ACC
 from ..kernel.store import COLLAPSE_LOWEST
 from ..sketches.ddsketch_spec import DDSketchSpec, quantile_col_name
-from .ddsketch_jvm import ddsketch_jvm_agg, histogram_rows, key_column
+from .ddsketch_jvm import _zone_key, ddsketch_jvm_agg, histogram_rows
 
 __all__ = [
     "ddsketch_drift",
@@ -225,7 +225,10 @@ def ddsketch_cdf(
     conditional sums — no join, no second pass, shuffle volume = groups
     x (|probes| + 1) longs. The three-zone routing (negative / zero /
     positive, kernel/sketch.py add) is baked per probe into its
-    predicate."""
+    predicate.
+
+    Input contract, as for every DDSketch operator: null and NaN values
+    are dropped, and a +-inf value raises "value must be finite"."""
     from ..kernel.mapping import mapping_from_name
 
     group_by = list(group_by)
@@ -236,24 +239,17 @@ def ddsketch_cdf(
     mp = m.min_possible
     v = F.col(value_col).cast("double")
     src = df.where(v.isNotNull() & ~F.isnan(v))
-    neg = v < F.lit(-mp)
-    zero = (v >= F.lit(-mp)) & (v <= F.lit(mp))
-
-    # guard the key expression behind the zone test: vectorized eval does
-    # not short-circuit, and key_column(0) would CEIL(-inf) under ANSI
-    key_pos = F.when(neg | (v > F.lit(mp)), key_column(m, F.abs(v))).otherwise(
-        F.lit(0)
-    )
+    zone, key = _zone_key(m, v)
     cnt_cols = []
     for i, p in enumerate(probes):
         if p > mp:
             kp = int(m.key(p))
-            cond = neg | zero | ((v > F.lit(mp)) & (key_pos <= F.lit(kp)))
+            cond = (zone < 1) | ((zone == 1) & (key <= F.lit(kp)))
         elif p < -mp:
             kp = int(m.key(-p))
-            cond = neg & (key_pos >= F.lit(kp))
+            cond = (zone == -1) & (key >= F.lit(kp))
         else:
-            cond = neg | zero
+            cond = zone < 1
         cnt_cols.append(
             F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).alias(f"__c_{i}")
         )

@@ -164,6 +164,37 @@ def test_log_value_sql_replays_value_batch(alpha, offset):
     assert int((got != m.value_batch(keys)).sum()) == 0
 
 
+@pytest.mark.parametrize("offset", [0.0, -12.23, 7768.3])
+def test_log_key_sql_replays_key_batch(offset):
+    # the DuckDB oracles key every value through _log_key_sql; on the
+    # binade-boundary grid of test_jvm_keys_bit_match_kernel it must equal
+    # the kernel's keys, fractional offsets included
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    rng = np.random.default_rng(7)
+    exps = np.arange(-60, 61, dtype=np.float64)
+    vals = np.concatenate(
+        [
+            2.0**exps,
+            np.nextafter(2.0**exps, 0.0),
+            np.nextafter(2.0**exps, np.inf),
+            rng.lognormal(3, 4, 4000),
+            np.array([1.0, 1.5, 2.0, 1e-9, 1e9, 5.0, 0.1]),
+        ]
+    )
+    m = LogarithmicKeyMapping(0.01, offset=offset)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i BIGINT, v DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(vals.tolist())))
+    got = con.execute(
+        f"SELECT {entry._log_key_sql(m, 'v')} AS k FROM t ORDER BY i"
+    ).fetchnumpy()["k"]
+    assert len(got) == len(vals) == 4_370
+    assert int((got != m.key_batch(vals)).sum()) == 0
+
+
 def test_value_overflow_is_inf():
     m = LogarithmicKeyMapping(0.01)
     top = m.key(m.max_possible)

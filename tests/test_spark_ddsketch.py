@@ -7,7 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from ddsketch_ruby_spark.operators.agg import sketch_agg, sketch_partials
-from ddsketch_ruby_spark.operators.quantiles import ddsketch_quantiles, ddsketch_state
+from ddsketch_ruby_spark.operators.quantiles import (
+    ddsketch_cdf,
+    ddsketch_quantiles,
+    ddsketch_state,
+)
 from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec, quantile_col_name
 from ddsketch_ruby_spark.sources.tables import table
 
@@ -165,15 +169,16 @@ def test_non_positive_or_null_weight_raises(spark, w):
 
 
 @pytest.mark.parametrize("values", [[1.0, 2.0, float("inf")], [1.0, float("-inf")]])
-@pytest.mark.parametrize("build", ["ddsketch_quantiles", "sketch_agg"])
+@pytest.mark.parametrize("build", ["ddsketch_quantiles", "sketch_agg", "ddsketch_cdf"])
 def test_infinite_value_raises(spark, build, values):
     """+-inf has no bucket key (the reference's Integer(ceil(log_gamma(v)))
-    raises on Infinity): both the JVM path and the kernel reference raise
-    instead of filing it under a saturated or wrapped key."""
+    raises on Infinity): the JVM path, the CDF query and the kernel
+    reference raise instead of filing it under a saturated or wrapped key."""
     sdf = spark.createDataFrame([(v,) for v in values], "value double")
     out = {
         "ddsketch_quantiles": lambda: ddsketch_quantiles(sdf, "value"),
         "sketch_agg": lambda: sketch_agg(sdf, DDSketchSpec(), "value"),
+        "ddsketch_cdf": lambda: ddsketch_cdf(sdf, "value", [1.5, -1.0]),
     }[build]()
     with pytest.raises(Exception, match="value must be finite"):
         out.collect()
