@@ -14,6 +14,9 @@ output="state") can be queried from plain SQL:
     SELECT cms_est(counts, xxhash64(key)) FROM cms_table      -- width/depth
     SELECT bloom_maybe(bits, xxhash64(key)) FROM bloom_table  -- from register_sketch_sql args
 
+A row whose state is null (a LEFT JOIN from a key table to a state table)
+finalizes to null, as SQL does for null in.
+
 Limit: a state row carries ``gamma`` but no key mapping, and ``ddsketch_q``
 rebuilds every row as a logarithmic-mapping sketch. Rows built with
 ``mapping="linear"`` or ``"cubic"`` get wrong quantiles from it.
@@ -39,6 +42,11 @@ from pyspark.sql.functions import pandas_udf
 from ..kernel import DDSketch
 
 __all__ = ["register_sketch_sql"]
+
+
+def _null_rows(*cols: pd.Series) -> np.ndarray:
+    """``out[i]``: row ``i`` has a null in any of ``cols``."""
+    return np.logical_or.reduce([c.isna().to_numpy() for c in cols])
 
 
 def _sketch_from_arrays(
@@ -79,7 +87,13 @@ def register_sketch_sql(
         count: pd.Series,
     ) -> pd.Series:
         out = []
+        null = _null_rows(
+            q, gamma, pos_bins, pos_offset, neg_bins, neg_offset, zero_count, count
+        )
         for i in range(len(q)):
+            if null[i]:
+                out.append(None)
+                continue
             s = _sketch_from_arrays(
                 gamma.iloc[i],
                 pos_bins.iloc[i],
@@ -99,7 +113,8 @@ def register_sketch_sql(
         codec = HLLSpec()  # the register codec does not depend on p
         return pd.Series(
             [
-                hll_estimate(codec.row_to_state({"registers": r}))
+                None if r is None
+                else hll_estimate(codec.row_to_state({"registers": r}))
                 for r in registers
             ],
             dtype="float64",
@@ -177,8 +192,12 @@ def register_sketch_sql(
         if len(minima) == 0:
             return pd.Series([], dtype="float64")
         ks = k.to_numpy()
+        null = _null_rows(minima, k)
         out = []
         for i in range(len(minima)):
+            if null[i]:
+                out.append(None)
+                continue
             spec = KmvSpec(int(ks[i]))
             state = spec.row_to_state({"minima": minima.iloc[i]})
             out.append(float(kmv_estimate(state, spec.k)))

@@ -29,11 +29,34 @@ Skew note: a hot group key does NOT skew phase 2 — after phase 1 every
 group has exactly <= n_partitions partials regardless of how many raw rows
 it had. Raw-value skew is absorbed in phase 1, which is per-partition and
 shuffle-free.
+
+Zip finders: every per-partition Python function the library ships to
+workers is wrapped by ``_drops_zip_finders``, which drops the worker's
+``zipimport.zipimporter`` entries from ``sys.path_importer_cache`` once the
+function's batch iterator ends, closes or raises. Spark reuses Python
+workers, and each task starts in ``pyspark.worker_util.setup_spark_files``,
+whose closing ``importlib.invalidate_caches()`` calls every cached finder's
+``invalidate_caches``. On CPython 3.11 ``zipimporter.invalidate_caches``
+re-reads its archive's central directory (``zipimport.py``, lines 329-336),
+and a warmed worker holds 16 zip finders (12 for ``pyspark.zip``, 2 for
+py4j, 2 for the ``spark-core`` jar): about 0.25 s per task before any
+library code runs. A dropped entry is legal: the next import that needs the
+archive gets a new finder from the path hooks, built from
+``zipimport._zip_directory_cache`` without a re-read, and Spark never
+rewrites a shipped archive in place. The drop runs at exit, never at entry:
+a task's own lazy imports would re-create the finders before it ends. New
+workers still pay on their first task; on CPython 3.13+, which no longer
+re-reads, the drop costs microseconds. Not wrapped: the scalar
+``pandas_udf``s of ``functions/sql_udfs.py`` (one call per batch, with no
+end of the task's iterator to run at) and ``applyInPandasWithState`` in
+``streaming/`` (one call per group state per micro-batch).
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+import sys
+import zipimport
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -46,6 +69,24 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from ..sketches.base import SketchSpec
 
 __all__ = ["sketch_agg", "sketch_partials", "sketch_finalize"]
+
+
+def _drops_zip_finders(fn: Callable) -> Callable:
+    """``fn``, a mapInArrow / mapInPandas function, that deletes every
+    ``zipimport.zipimporter`` from ``sys.path_importer_cache`` (other
+    finders stay) once its output iterator ends, closes or raises (module
+    docstring). No ``functools.wraps``: a copied ``__qualname__`` could make
+    cloudpickle ship a module-level ``fn`` by reference."""
+
+    def dropping(batches: Iterator) -> Iterator:
+        try:
+            yield from fn(batches)
+        finally:
+            for path, finder in list(sys.path_importer_cache.items()):
+                if isinstance(finder, zipimport.zipimporter):
+                    sys.path_importer_cache.pop(path, None)
+
+    return dropping
 
 
 def _group_fields(df: DataFrame, group_by: list[str]) -> list[T.StructField]:
@@ -218,9 +259,9 @@ def fold_groups(
             yield batch_of(carry_key, [fold_carried(carry)])
 
     if not group_by:
-        return df.repartition(1).mapInArrow(run, schema)
+        return df.repartition(1).mapInArrow(_drops_zip_finders(run), schema)
     by_key = df.repartition(*group_by).sortWithinPartitions(*group_by)
-    return by_key.mapInArrow(run, schema)
+    return by_key.mapInArrow(_drops_zip_finders(run), schema)
 
 
 def sketch_partials(
@@ -236,7 +277,7 @@ def sketch_partials(
     src = df.select(*needed)  # column pruning reaches the scan
     schema = T.StructType(_group_fields(df, group_by) + spec.state_fields())
     fn = _build_partials_fn(spec, group_by, value_col, weight_col, schema)
-    return src.mapInArrow(fn, schema=schema)
+    return src.mapInArrow(_drops_zip_finders(fn), schema=schema)
 
 
 def sketch_agg(

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .agg import _drops_zip_finders
 from .similarity import _doubles, _dot_col, _sqnorm_col, lsh_bucket
 
 __all__ = [
@@ -387,7 +388,7 @@ def _hashed_gram_rows(
                 )
 
     cols = [text_col] if id_col is None else [id_col, text_col]
-    return df.select(*cols).mapInPandas(compute, schema)
+    return df.select(*cols).mapInPandas(_drops_zip_finders(compute), schema)
 
 
 _OPH_CHUNK = 1 << 21  # windows per chunk; see _oph_batch docstring
@@ -513,7 +514,7 @@ def minhash_signatures(
     target = df.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < max(2, target // 2):
         src = src.repartition(target)
-    return src.mapInPandas(compute, schema=out_schema)
+    return src.mapInPandas(_drops_zip_finders(compute), schema=out_schema)
 
 
 def _drop_hot_keys(
@@ -727,7 +728,7 @@ def ngram_jaccard_pairs(
     shingle_sets = (
         df.select(id_col, text_col)
         .join(cand_ids, id_col, "left_semi")
-        .mapInPandas(sets, schema=set_schema)
+        .mapInPandas(_drops_zip_finders(sets), schema=set_schema)
         .localCheckpoint(eager=False)
     )
     pairs = (
@@ -791,7 +792,7 @@ def ngram_jaccard_pairs(
                     }
                 )
 
-    return pairs.mapInPandas(verify, schema=schema)
+    return pairs.mapInPandas(_drops_zip_finders(verify), schema=schema)
 
 
 def _pair_cosine(vec_col: str) -> F.Column:
@@ -857,7 +858,9 @@ def shingle_hash_rows(
                 {id_col: pdf[id_col].values[ds], "h": hs.view(np.int64)}
             )
 
-    return df.select(id_col, text_col).mapInPandas(compute, schema=out_schema)
+    return df.select(id_col, text_col).mapInPandas(
+        _drops_zip_finders(compute), schema=out_schema
+    )
 
 
 def ngram_jaccard_exact(
@@ -1181,7 +1184,9 @@ def simhash(
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(compute, schema=out_schema)
+    return df.select(id_col, text_col).mapInPandas(
+        _drops_zip_finders(compute), schema=out_schema
+    )
 
 
 def simhash_near_dup_pairs(

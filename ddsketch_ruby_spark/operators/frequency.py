@@ -22,7 +22,7 @@ from ..sketches.bloom import BloomSpec
 from ..sketches.cms import CMSSpec
 from ..sketches.hll import HLLSpec, hll_estimate
 from ..sketches.kmv import KmvSpec, kmv_estimate, kmv_intersect_stats
-from .agg import sketch_agg
+from .agg import _drops_zip_finders, sketch_agg
 
 __all__ = [
     "cms_build",
@@ -112,7 +112,9 @@ def _probe_column(
             out[name] = probe(h)
             yield out
 
-    return df.withColumn(hcol, F.xxhash64(col)).mapInPandas(run, schema=schema)
+    return df.withColumn(hcol, F.xxhash64(col)).mapInPandas(
+        _drops_zip_finders(run), schema=schema
+    )
 
 
 def cms_probe_column(
@@ -189,7 +191,7 @@ def _pair_overlap(
             ]
             yield pd.DataFrame(rows, columns=out_schema.names)
 
-    return pairs.mapInPandas(est_pairs, schema=out_schema)
+    return pairs.mapInPandas(_drops_zip_finders(est_pairs), schema=out_schema)
 
 
 def _hll_pair(ra: np.ndarray, rb: np.ndarray) -> tuple:

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .agg import _drops_zip_finders
+
 __all__ = [
     "pq_codebook",
     "pq_train",
@@ -314,7 +316,7 @@ def ivfpq_encode(
             out[code_col] = list(codes)
             yield out
 
-    return df.mapInPandas(fused, schema=out_schema)
+    return df.mapInPandas(_drops_zip_finders(fused), schema=out_schema)
 
 
 def ivfpq_topk(

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..operators.agg import _drops_zip_finders
+
 __all__ = ["web_pages", "WEB_PAGES_SCHEMA"]
 
 WEB_PAGES_SCHEMA = T.StructType(
@@ -146,4 +148,4 @@ def web_pages(
                 yield _generate(pdf["id"].to_numpy(), seed, dist)
 
     rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
-    return rng.mapInPandas(gen, schema=WEB_PAGES_SCHEMA)
+    return rng.mapInPandas(_drops_zip_finders(gen), schema=WEB_PAGES_SCHEMA)

@@ -135,3 +135,43 @@ def test_kmv_card_sql(spark):
         state = np.frombuffer(bytes(r["minima"]), dtype=np.uint64)
         assert got[r["g"]] == kmv_estimate(state, 64)
         assert abs(got[r["g"]] - 2500) / 2500 < 0.3
+
+
+def test_finalizers_return_null_for_a_null_state_row(spark):
+    """A LEFT JOIN from a key table to a state table leaves a group with
+    no state as a row of null state columns; the finalizers return null
+    for it, as SQL does for null in, and the joined groups keep their
+    values."""
+    from ddsketch_ruby_spark.sketches.kmv import KmvSpec
+
+    register_sketch_sql(spark)
+    df = spark.range(3000).select(
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
+        F.col("id").cast("double").alias("v"),
+        F.xxhash64("id").alias("h"),
+    )
+    ddsketch_state(df, "v", ["g"]).createOrReplaceTempView("null_dd")
+    for name, spec in (("hll", HLLSpec(p=12)), ("kmv", KmvSpec(k=64))):
+        states = sketch_agg(df, spec, "h", ["g"], output="state")
+        states.createOrReplaceTempView(f"null_{name}")
+    keys = spark.createDataFrame([("a",), ("b",), ("c",)], "g string")
+    keys.createOrReplaceTempView("null_keys")
+    finals = {
+        "dd": "ddsketch_q(0.5, s.gamma, s.pos_bins, s.pos_offset, s.neg_bins,"
+        " s.neg_offset, s.zero_count, s.count)",
+        "hll": "hll_card(s.registers)",
+        "kmv": "kmv_card(s.minima, 64)",
+    }
+    for name, call in finals.items():
+        def at(join):
+            return {
+                r["g"]: r["x"]
+                for r in spark.sql(
+                    f"SELECT k.g, {call} AS x FROM null_keys k "
+                    f"{join} JOIN null_{name} s ON k.g = s.g"
+                ).collect()
+            }
+
+        left, inner = at("LEFT"), at("INNER")
+        assert left == {**inner, "c": None}, name
+        assert inner["a"] is not None and inner["b"] is not None, name
